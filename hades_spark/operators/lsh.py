@@ -442,18 +442,22 @@ def touching_pairs_from_buckets(buckets: DataFrame, touch: DataFrame,
     containing a touch id; caps apply to the full bucket contents (the
     touch-adjacent-subset-of-full invariant). Shared by the inline
     touching generator above and the incremental-KG persistent bucket
-    store (which feeds pre-computed bucket rows). ``keep_bucket=True``
-    keeps the generating (band, bh) on every row (see
-    ``cap_and_self_join``)."""
+    store (which feeds pre-computed bucket rows). ``touch`` must be
+    unique by ``_id``: each touch row flags the pairs it ends, so a
+    repeated id repeats them. ``keep_bucket=True`` keeps the generating
+    (band, bh) on every row (see ``cap_and_self_join``)."""
     cols = ["a", "b", "band", "bh"] if keep_bucket else ["a", "b"]
-    keys = buckets.join(touch, "_id", "left_semi") \
-                  .select("band", "bh").dropDuplicates(["band", "bh"])
+    keys = buckets.join(touch, "_id", "left_semi").select("band", "bh")
     pruned = buckets.join(keys, ["band", "bh"], "left_semi")
     pairs = cap_and_self_join(pruned, max_bucket_size, distinct=False,
                               keep_bucket=keep_bucket)
-    ta = pairs.join(touch.withColumnRenamed("_id", "a"), "a", "left_semi")
-    tb = pairs.join(touch.withColumnRenamed("_id", "b"), "b", "left_semi")
-    return ta.unionByName(tb).dropDuplicates(cols)
+    # one pass over the pairs: flag either endpoint against the touch set
+    ta = touch.select(F.col("_id").alias("a"), F.lit(True).alias("_ta"))
+    tb = touch.select(F.col("_id").alias("b"), F.lit(True).alias("_tb"))
+    out = pairs.join(ta, "a", "left").join(tb, "b", "left") \
+        .filter(F.col("_ta") | F.col("_tb")).select(*cols)
+    # per-bucket rows are unique already; bare pairs repeat per bucket
+    return out if keep_bucket else out.dropDuplicates(cols)
 
 
 def verified_jaccard_pairs(df, id_col, shingle_expr, threshold,

@@ -40,13 +40,24 @@ count stayed under it (800k-base bench, ~280 edge diffs).
      components adjacent to a new or liveness-flipped pair, plus the
      squashes of all new norms — a new norm can MERGE two previously
      separate components, and can lower its component's min-norm
-     canonical id even when its squash is already known);
-  4. rewrite ONLY the affected edge keys: rows whose norms changed
-     canonical id (old components relabeled) plus the new rows — via a
-     pred-partitioned ``upsert_by_key`` (only affected pred partitions are
-     rewritten) + key-level delete for edges dissolved by a component
-     merge (rare; rewrites the table, the price of MERGE without a real
-     catalog).
+     canonical id even when its squash is already known). Only these
+     ``sub_norms`` can change label, so ``changed`` is the recomputed
+     sub-map joined to the old map where the label differs; a new norm
+     has no old label and counts as changed;
+  4. rewrite ONLY the affected edge keys: the keys of old rows touching a
+     changed norm (under both maps) plus the keys of the new rows, each
+     re-aggregated over all its contributors — via a pred-partitioned
+     ``upsert_by_key`` keyed on (edge_key, pred): only the pred
+     partitions the keys name are rewritten, no moved-key scan runs, and
+     the keys a component merge dissolved are deleted in the same pass.
+
+Every batch-sized intermediate is materialized exactly once, and the
+update is latency-bound (its Spark job count sets its wall time), so:
+dedup only where multiplicity or a broadcast's size needs it — never
+right before a semi or anti join, where Spark keeps the dedup and pays an
+exchange for nothing; broadcast hints go only on frames bounded by the
+batch or by the vocabulary (``apply_canonical_map`` already broadcasts
+the whole map).
 
 INVARIANT (tested e2e + hash-verified by the ``i2_incremental_kg`` /
 ``s8_incremental_delete`` oracles): after any sequence of updates AND
@@ -74,6 +85,7 @@ documents).
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import os
 import time
@@ -81,6 +93,7 @@ import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.window import Window
 
 from ..functions.triples import raw_triples
 from ..operators.canonicalize import (MAX_ALIAS_SQUASH_LEN,
@@ -90,11 +103,18 @@ from ..operators.lsh import (cap_and_self_join, char_shingles, lsh_buckets,
                              pair_scores, touching_pairs_from_buckets)
 from ..sources.io import (delete_by_key, recover_table, replace_table,
                           upsert_by_key, write_table)
+from .kg import apply_canonical_map, distinct_edges
 
 
 _LSH = dict(num_hashes=16, bands=16, max_bucket_size=150)
 
 _RAW_COLS = ["url", "pred", "confidence", "subj_norm", "obj_norm"]
+
+# edge-key sets broadcast only up to this many MEASURED candidate rows:
+# 500k rows of a sha256 key or a (subj, pred, obj) triple stay within
+# ~100 MB, a safe driver envelope; a component-merge storm's arbitrarily
+# large key set (SURVEY §7.4.3, VERDICT r3 #1) falls back to shuffle joins
+_BROADCAST_KEYS_MAX = 500_000
 
 _STORE_COLS = {"raw": _RAW_COLS, "buckets": ["squash", "band", "bh"],
                "crawl_ts": ["url", "warc_ts"]}
@@ -408,12 +428,13 @@ def _bucket_rows(norms: DataFrame) -> DataFrame:
     """(…, squash) -> (squash, band, bh) minhash-LSH bucket rows over the
     DISTINCT squashes — the unit the persistent bucket store accumulates
     (deterministic per squash, so store rows and freshly computed rows are
-    interchangeable). One row per (squash, band): bucket populations are
-    counted in distinct squashes, exactly like the full-rebuild path.
+    interchangeable). One row per (squash, band) — the minhash groupBy
+    collapses repeated squashes — so bucket populations are counted in
+    distinct squashes, exactly like the full-rebuild path.
     Over-cap squashes (extraction garbage, see MAX_ALIAS_SQUASH_LEN) get
     NO bucket rows — same exclusion the rebuild applies — so they never
     generate candidates, never re-shingle, never count against caps."""
-    squashes = norms.select("squash").dropDuplicates(["squash"]) \
+    squashes = norms.select("squash") \
         .filter(F.length("squash") <= MAX_ALIAS_SQUASH_LEN)
     return lsh_buckets(
         squashes, "squash", char_shingles(F.col("squash"), 3),
@@ -449,59 +470,121 @@ def _cmap_from_pairs(norms: DataFrame, pairs: DataFrame) -> DataFrame:
     comp = alternating_components(
         pairs.select("a", "b").dropDuplicates(["a", "b"]), "a", "b")
     base = norms.select("norm", "squash")
-    lab = (
+    comp_of = F.coalesce("component", F.col("squash"))
+    return (
         base.join(comp, base.squash == comp.node, "left")
-        .select("norm",
-                F.coalesce("component", F.col("squash")).alias("_comp"))
+        .select("norm", F.min("norm").over(Window.partitionBy(comp_of))
+                .alias("canonical_id"))
     )
-    canon = lab.groupBy("_comp").agg(F.min("norm").alias("canonical_id"))
-    return lab.join(canon, "_comp").select("norm", "canonical_id")
 
 
 def _touching_rows(raw: DataFrame, norms: DataFrame) -> DataFrame:
-    """Rows of ``raw`` whose subj_norm OR obj_norm is in ``norms`` — exact
-    row partition (semi + anti∘semi), NEVER dropDuplicates: legitimately
-    repeated raw rows must keep their multiplicity or recomputed support
-    counts drift from a full rebuild."""
-    sn = norms.withColumnRenamed("norm", "subj_norm")
-    on = norms.withColumnRenamed("norm", "obj_norm")
-    via_subj = raw.join(sn, "subj_norm", "left_semi")
-    via_obj_only = raw.join(sn, "subj_norm", "left_anti") \
-                      .join(on, "obj_norm", "left_semi")
-    return via_subj.unionByName(via_obj_only)
+    """Rows of ``raw`` whose subj_norm OR obj_norm is in ``norms`` (each
+    norm once) — one pass: two left joins flag either side, then a
+    filter. NEVER dropDuplicates: legitimately repeated raw rows must keep
+    their multiplicity or recomputed support counts drift from a full
+    rebuild."""
+    hit = F.broadcast(norms.select("norm", F.lit(True).alias("_hit")))
+    return (
+        raw.join(hit.select(F.col("norm").alias("subj_norm"),
+                            F.col("_hit").alias("_hs")), "subj_norm", "left")
+        .join(hit.select(F.col("norm").alias("obj_norm"),
+                         F.col("_hit").alias("_ho")), "obj_norm", "left")
+        .filter(F.col("_hs") | F.col("_ho"))
+        .select(*raw.columns)
+    )
 
 
-def _edges_for(raw: DataFrame, cmap: DataFrame) -> DataFrame:
-    """raw triples + canonical map -> aggregated edge rows (shared
-    ``apply_canonical_map`` + ``distinct_edges`` contract)."""
-    from .kg import apply_canonical_map, distinct_edges
+def _live_buckets(bk: DataFrame, norms: DataFrame) -> DataFrame:
+    """(band, bh) of the buckets in ``bk`` (squash, band, bh) that hold a
+    squash of ``norms`` and are still under the cap. Every pair with an
+    endpoint in ``norms`` came from such a bucket, so sizes are computed
+    for those buckets only (O(their contents)). Their key set broadcasts
+    without a dedup: ``bk`` has one row per squash and band, so the set
+    has at most bands x squashes rows."""
+    keys = bk.join(F.broadcast(norms.select("squash")), "squash",
+                   "left_semi").select("band", "bh")
+    return (
+        bk.join(F.broadcast(keys), ["band", "bh"], "left_semi")
+        .groupBy("band", "bh").agg(F.count("*").alias("_n"))
+        .filter(F.col("_n") <= _LSH["max_bucket_size"])
+        .select("band", "bh")
+    )
 
-    return distinct_edges(apply_canonical_map(raw, cmap))
+
+def _relabeled(old_cmap: DataFrame, sub_cmap: DataFrame) -> DataFrame:
+    """Norms of the recomputed sub-map whose canonical id changed,
+    materialized. Only sub-map norms can change label; a new norm has no
+    old label and counts as changed."""
+    old = old_cmap.withColumnRenamed("canonical_id", "_old")
+    return old.join(sub_cmap, "norm", "right") \
+        .filter(~F.col("_old").eqNullSafe(F.col("canonical_id"))) \
+        .select("norm").localCheckpoint(eager=True)
 
 
-def _contributor_rows(raw: DataFrame, key_edges: DataFrame,
-                      cmap: DataFrame) -> DataFrame:
-    """Prune ``raw`` to the rows that can contribute to one of
-    ``key_edges``' keys under ``cmap`` — NEVER the whole corpus: a
-    contributor of key (S, P, O) has canonical(subj_norm) = S, i.e.
-    subj_norm is a norm of an affected subject component (or IS the
-    canonical itself, the cmap-miss case), and likewise for obj. A
-    semi-join superset is safe: groupBy aggregates per (subj, pred, obj)
-    group are unaffected by other groups' rows, and the caller's
-    edge_key semi-join drops the extras."""
-    def norms_of_canon(canon_col: str) -> DataFrame:
-        canons = key_edges.select(F.col(canon_col).alias("canonical_id")) \
-            .dropDuplicates(["canonical_id"])
-        return cmap.join(canons, "canonical_id", "left_semi") \
-            .select("norm") \
-            .unionByName(canons.select(F.col("canonical_id").alias("norm"))) \
-            .dropDuplicates(["norm"])
+def _row_counts(frames: dict[str, DataFrame]) -> dict[str, int]:
+    """Row counts of several frames in ONE grouped job."""
+    tagged = [df.select(F.lit(k).alias("_t")) for k, df in frames.items()]
+    got = dict(functools.reduce(DataFrame.unionByName, tagged)
+               .groupBy("_t").count().collect())
+    return {k: got.get(k, 0) for k in frames}
 
-    return raw \
-        .join(norms_of_canon("subj").withColumnRenamed("norm", "subj_norm"),
-              "subj_norm", "left_semi") \
-        .join(norms_of_canon("obj").withColumnRenamed("norm", "obj_norm"),
-              "obj_norm", "left_semi")
+
+def _rewrite_edges(spark: SparkSession, state_dir: str, raw: DataFrame,
+                   old_rows: DataFrame, new_rows: DataFrame,
+                   old_cmap: DataFrame, new_cmap: DataFrame,
+                   stats: dict[str, DataFrame]
+                   ) -> tuple[dict[str, int], dict[str, DataFrame]]:
+    """Fold a relabel into the edge table. Candidate keys are those
+    ``old_rows`` derive under ``old_cmap`` plus those ``new_rows`` derive
+    under ``new_cmap``; each is re-aggregated over ALL its contributors in
+    ``raw``, and an old candidate nothing derives any more is deleted —
+    one partition-scoped upsert. Returns the row counts of the ``stats``
+    frames (each materialized; counted in the job that sizes the
+    candidate set) and the materialized "recomputed" and "dead" key
+    frames (rewritten and deleted), which the caller counts with its
+    commit stats.
+
+    The OLD-map keys ride in the candidate set because a relabel can
+    SPLIT a component: part of it keeps the old label, and an old key
+    whose trigger contributors relabeled away may STILL be derivable from
+    its label-stable remaining contributors — without it as a candidate
+    that key would never be recomputed and would be wrongly classified
+    dead (the 800k delete bench caught exactly this shape)."""
+    def keys_of(rows: DataFrame, cmap: DataFrame, old: bool) -> DataFrame:
+        return apply_canonical_map(rows, cmap).select(
+            "subj", "pred", "obj", "edge_key", F.lit(old).alias("_old"))
+
+    # candidate keys only need (subj, pred, obj, edge_key): no aggregate.
+    # Deduped once (edge_key determines subj, pred, obj), so its count
+    # bounds the rewritten plus the deleted key sets
+    key_edges = keys_of(old_rows, old_cmap, True) \
+        .unionByName(keys_of(new_rows, new_cmap, False)) \
+        .dropDuplicates(["edge_key", "_old"]).localCheckpoint(eager=True)
+    n = _row_counts({**stats, "keys": key_edges})
+    small = n["keys"] <= _BROADCAST_KEYS_MAX
+    hint = F.broadcast if small else (lambda df: df)
+    # recompute over ALL contributor rows (support counts every
+    # contributor), so recomputed values equal a full rebuild's for those
+    # keys. The semi-join on (subj, pred, obj) runs right after the map
+    # lookups, before the edge key is hashed or any row is shuffled, so
+    # the aggregate only sees contributor rows.
+    recomputed = distinct_edges(
+        apply_canonical_map(raw, new_cmap).join(
+            hint(key_edges.select("subj", "pred", "obj")),
+            ["subj", "pred", "obj"], "left_semi")) \
+        .localCheckpoint(eager=True)
+    # dead = old candidates the recompute did NOT produce. They carry
+    # pred, so the upsert knows their partition without a moved-key scan,
+    # and stay a DATAFRAME end-to-end: a driver collect + isin literal
+    # list would blow the driver/plan exactly in a merge storm
+    dead = key_edges.filter("_old").select("edge_key", "pred") \
+        .join(hint(recomputed.select("edge_key")), "edge_key", "left_anti") \
+        .localCheckpoint(eager=True)
+    upsert_by_key(spark, recomputed, f"{state_dir}/edges",
+                  ["edge_key", "pred"], partition_by=["pred"],
+                  delete_keys=dead, broadcast_keys=small)
+    return n, {"recomputed": recomputed, "dead": dead}
 
 
 def _state_complete(state_dir: str) -> bool:
@@ -586,7 +669,8 @@ def _init_state_locked(spark: SparkSession, pages: DataFrame,
     replace_table(cmap, f"{state_dir}/cmap")
     clock.mark("components")
     cmap = spark.read.parquet(f"{state_dir}/cmap")
-    write_table(_edges_for(raw, cmap), f"{state_dir}/edges",
+    write_table(distinct_edges(apply_canonical_map(raw, cmap)),
+                f"{state_dir}/edges",
                 partition_by=["pred"])
     clock.mark("edges")
     # the batch is now fully reflected in edges — record it so an
@@ -727,38 +811,41 @@ def _incremental_update_locked(spark: SparkSession, new_pages: DataFrame,
     store_old = store_raw \
         .filter(F.col("batch").cast("string") != F.lit(str(cur_batch))) \
         .select("squash", "band", "bh")
-    new_squashes = new_norms.select("squash").dropDuplicates(["squash"]) \
-        .join(store_old.select("squash"), "squash", "left_anti") \
+    new_bk = _bucket_rows(
+        new_norms.join(store_old.select("squash"), "squash", "left_anti")) \
         .localCheckpoint(eager=True)
-    new_bk = _bucket_rows(new_squashes).localCheckpoint(eager=True)
     clock.mark("hash")
     all_bk = store_old.unionByName(new_bk) \
         .select(F.col("squash").alias("_id"), "band", "bh")
+    # the touch set, each squash once: every bucketed squash has exactly
+    # one row per band (an unbucketed one can pair with nothing)
     cand = touching_pairs_from_buckets(
-        all_bk, new_squashes.select(F.col("squash").alias("_id")),
+        all_bk, new_bk.filter(F.col("band") == 0)
+        .select(F.col("squash").alias("_id")),
         _LSH["max_bucket_size"], keep_bucket=True)
     # verify shingles come from the squash STRING itself — no raw
-    # re-scan; only squashes involved in a candidate pair re-shingle
-    involved = cand.select(F.explode(F.array("a", "b")).alias("squash")) \
-                   .dropDuplicates(["squash"])
+    # re-scan; only squashes involved in a candidate pair re-shingle.
+    # pair_scores materializes its hashed form once, so no checkpoint here
     keyed = (
-        involved
+        cand.select(F.explode(F.array("a", "b")).alias("squash"))
+        .dropDuplicates(["squash"])
         .select(F.col("squash").alias("_id"),
                 char_shingles(F.col("squash"), 3).alias("sh"))
         .filter(F.size("sh") > 0)
-        .localCheckpoint(eager=False)
     )
     # verified rows keep their generating (band, bh) — the pairs store is
-    # provenance rows, so the cap can be re-evaluated as buckets grow
+    # provenance rows, so the cap can be re-evaluated as buckets grow.
+    # Materialized once: scope, components and the commit all read it
     touching_prov = pair_scores(cand, keyed, threshold, "containment",
                                 keep_cols=("band", "bh")) \
-        .select("a", "b", "band", "bh")
+        .select("a", "b", "band", "bh").localCheckpoint(eager=True)
     if not (bdir / f"batch={cur_batch}").exists():
         _append_batch_dir(new_bk, state_dir, "buckets", cur_batch)
-    merged_pairs = old_pairs.unionByName(touching_prov) \
-        .dropDuplicates(["a", "b", "band", "bh"]).localCheckpoint(eager=True)
+    # touching pairs are disjoint from old pairs except on a resume after
+    # the pairs swap: the dedup matters only for the table write
+    all_pairs = old_pairs.unionByName(touching_prov)
+    merged_pairs = all_pairs.dropDuplicates(["a", "b", "band", "bh"])
     clock.mark("verify")
-    touching = touching_prov.select("a", "b").dropDuplicates(["a", "b"])
 
     # CAP CROSSINGS: a touched bucket whose population (distinct
     # squashes) crosses max_bucket_size with this batch would contribute
@@ -769,21 +856,20 @@ def _incremental_update_locked(spark: SparkSession, new_pages: DataFrame,
     # (squashes are never removed), so a bucket that crossed never comes
     # back.
     cap = _LSH["max_bucket_size"]
-    touched_keys = new_bk.select("band", "bh").dropDuplicates(["band", "bh"])
-    n_before = store_old.join(touched_keys, ["band", "bh"], "left_semi") \
-        .groupBy("band", "bh").agg(F.count("*").alias("n_before"))
-    n_add = new_bk.groupBy("band", "bh").agg(F.count("*").alias("n_add"))
     crossing = (
-        n_add.join(n_before, ["band", "bh"], "left")
-        .fillna(0, subset=["n_before"])
-        .filter((F.col("n_before") <= cap)
-                & (F.col("n_before") + F.col("n_add") > cap))
+        store_old.select("band", "bh", F.lit(0).alias("_new"))
+        .join(F.broadcast(new_bk.select("band", "bh")), ["band", "bh"],
+              "left_semi")
+        .unionByName(new_bk.select("band", "bh", F.lit(1).alias("_new")))
+        .groupBy("band", "bh")
+        .agg(F.count("*").alias("_n"), F.sum("_new").alias("_add"))
+        .filter((F.col("_n") - F.col("_add") <= cap) & (F.col("_n") > cap))
         .select("band", "bh")
     )
     # pairs whose liveness may have flipped: their components need the
     # same recompute a new pair triggers
-    dimmed = old_pairs.join(crossing, ["band", "bh"], "left_semi") \
-        .select("a", "b").dropDuplicates(["a", "b"])
+    dimmed = old_pairs.join(F.broadcast(crossing), ["band", "bh"],
+                            "left_semi")
 
     # 3. recompute ONLY affected components: old components adjacent to a
     # new pair OR a liveness-flipped pair (either endpoint — live pairs
@@ -793,112 +879,52 @@ def _incremental_update_locked(spark: SparkSession, new_pages: DataFrame,
     # squash -> old component is derivable from cmap alone: squash is a
     # pure function of norm, and squash-identical norms always share a
     # component, so any norm of the squash witnesses its canonical id.
+    # No dedup below: every set only feeds a semi/anti join.
     old_sq_cmap = old_cmap.select(
-        F.regexp_replace("norm", " ", "").alias("squash"), "canonical_id") \
-        .dropDuplicates(["squash"])
-    ids_of_new_pairs = touching.unionByName(dimmed).select(
+        F.regexp_replace("norm", " ", "").alias("squash"), "canonical_id")
+    seeds = touching_prov.unionByName(dimmed).select(
         F.explode(F.array("a", "b")).alias("squash")) \
-        .unionByName(new_norms.select("squash")) \
-        .dropDuplicates(["squash"])
-    affected_ids = old_sq_cmap.join(ids_of_new_pairs, "squash", "left_semi") \
-        .select("canonical_id").dropDuplicates(["canonical_id"])
-    affected_old = old_cmap.join(affected_ids, "canonical_id", "left_semi") \
+        .unionByName(new_norms.select("squash"))
+    affected_ids = old_sq_cmap \
+        .join(F.broadcast(seeds), "squash", "left_semi") \
+        .select("canonical_id")
+    affected_old = old_cmap \
+        .join(F.broadcast(affected_ids), "canonical_id", "left_semi") \
         .select("norm",
                 F.regexp_replace("norm", " ", "").alias("squash"))
+    # affected_old and new_norms are disjoint and each unique by norm
     sub_norms = affected_old.unionByName(new_norms.select("norm", "squash")) \
-        .dropDuplicates(["norm"]).localCheckpoint(eager=True)
+        .localCheckpoint(eager=True)
     clock.mark("scope")
-    sub_squashes = sub_norms.select("squash").dropDuplicates(["squash"])
-    sub_prov = merged_pairs.join(
-        sub_squashes.withColumnRenamed("squash", "a"), "a", "left_semi")
+    sub_prov = all_pairs.join(
+        F.broadcast(sub_norms.select(F.col("squash").alias("a"))), "a",
+        "left_semi")
     # LIVENESS: a pair feeds CC only while >= 1 of its generating buckets
     # is still under the cap — exactly the pairs a full rebuild over the
-    # CURRENT bucket population would generate. Sizes are computed for
-    # the referenced buckets only (O(referenced bucket contents)).
-    ref_keys = sub_prov.select("band", "bh").dropDuplicates(["band", "bh"])
-    live_keys = (
-        all_bk.join(ref_keys, ["band", "bh"], "left_semi")
-        .groupBy("band", "bh").agg(F.count("*").alias("_n"))
-        .filter(F.col("_n") <= cap)
-        .select("band", "bh")
-    )
-    sub_pairs = sub_prov.join(live_keys, ["band", "bh"], "left_semi") \
-        .select("a", "b").dropDuplicates(["a", "b"])
-    sub_cmap = _cmap_from_pairs(sub_norms, sub_pairs)
-
-    new_cmap = (
-        old_cmap.join(sub_norms, "norm", "left_anti")
-        .unionByName(sub_cmap)
+    # CURRENT bucket population would generate
+    live_keys = _live_buckets(store_old.unionByName(new_bk), sub_norms)
+    sub_pairs = sub_prov.join(live_keys, ["band", "bh"], "left_semi")
+    sub_cmap = _cmap_from_pairs(sub_norms, sub_pairs) \
         .localCheckpoint(eager=True)
-    )
+    # materialized once: the edge rewrite maps through it twice and the
+    # commit writes it
+    new_cmap = old_cmap \
+        .join(F.broadcast(sub_norms.select("norm")), "norm", "left_anti") \
+        .unionByName(sub_cmap).localCheckpoint(eager=True)
     clock.mark("components")
 
     # 4. rewrite only affected edge keys: rows touching a norm whose
     # canonical changed (old relabeled components) or a new norm, plus
-    # every row mapping onto one of those NEW keys (support must count
-    # ALL contributors)
-    changed = (
-        old_cmap.withColumnRenamed("canonical_id", "_old")
-        .join(new_cmap.withColumnRenamed("canonical_id", "_new"), "norm")
-        .filter(~F.col("_old").eqNullSafe(F.col("_new")))
-        .select("norm")
-        .unionByName(new_norms.select("norm"))
-        .dropDuplicates(["norm"])
-        .localCheckpoint(eager=True)
-    )
-    all_raw = old_raw.unionByName(new_raw)
-    touching_rows = _touching_rows
-
-    # key sources: rows touching a relabeled norm PLUS every new raw row —
-    # a new row over entirely-old norms still increments the support of an
-    # existing edge key, so that key must be re-aggregated too. The OLD-map
-    # edges of the same trigger rows ride along as recompute candidates:
-    # when a cap-crossing SPLITS a component, part of it keeps the old
-    # label, and an old key whose trigger contributors relabeled away may
-    # STILL be derivable from its label-stable remaining contributors —
-    # without the old edges in the candidate set that key would never be
-    # recomputed and would be wrongly classified dead (the 800k delete
-    # bench caught exactly this shape on the delete path).
-    key_source = touching_rows(all_raw, changed).unionByName(new_raw)
-    old_edges = _edges_for(touching_rows(old_raw, changed), old_cmap) \
-        .localCheckpoint(eager=True)
-    key_edges = _edges_for(key_source, new_cmap).unionByName(old_edges) \
-        .localCheckpoint(eager=True)
-    scope_keys = key_edges.select("edge_key").dropDuplicates(["edge_key"])
-    # recompute those keys over ALL their contributor rows (support counts
-    # every contributor) — but never over the whole corpus: the semi-join
-    # pruning keeps this stage O(affected rows), not O(corpus). Every key
-    # in scope_keys is FULLY covered: aff_rows pulls all rows whose norms
-    # map (under the NEW cmap) into any scoped key's subj/obj canonical,
-    # so recomputed values equal a full rebuild's for those keys.
-    aff_rows = _contributor_rows(all_raw, key_edges, new_cmap)
-    recomputed = _edges_for(aff_rows, new_cmap) \
-        .join(scope_keys, "edge_key", "left_semi") \
-        .localCheckpoint(eager=True)
-
-    # old keys derived from the same rows under the OLD map that no longer
-    # exist must be deleted (a merge relabels subj/obj -> new edge_key)
-    old_keys = old_edges.select("edge_key").dropDuplicates(["edge_key"])
-    # dead keys stay a DATAFRAME end-to-end: a large component merge (the
-    # boilerplate-anchor storm SURVEY §7.4.3 warns about) can relabel many
-    # norms at once, and a driver collect + isin literal list would blow
-    # the driver/plan exactly then (VERDICT r3 #1). Anti against the
-    # RECOMPUTED keys (like the delete path): an old key still derivable
-    # from label-stable contributors was recomputed above and must live
-    dead = old_keys.join(
-        recomputed.select("edge_key").dropDuplicates(["edge_key"]),
-        "edge_key", "left_anti").localCheckpoint(eager=True)
-    n_dead = dead.count()
-    n_recomputed = recomputed.count()
-    # delete + upsert folded into ONE partition-scoped table pass (the
-    # dead keys ride the same anti-join). The key-match joins broadcast
-    # only when the MEASURED key count is small (sha256 keys are ~100 B a
-    # row, so 500k keys ≈ 50 MB — a safe driver envelope); a component-
-    # merge storm's arbitrarily large key set falls back to shuffle joins
-    upsert_by_key(spark, recomputed, f"{state_dir}/edges", ["edge_key"],
-                  partition_by=["pred"],
-                  delete_keys=dead if n_dead else None,
-                  broadcast_keys=(n_recomputed + n_dead) <= 500_000)
+    # every new row — a new row over entirely-old norms still increments
+    # the support of an existing edge key. The old rows touching a
+    # changed norm are scanned once and serve both maps.
+    changed = _relabeled(old_cmap, sub_cmap)
+    old_touching = _touching_rows(old_raw, changed).localCheckpoint(eager=True)
+    n, rewritten = _rewrite_edges(
+        spark, state_dir, old_raw.unionByName(new_raw), old_touching,
+        old_touching.unionByName(new_raw), old_cmap, new_cmap, stats={
+            "extract": new_raw, "norms": new_norms, "hash": new_bk,
+            "scope": sub_norms, "components": new_cmap, "changed": changed})
     clock.mark("edges")
 
     # persist the grown state (atomic batch append under the SAME id the
@@ -919,23 +945,18 @@ def _incremental_update_locked(spark: SparkSession, new_pages: DataFrame,
     # after it short-circuits as a replay
     _mark_completed(state_dir, meta, cur_batch)
     clock.mark("commit")
-    # row counts AFTER the stopwatch: every frame below is an eager
-    # checkpoint, so these are block-scan counts, not recomputes
+    # merged_pairs runs once, in its write: count the written table
+    n |= _row_counts(
+        {**rewritten, "verify": spark.read.parquet(f"{state_dir}/pairs")})
     stages = _emit_metrics(state_dir, cur_batch, "update", clock.secs, {
-        "extract": new_raw.count(),
-        "norms": new_norms.count(),
-        "hash": new_bk.count(),
-        "verify": merged_pairs.count(),
-        "scope": sub_norms.count(),
-        "components": new_cmap.count(),
-        "edges": n_recomputed,
-    })
+        k: n[k] for k in ("extract", "norms", "hash", "verify", "scope",
+                          "components")} | {"edges": n["recomputed"]})
     return {
         "initialized": False,
-        "new_norms": new_norms.count(),
-        "changed_norms": changed.count(),
-        "edges_rewritten": n_recomputed,
-        "edges_deleted": n_dead,
+        "new_norms": n["norms"],
+        "changed_norms": n["changed"],
+        "edges_rewritten": n["recomputed"],
+        "edges_deleted": n["dead"],
         "stages": stages,
     }
 
@@ -1002,12 +1023,11 @@ def _incremental_delete_locked(spark: SparkSession, urls, state_dir: str,
                 "edges": spark.read.parquet(f"{state_dir}/edges").count()}
     del_id = delete_id or f"del-{uuid.uuid4().hex[:12]}"
     clock = _StageClock()
+    # the url set only feeds semi/anti joins: no dedup
     if isinstance(urls, DataFrame):
-        urls_df = urls.select("url").dropDuplicates(["url"])
+        urls_df = urls.select("url")
     else:
-        urls_df = spark.createDataFrame([(u,) for u in urls],
-                                        "url string") \
-            .dropDuplicates(["url"])
+        urls_df = spark.createDataFrame([(u,) for u in urls], "url string")
     urls_df = urls_df.localCheckpoint(eager=True)
 
     # STAGE the removed rows FIRST (atomic rename): the raw purge below is
@@ -1068,19 +1088,19 @@ def _incremental_delete_locked(spark: SparkSession, urls, state_dir: str,
     cand_norms = _norms_of(removed)
     present = remaining \
         .select(F.explode(F.array("subj_norm", "obj_norm")).alias("norm")) \
-        .join(cand_norms.select("norm"), "norm", "left_semi") \
-        .dropDuplicates(["norm"])
+        .join(F.broadcast(cand_norms.select("norm")), "norm", "left_semi")
     removed_norms = cand_norms.join(present, "norm", "left_anti") \
         .localCheckpoint(eager=True)
     # squashes that leave: no surviving norm squashes to them (cmap holds
-    # the full pre-delete vocabulary, so the check is vocab-sized)
+    # the full pre-delete vocabulary, so the check is vocab-sized).
+    # Deduped: removed_squashes counts them
     cand_sq = removed_norms.select("squash").dropDuplicates(["squash"])
     surviving_sq = (
         old_cmap.select(
             F.regexp_replace("norm", " ", "").alias("squash"), "norm")
-        .join(cand_sq, "squash", "left_semi")
-        .join(removed_norms.select("norm"), "norm", "left_anti")
-        .select("squash").dropDuplicates(["squash"])
+        .join(F.broadcast(cand_sq), "squash", "left_semi")
+        .join(F.broadcast(removed_norms.select("norm")), "norm", "left_anti")
+        .select("squash")
     )
     removed_sq = cand_sq.join(surviving_sq, "squash", "left_anti") \
         .localCheckpoint(eager=True)
@@ -1090,10 +1110,11 @@ def _incremental_delete_locked(spark: SparkSession, urls, state_dir: str,
     # population drops from > cap to <= cap would pair its members in a
     # rebuild — but the store never generated those pairs. Re-pair the
     # bucket's CURRENT membership (<= cap rows each, O(touched buckets)).
-    dead_bk = store_rows.join(removed_sq, "squash", "left_semi")
+    dead_bk = store_rows.join(F.broadcast(removed_sq), "squash", "left_semi")
     pop_gone = dead_bk.groupBy("band", "bh").agg(F.count("*").alias("_ng"))
-    touched = dead_bk.select("band", "bh").dropDuplicates(["band", "bh"])
-    pop_before = store_rows.join(touched, ["band", "bh"], "left_semi") \
+    pop_before = store_rows \
+        .join(F.broadcast(dead_bk.select("band", "bh")), ["band", "bh"],
+              "left_semi") \
         .groupBy("band", "bh").agg(F.count("*").alias("_nb"))
     crossing = (
         pop_before.join(pop_gone, ["band", "bh"])
@@ -1111,10 +1132,10 @@ def _incremental_delete_locked(spark: SparkSession, urls, state_dir: str,
     keyed = involved.select(
         F.col("squash").alias("_id"),
         char_shingles(F.col("squash"), 3).alias("sh")) \
-        .filter(F.size("sh") > 0).localCheckpoint(eager=False)
+        .filter(F.size("sh") > 0)
     regen = pair_scores(cand_pairs, keyed, threshold, "containment",
                         keep_cols=("band", "bh")) \
-        .select("a", "b", "band", "bh")
+        .select("a", "b", "band", "bh").localCheckpoint(eager=True)
     # pairs with a removed endpoint leave the store PERMANENTLY (a removed
     # squash may be the bridge of a component — keeping the pair would
     # keep the component merged where a rebuild splits it)
@@ -1132,84 +1153,49 @@ def _incremental_delete_locked(spark: SparkSession, urls, state_dir: str,
     # Live pairs never span components, so pulling whole components into
     # scope keeps the sub-recompute's min-norm labels globally correct.
     old_sq_cmap = old_cmap.select(
-        F.regexp_replace("norm", " ", "").alias("squash"), "canonical_id") \
-        .dropDuplicates(["squash"])
+        F.regexp_replace("norm", " ", "").alias("squash"), "canonical_id")
     seed_sq = removed_norms.select("squash") \
         .unionByName(regen.select(F.explode(F.array("a", "b"))
-                                  .alias("squash"))) \
-        .dropDuplicates(["squash"])
-    affected_ids = old_sq_cmap.join(seed_sq, "squash", "left_semi") \
-        .select("canonical_id").dropDuplicates(["canonical_id"])
+                                  .alias("squash")))
+    affected_ids = old_sq_cmap \
+        .join(F.broadcast(seed_sq), "squash", "left_semi") \
+        .select("canonical_id")
     affected_members = old_cmap \
-        .join(affected_ids, "canonical_id", "left_semi").select("norm") \
-        .localCheckpoint(eager=True)
+        .join(F.broadcast(affected_ids), "canonical_id", "left_semi") \
+        .select("norm").localCheckpoint(eager=True)
     sub_norms = affected_members \
         .join(removed_norms.select("norm"), "norm", "left_anti") \
         .select("norm", F.regexp_replace("norm", " ", "").alias("squash")) \
         .localCheckpoint(eager=True)
     clock.mark("scope")
 
-    sub_squashes = sub_norms.select("squash").dropDuplicates(["squash"])
     sub_prov = merged_pairs.join(
-        sub_squashes.withColumnRenamed("squash", "a"), "a", "left_semi")
-    ref_keys = sub_prov.select("band", "bh").dropDuplicates(["band", "bh"])
+        F.broadcast(sub_norms.select(F.col("squash").alias("a"))), "a",
+        "left_semi")
     # liveness against the POST-delete population (the bucket-store purge
     # happens later in the commit order; subtract at the DataFrame level)
-    live_keys = (
-        cur_store.join(ref_keys, ["band", "bh"], "left_semi")
-        .groupBy("band", "bh").agg(F.count("*").alias("_n"))
-        .filter(F.col("_n") <= cap)
-        .select("band", "bh")
-    )
-    sub_pairs = sub_prov.join(live_keys, ["band", "bh"], "left_semi") \
-        .select("a", "b").dropDuplicates(["a", "b"])
-    sub_cmap = _cmap_from_pairs(sub_norms, sub_pairs)
-    new_cmap = old_cmap.join(affected_members, "norm", "left_anti") \
+    sub_pairs = sub_prov.join(_live_buckets(cur_store, sub_norms),
+                              ["band", "bh"], "left_semi")
+    sub_cmap = _cmap_from_pairs(sub_norms, sub_pairs) \
+        .localCheckpoint(eager=True)
+    new_cmap = old_cmap \
+        .join(F.broadcast(affected_members), "norm", "left_anti") \
         .unionByName(sub_cmap).localCheckpoint(eager=True)
     clock.mark("components")
 
     # edge fix: keys whose support changed = keys of rows touching a
-    # relabeled norm (new map) + keys the removed rows contributed to
-    # (their remaining contributors re-aggregate; keys with none die)
-    changed = (
-        old_cmap.withColumnRenamed("canonical_id", "_old")
-        .join(new_cmap.withColumnRenamed("canonical_id", "_new"), "norm")
-        .filter(~F.col("_old").eqNullSafe(F.col("_new")))
-        .select("norm").localCheckpoint(eager=True)
-    )
-    # candidate OLD edges: same source rows under the OLD map (the removed
-    # rows existed then). These ride in the recompute candidate set too:
-    # a removal can SPLIT a component so that the trigger contributors of
-    # an old key relabel away while its label-stable REMAINING
-    # contributors still derive it — without the old edges as candidates
-    # that key is never recomputed and gets wrongly deleted (caught by
-    # the 800k delete bench: 50 missing edges, all in one split
-    # component's stable half).
-    old_edges = _edges_for(
-        _touching_rows(remaining, changed).unionByName(removed), old_cmap) \
+    # relabeled norm + keys the removed rows contributed to (their
+    # remaining contributors re-aggregate; keys with none die). The
+    # removed rows existed under the OLD map, so they ride in both maps'
+    # candidate rows.
+    changed = _relabeled(old_cmap, sub_cmap)
+    source = _touching_rows(remaining, changed).unionByName(removed) \
         .localCheckpoint(eager=True)
-    key_edges = _edges_for(_touching_rows(remaining, changed), new_cmap) \
-        .unionByName(_edges_for(removed, new_cmap)) \
-        .unionByName(old_edges) \
-        .localCheckpoint(eager=True)
-    scope_keys = key_edges.select("edge_key").dropDuplicates(["edge_key"])
-    aff_rows = _contributor_rows(remaining, key_edges, new_cmap)
-    recomputed = _edges_for(aff_rows, new_cmap) \
-        .join(scope_keys, "edge_key", "left_semi") \
-        .localCheckpoint(eager=True)
-    # dead = old candidates the recompute did NOT produce — anti against
-    # the RECOMPUTED key set, not the candidate set: a key whose every
-    # contributor was removed has no recomputed row at all
-    old_keys = old_edges.select("edge_key").dropDuplicates(["edge_key"])
-    rec_keys = recomputed.select("edge_key").dropDuplicates(["edge_key"])
-    dead = old_keys.join(rec_keys, "edge_key", "left_anti") \
-        .localCheckpoint(eager=True)
-    n_dead = dead.count()
-    n_recomputed = recomputed.count()
-    upsert_by_key(spark, recomputed, f"{state_dir}/edges", ["edge_key"],
-                  partition_by=["pred"],
-                  delete_keys=dead if n_dead else None,
-                  broadcast_keys=(n_recomputed + n_dead) <= 500_000)
+    n, rewritten = _rewrite_edges(
+        spark, state_dir, remaining, source, source, old_cmap, new_cmap,
+        stats={"norms": removed_norms, "squashes": removed_sq,
+               "verify": merged_pairs, "scope": sub_norms,
+               "components": new_cmap, "changed": changed})
     clock.mark("edges")
 
     # commit: pairs/cmap swap AFTER the edge fix (a crash in between
@@ -1223,22 +1209,20 @@ def _incremental_delete_locked(spark: SparkSession, urls, state_dir: str,
     _mark_completed(state_dir, meta, del_id)
     shutil.rmtree(stage, ignore_errors=True)
     clock.mark("commit")
+    n |= _row_counts(rewritten)
     stages = _emit_metrics(state_dir, del_id, "delete", clock.secs, {
-        "stage": n_removed,
-        "norms": removed_norms.count(),
-        "verify": merged_pairs.count(),
-        "scope": sub_norms.count(),
-        "components": new_cmap.count(),
-        "edges": n_recomputed,
+        "stage": n_removed, "norms": n["norms"], "verify": n["verify"],
+        "scope": n["scope"], "components": n["components"],
+        "edges": n["recomputed"],
     })
     return {
         "replayed": False,
         "deleted_rows": n_removed,
-        "removed_norms": removed_norms.count(),
-        "removed_squashes": removed_sq.count(),
-        "changed_norms": changed.count(),
-        "edges_rewritten": n_recomputed,
-        "edges_deleted": n_dead,
+        "removed_norms": n["norms"],
+        "removed_squashes": n["squashes"],
+        "changed_norms": n["changed"],
+        "edges_rewritten": n["recomputed"],
+        "edges_deleted": n["dead"],
         "stages": stages,
     }
 
@@ -1301,8 +1285,6 @@ def incremental_reingest(spark: SparkSession, pages: DataFrame,
         if newer_only and "warc_ts" in pages.columns:
             # within-batch latest-crawl: keep each url's newest row only
             # (batch-bounded window — never corpus-sized)
-            from pyspark.sql.window import Window
-
             w = Window.partitionBy("url").orderBy(F.col("warc_ts").desc())
             pages = pages.withColumn("_rn", F.row_number().over(w)) \
                 .filter(F.col("_rn") == 1).drop("_rn")

@@ -24,6 +24,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.localdf import arrow_local_df
+
 
 def write_table(df: DataFrame, path: str, partition_by: list[str] | None = None,
                 mode: str = "overwrite") -> None:
@@ -132,10 +134,11 @@ def upsert_by_key(
     (e.g. a component-merge storm's dead-edge set)."""
     p = Path(path)
     _recover_table(p)
-    all_keys = new_rows.select(*key_cols).dropDuplicates(key_cols)
+    # key sets only feed semi/anti joins: no dedup (Spark would keep it
+    # and pay an exchange for nothing)
+    all_keys = new_rows.select(*key_cols)
     if delete_keys is not None:
-        all_keys = all_keys.unionByName(
-            delete_keys.select(*key_cols)).dropDuplicates(key_cols)
+        all_keys = all_keys.unionByName(delete_keys.select(*key_cols))
     if p.exists() and partition_by:
         _upsert_partition_scoped(spark, new_rows, p, key_cols, partition_by,
                                  keys_df=all_keys,
@@ -173,7 +176,6 @@ def _upsert_partition_scoped(
     p: Path,
     key_cols: list[str],
     partition_by: list[str],
-    detect_moved_keys: bool = True,
     keys_df: DataFrame | None = None,
     broadcast_keys: bool = True,
 ) -> None:
@@ -182,20 +184,19 @@ def _upsert_partition_scoped(
     where ``df.writeTo(tbl).overwritePartitions()`` plugs in). At 100 TB a
     one-partition upsert reads and rewrites one partition, not the table.
 
-    Steps: (1) compute the affected partition set = partitions named by the
-    new rows PLUS any partition currently holding one of the new keys —
-    detecting moved keys requires a column-pruned scan of the key +
-    partition columns across ALL partitions (pass
-    ``detect_moved_keys=False`` when keys are known partition-stable to
-    skip it); (2) semi-join the existing table to the affected partitions
-    with NULL-SAFE equality (plain equality would never match a NULL
-    partition value, and the swap would then DELETE the live
-    __HIVE_DEFAULT_PARTITION__ data) — Catalyst prunes that scan;
-    (3) anti-join out replaced keys (null-safe), union the new rows;
-    (4) write the merged affected partitions to a temp dir; (5) swap the
-    partition dirs present in the temp output or emptied by the merge.
-    Untouched partition directories are never REWRITTEN; with
-    ``detect_moved_keys`` their key columns are read once.
+    Steps: (1) collect the affected partition set once = partitions named
+    by the new rows PLUS any partition currently holding one of the keys.
+    When ``partition_by`` is a subset of ``key_cols`` a key names its own
+    partition, so the keys' partition values ARE that set; otherwise
+    detecting moved keys takes a column-pruned scan of the key + partition
+    columns across ALL partitions; (2) semi-join the existing table to
+    the affected partitions with NULL-SAFE equality (plain equality would
+    never match a NULL partition value, and the swap would then DELETE the
+    live __HIVE_DEFAULT_PARTITION__ data); (3) anti-join out replaced keys
+    (null-safe), union the new rows; (4) write the merged affected
+    partitions to a temp dir; (5) swap the partition dirs present in the
+    temp output or emptied by the merge. Untouched partition directories
+    are never REWRITTEN.
 
     Atomicity is PER PARTITION (the Iceberg catalog gives whole-table
     snapshot atomicity; this parquet stand-in cannot): each swap is
@@ -213,34 +214,32 @@ def _upsert_partition_scoped(
     _recover_partitions(p)
     nullsafe_on = _nullsafe_on
 
-    if new_rows is not None:
-        new_parts = new_rows.select(*partition_by) \
-                            .dropDuplicates(partition_by)
-    else:
-        new_parts = spark.read.parquet(str(p)) \
-            .select(*partition_by).dropDuplicates(partition_by).limit(0)
     raw_keys = (keys_df if keys_df is not None else new_rows) \
-        .select(*key_cols).dropDuplicates(key_cols)
+        .select(*key_cols)
     keys = (F.broadcast(raw_keys) if broadcast_keys else raw_keys) \
         .alias("_keys")
-    if detect_moved_keys:
-        # partitions currently holding one of the upserted keys (key +
-        # partition columns only => column-pruned scan of all partitions)
+    if set(partition_by) <= set(key_cols):
+        # keys cannot move partitions; the new rows' keys are among them
+        affected = raw_keys.select(*partition_by)
+    else:
+        # partitions currently holding one of the keys (key + partition
+        # columns only => column-pruned scan of all partitions)
         scan = spark.read.parquet(str(p)) \
             .select(*key_cols, *partition_by).alias("_scan")
-        current_parts = (
-            scan.join(keys, nullsafe_on(scan, keys, key_cols), "left_semi")
-            .select(*partition_by).dropDuplicates(partition_by)
-        )
-        affected = new_parts.unionByName(current_parts) \
-                            .dropDuplicates(partition_by)
-    else:
-        affected = new_parts
-    affected = F.broadcast(affected).alias("_aff")
+        affected = scan.join(keys, nullsafe_on(scan, keys, key_cols),
+                             "left_semi").select(*partition_by)
+        if new_rows is not None:
+            affected = affected.unionByName(new_rows.select(*partition_by))
+    # collected ONCE: the rows drive both the scan's semi-join (a local
+    # broadcast, no second run of the plan) and the dir swap below
+    aff_rows = affected.distinct().collect()
+    aff = F.broadcast(arrow_local_df(spark, aff_rows, ", ".join(
+        f"`{f.name}` {f.dataType.simpleString()}"
+        for f in affected.schema.fields))).alias("_aff")
 
     live = spark.read.parquet(str(p)).alias("_live")
-    existing = live.join(
-        affected, nullsafe_on(live, affected, partition_by), "left_semi")
+    existing = live.join(aff, nullsafe_on(live, aff, partition_by),
+                         "left_semi")
     existing_a = existing.alias("_ex")
     keep = existing_a.join(
         keys, nullsafe_on(existing_a, keys, key_cols), "left_anti")
@@ -262,7 +261,7 @@ def _upsert_partition_scoped(
     tmp_leaves = {leaf.relative_to(tmp) for leaf in tmp.glob(pattern)}
     affected_vals = {
         tuple(_partition_value_str(r[c]) for c in partition_by)
-        for r in affected.collect()
+        for r in aff_rows
     }
     live_affected = {
         leaf.relative_to(p) for leaf in p.glob(pattern)
@@ -409,7 +408,7 @@ def delete_by_key(
             keys_df=keys, broadcast_keys=broadcast_keys)
         return
     live = spark.read.parquet(str(p)).alias("_live")
-    k = keys.select(*key_cols).dropDuplicates(key_cols)
+    k = keys.select(*key_cols)
     k = (F.broadcast(k) if broadcast_keys else k).alias("_keys")
     remaining = live.join(k, _nullsafe_on(live, k, key_cols), "left_anti")
     tmp = p.parent / f".{p.name}.tmp-{uuid.uuid4().hex[:8]}"

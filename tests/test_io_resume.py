@@ -328,6 +328,40 @@ class TestPartitionScopedUpsert:
         got = {(r["k"], r["part"]) for r in spark.read.parquet(path).collect()}
         assert got == {("k1", "a"), ("k5", "z")}
 
+    def test_partition_in_key_matches_moved_key_path(self, spark, tmp):
+        """Keyed on (k, part), a key names its own partition: upsert +
+        delete rewrite only the partitions the rows and keys name, and the
+        table equals the one the moved-key path (keyed on k) produces."""
+        import glob
+        import os
+
+        schema = "k string, v int, part string"
+        rows = [("k1", 1, "a"), ("k2", 2, "a"), ("k3", 3, "b"),
+                ("k4", 4, "c"), ("k5", 5, None)]
+        new = [("k2", 20, "a"), ("k9", 90, "b"), ("k6", 60, None)]
+        dead = [("k3", "b")]
+        got = {}
+        for name, key in (("scoped", ["k", "part"]), ("moved", ["k"])):
+            path = f"{tmp}/{name}"
+            write_table(spark.createDataFrame(rows, schema), path,
+                        partition_by=["part"])
+            untouched = {f: os.stat(f).st_mtime_ns
+                         for f in glob.glob(f"{path}/part=c/*.parquet")}
+            assert untouched
+            upsert_by_key(spark, spark.createDataFrame(new, schema), path,
+                          key, partition_by=["part"],
+                          delete_keys=spark.createDataFrame(
+                              dead, "k string, part string"))
+            assert {f: os.stat(f).st_mtime_ns
+                    for f in glob.glob(f"{path}/part=c/*.parquet")} \
+                == untouched
+            got[name] = sorted(
+                (r["k"], r["v"], r["part"])
+                for r in spark.read.parquet(path).collect())
+        assert got["scoped"] == got["moved"] == sorted(
+            [("k1", 1, "a"), ("k2", 20, "a"), ("k9", 90, "b"),
+             ("k4", 4, "c"), ("k5", 5, None), ("k6", 60, None)])
+
     def test_idempotent(self, spark, tmp):
         path = f"{tmp}/pt3"
         new = spark.createDataFrame(
