@@ -41,24 +41,6 @@ def extract_triples_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         yield s.map(lambda t: extract_triples(t))
 
 
-@F.pandas_udf(ArrayType(RAW_TRIPLE))
-def triples_from_page_udf(
-    it: Iterator[tuple[pd.Series, pd.Series, pd.Series]],
-) -> Iterator[pd.Series]:
-    """(url, html binary, text nullable) -> triples in one python pass
-    (decodes + format-routed extraction only where the text column is
-    null)."""
-    from ..textcore.route import extract_text as _route_extract
-
-    for url_s, html_s, text_s in it:
-        out = []
-        for u, h, t in zip(url_s, html_s, text_s):
-            if t is None:
-                t = _route_extract(u, bytes(h) if h is not None else None)
-            out.append(extract_triples(t))
-        yield pd.Series(out)
-
-
 def _arrow_extract_batches(it):
     """mapInArrow generator: pyarrow in, pyarrow out, no pandas. Imports
     only stdlib + pyarrow inside the worker."""

@@ -279,7 +279,8 @@ def pair_scores(pairs: DataFrame, keyed: DataFrame, threshold: float,
     # ReusedExchange for the second probe (verified in the final
     # adaptive plan at both 39.6k- and 154k-squash vocabularies), while
     # isolated two-probe shapes over the same checkpointed frame can
-    # compile two independent builds (scripts/reuse_probe.py) — so the
+    # compile two independent builds (seen in their final adaptive plans,
+    # with the frame cached instead and with AQE off too) — so the
     # guarantee this code relies on is only the single lineage
     # evaluation; the worst case is one extra hash-table build, bounded
     # by the broadcast gate below (<= broadcast_threshold_rows rows and

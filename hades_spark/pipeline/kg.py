@@ -1,20 +1,21 @@
 """End-to-end knowledge-graph construction pipeline.
 
 pages(url, warc_ts, html, text, lang)
-  -> extract_text        (byte-identical pandas UDF, narrow)
-  -> mentions            (UDF + explode, narrow)
-  -> raw surface triples (UDF + explode, narrow)
-  -> canonical_map       (LSH + connected components over distinct surfaces)
-  -> triples             (canonical subj/obj, sha256 edge key, dedup,
-                          partitioned-by-pred write)
+  -> raw surface triples (``raw_triples``: one narrow mapInArrow pass that
+                          decodes, fills null text, emits exploded SVO rows)
+  -> surface norms       (JVM-side ``normalize_surface_col``, cached)
+  -> canonical_norm_map  (driver-side union-find on small vocabularies, else
+                          LSH + connected components over distinct norms)
+  -> triples             (``apply_canonical_map``: canonical subj/obj, sha256
+                          edge key; ``distinct_edges``; write by pred)
 
 This is the Spark restatement of the reference's
 ``hades db graph materialize`` lifecycle (SURVEY §3.3): the declarative
 edge-def loop becomes explode + semi-join + key-hash + idempotent write.
 
-Scale shape: the only shuffles are (1) the distinct-surface aggregation
+Scale shape: the only shuffles are (1) the distinct-norm aggregation
 (tiny relative to pages — surfaces dedup hard), (2) the LSH/CC stages over
-those distinct surfaces, (3) the broadcast-join of the canonical map back
+those distinct norms, (3) the broadcast-join of the canonical map back
 onto triples (map-side, no shuffle of the big side), and (4) the final
 per-pred dedup. Everything page-sized stays narrow.
 """

@@ -4,12 +4,13 @@ Pure stdlib (`re` only): this module is imported inside executor python
 workers, so it must NOT pull in pyspark/pandas (worker import time is a
 per-executor startup constant at scale).
 
-Semantics match the reference extractor exactly
-(``/root/reference/core/extractors/extractors_markdown.py:619-697`` —
-``_html_to_plain_text`` / ``_unescape_html``, and the utf-8 -> latin-1 decode
-ladder at ``:80-91``). The transformation MUST run on the Python ``re``
-engine inside an Arrow-batched pandas UDF — Spark SQL's Java regex differs
-on unicode case folding, DOTALL interplay and ``\\Z``, so translating these
+Semantics match the reference extractor exactly (its
+``_html_to_plain_text`` / ``_unescape_html`` rules and its utf-8 -> latin-1
+decode ladder); ``html_to_text_spec`` is their literal transcription. The
+transformation MUST run on the Python ``re`` engine in the python worker —
+the build's ``raw_triples`` mapInArrow pass and the deploy path's pandas
+UDFs both call ``html_to_text`` there. Spark SQL's Java regex differs on
+unicode case folding, DOTALL interplay and ``\\Z``, so translating these
 rewrites to ``regexp_replace`` columns would silently break the per-url
 byte-identical contract.
 
@@ -130,7 +131,15 @@ def html_to_text_spec(content: str) -> str:
 #   (" ' space dashes ellipsis (c)(r)(tm)) contain no '&', so one level of
 #   rescan is sufficient; equivalence is fuzz-verified against the spec.
 # - script/style stay as two sequential passes: fusing them changes
-#   behavior on adversarially interleaved <script>/<style> nesting.
+#   behavior on adversarially interleaved <script>/<style> nesting. No
+#   lower()-based '<script' gate either: IGNORECASE also matches 'ſ'/'ı'/'İ'.
+# - whitespace: '[ \t]+' matches every single space (thousands per page).
+#   Tabs -> spaces first turns each maximal [ \t] run into a space run of
+#   the same length and touches nothing else, so '  +' -> ' ' then yields
+#   exactly the spec's bytes; its literal '  ' prefix lets the engine skip
+#   single spaces. '\n\n\n+' is '\n{3,}' with a literal prefix to search
+#   for. No presence gates: str.replace and re.sub return the input as is
+#   when nothing matches.
 
 _RE_BLOCK_NN = re.compile(r"</p>|</h[1-6]>", re.IGNORECASE)
 _RE_BLOCK_N = re.compile(r"<br[^>]*>|</div>|</li>|</tr>", re.IGNORECASE)
@@ -139,6 +148,8 @@ _RE_NAMED = re.compile("|".join(re.escape(e) for e, _ in _NAMED_ENTITIES))
 _AMP_IDX = next(i for i, (e, _) in enumerate(_NAMED_ENTITIES) if e == "&amp;")
 _POST_AMP = _NAMED_ENTITIES[_AMP_IDX + 1:]
 _RE_NAMED_POST_AMP = re.compile("|".join(re.escape(e) for e, _ in _POST_AMP))
+_RE_SPACE_RUN = re.compile("  +")
+_RE_NL_RUN = re.compile("\n\n\n+")
 
 
 def unescape_html(text: str) -> str:
@@ -169,8 +180,8 @@ def html_to_text(content: str) -> str:
     text = _RE_ANY_TAG.sub("", text)
     text = unescape_html(text)
 
-    text = _RE_SPACES.sub(" ", text)
-    text = _RE_MANY_NL.sub("\n\n", text)
+    text = _RE_SPACE_RUN.sub(" ", text.replace("\t", " "))
+    text = _RE_NL_RUN.sub("\n\n", text)
     return text.strip()
 
 

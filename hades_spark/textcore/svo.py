@@ -9,8 +9,9 @@ relation vocabulary, source span -> target span) and its citation triples
 over free text (``academic_citation_toolkit.py:545-665``) as a text-level
 extractor.
 
-Runs on the Python ``re`` engine inside an Arrow-batched pandas UDF
-(per input_hint: vectorized pandas/Arrow UDFs, no per-row Python UDFs).
+Runs on the Python ``re`` engine in the python worker: the build's and
+the incremental update's ``raw_triples`` mapInArrow pass, and the deploy
+path's ``extract_triples_udf``, all call ``extract_triples``.
 """
 
 from __future__ import annotations
@@ -39,8 +40,6 @@ def _pattern(predicates: tuple[str, ...]) -> re.Pattern:
 
 
 _DEFAULT_RE = _pattern(DEFAULT_PREDICATES)
-_DEFAULT_QUICK = re.compile(
-    r"\b(?:" + "|".join(re.escape(p) for p in DEFAULT_PREDICATES) + r")\b")
 
 
 def _matches_to_rows(ms, offset: int) -> list[dict]:
@@ -77,37 +76,41 @@ def extract_triples_spec(text: str, pattern: re.Pattern = _DEFAULT_RE) -> list[d
     return _matches_to_rows(pattern.finditer(text or ""), 0)
 
 
-def extract_triples(text: str, pattern: re.Pattern = _DEFAULT_RE,
-                    quick: re.Pattern = _DEFAULT_QUICK) -> list[dict]:
-    """All (subj, pred, obj) span matches in one document's text.
+def extract_triples(text: str) -> list[dict]:
+    """All (subj, pred, obj) span matches in one document's text, equal to
+    ``extract_triples_spec`` over the default predicates.
 
-    Optimized: the full pattern backtracks over every sentence boundary,
-    which is wasted work on the (dominant) predicate-free lines of a web
-    page; a cheap word-alternation prescan skips them. MATCHES cannot
-    cross lines (every span class excludes newline) — but the sentence-
-    boundary START assertion ``(?<=\\.)\\s+`` can: a line whose preceding
-    text tails off in '.'+whitespace licenses a subject at the top of
-    THIS line, and that earlier-starting attempt wins leftmost-match
-    precedence over the ``^`` attempt (hypothesis found the case: a line
-    of '. ' followed by '  uses A1 uses B2.'). Scanning such lines with a
-    synthetic '.\\n' prefix reproduces the whole-text engine behavior
-    exactly — the ``\\s+`` run's current-line splits, attempt order, and
-    resume positions all map 1:1 (offsets shift by the 2-char prefix);
-    fuzz-tested equal to the spec."""
+    Optimized: a match needs ``[ \\t]+pred[ \\t]+`` on one line, so only
+    lines holding a predicate word (found by ``str.find`` over the whole
+    text) are scanned, one at a time. MATCHES cannot cross lines (every
+    span class excludes newline) — but the sentence-boundary START
+    assertion ``(?<=\\.)\\s+`` can: if the last character before a line
+    that is not ``str.isspace`` (what ``\\s`` matches) is '.', the run after
+    it licenses a subject at the top of THIS line, and the earlier-starting
+    attempt wins leftmost-match precedence over ``^`` (hypothesis found the
+    case: a line of '. ' followed by '  uses A1 uses B2.'). Scanning such
+    lines with a synthetic '.\\n' prefix reproduces the whole-text engine
+    behavior exactly — the ``\\s+`` run's current-line splits, attempt
+    order, and resume positions all map 1:1 (offsets shift by the 2-char
+    prefix); fuzz-tested equal to the spec."""
+    text = text or ""
+    starts = set()
+    for pred in DEFAULT_PREDICATES:
+        i = text.find(pred)
+        while i != -1:                 # one find per hit line and word
+            starts.add(text.rfind("\n", 0, i) + 1)
+            end = text.find("\n", i)
+            i = -1 if end == -1 else text.find(pred, end)
     out: list[dict] = []
-    offset = 0
-    after_dot = False          # last non-ws char seen so far is '.'
-    for line in (text or "").split("\n"):
-        if quick.search(line):
-            if after_dot:
-                ms = pattern.finditer(".\n" + line)
-                out.extend(_matches_to_rows(ms, offset - 2))
-            else:
-                out.extend(_matches_to_rows(pattern.finditer(line), offset))
-        stripped = line.rstrip()
-        if stripped:               # ws-only lines keep the flag: the
-            after_dot = stripped.endswith(".")  # \s+ run crosses them
-        offset += len(line) + 1
+    for start in sorted(starts):
+        end = text.find("\n", start)
+        line = text[start:] if end == -1 else text[start:end]
+        i = start - 1
+        while i >= 0 and text[i].isspace():
+            i -= 1
+        if i >= 0 and text[i] == ".":
+            ms = _DEFAULT_RE.finditer(".\n" + line)
+            out.extend(_matches_to_rows(ms, start - 2))
+        else:
+            out.extend(_matches_to_rows(_DEFAULT_RE.finditer(line), start))
     return out
-
-

@@ -8,7 +8,8 @@ per-url byte-identical contract.
 from hypothesis import given, settings, strategies as st
 
 from hades_spark.functions.html_text import (
-    html_to_text, html_to_text_spec, unescape_html, unescape_html_spec,
+    decode_html_bytes, html_to_text, html_to_text_spec, unescape_html,
+    unescape_html_spec,
 )
 
 TAGS = ["<p>", "</p>", "<div>", "</div>", "<br>", "<br/>", "<h1>", "</h1>",
@@ -21,6 +22,13 @@ ENTS = ["&amp;", "&lt;", "&gt;", "&quot;", "&apos;", "&#39;", "&nbsp;",
         "&amp;quot;", "&amp;apos;", "&amp;nbsp;", "&amp;mdash;",
         "&amp;hellip;", "&amp;trade;", "&amp;amp;quot;", "&#38;quot;",
         "&amp;gt;", "&amp;#39;", "&amp;quo", "quot;", "&amp;&quot;"]
+WS_RUNS = [" ", "  ", "   ", "\t", "\t\t", " \t", "\t ", " \t \t",
+           "\n", "\n\n", "\n\n\n", "\n\n\n\n", "\n\n\n\n\n", " \n\n\n\t"]
+# characters IGNORECASE folds onto ASCII letters of tag names: 'ſ' ~ 's',
+# 'İ'/'ı' ~ 'i', Kelvin 'K' ~ 'k'
+FOLD_TAGS = ["<ſcript>", "</ſcript>", "<SCRİPT>", "</scrıpt>", "<ſtyle>",
+             "</ſTYLE>", "ſ", "K", "İ", "<Kbd>", "</kbd>", "<script>",
+             "</script>", "<style>", "</style>"]
 FRAGS = st.lists(
     st.one_of(
         st.sampled_from(TAGS),
@@ -84,6 +92,47 @@ class TestEquivalence:
         s = "a<style>x<script>y</style>z</script>b"
         assert html_to_text(s) == html_to_text_spec(s)
 
+    @settings(max_examples=400, deadline=None)
+    @given(st.lists(st.one_of(
+        st.sampled_from(WS_RUNS),
+        st.sampled_from(FOLD_TAGS),
+        st.sampled_from(TAGS),
+        st.sampled_from(["&#9;", "&#32;", "&#10;", "&nbsp;", "x", "ab", "."]),
+    ), max_size=40))
+    def test_fuzz_whitespace_and_case_folds(self, frags):
+        # the whitespace passes (tab rewrite + '  +' collapse, 3+ newline
+        # collapse) and script/style removal under IGNORECASE case folds
+        s = "".join(frags)
+        assert html_to_text(s) == html_to_text_spec(s)
+
+    def test_pinned_whitespace_and_case_folds(self):
+        for s, want in {
+            "a \t \tb": "a b",
+            "a\t\tb\tc  d": "a b c d",
+            "a \n\n\n\n\t b": "a \n\n b",
+            "a</p></p>b": "a\n\nb",
+            "a</p>\nb": "a\n\nb",
+            "a&#9;&#9;b &#10;&#10;&#10;c": "a b \n\nc",
+            "a<ſcript>x</SCRİPT>b": "ab",
+            "a<ſtyle>x</ſtyle>b": "ab",
+            "a<Kbd>K</kbd>b": "aKb",
+        }.items():
+            assert html_to_text_spec(s) == want, s
+            assert html_to_text(s) == want, s
+
+    def test_corpus_benchmark_shape(self):
+        # the benchmark's page shape: richness 30 (long paragraphs, one
+        # triple-bearing line per page among ~70 filler lines)
+        from hades_spark.pipeline.corpus import gen_pages
+
+        for p in gen_pages(60, seed=1, compute_text=False, richness=30):
+            html = decode_html_bytes(p.html)
+            assert html_to_text(html) == html_to_text_spec(html)
+
+
+SVO_WS = [" ", "\n", "\t", "\r", "\x0b", "\x0c", "\x1c", "\x85", "\u2028",
+          "\u2029", "\xa0", ".\x85\n", ".\u2028\n", ". \r\n"]
+
 
 class TestTripleEquivalence:
     @settings(max_examples=300, deadline=None)
@@ -98,6 +147,46 @@ class TestTripleEquivalence:
 
         s = " ".join(frags)
         assert extract_triples(s) == extract_triples_spec(s)
+
+    @settings(max_examples=400, deadline=None)
+    @given(st.lists(st.one_of(
+        st.sampled_from(["uses", "reuses", "usesX", "links", "linkstores",
+                         "stores", "mentions", "calls", "A1", "B2", "HADES",
+                         "Spark.", "H.A.D.E.S.", ".", ". ", "the"]),
+        st.sampled_from(SVO_WS),
+        st.text(alphabet="ab. \n\t\r\x85uses", max_size=10),
+    ), max_size=40))
+    def test_fuzz_extract_triples_whitespace(self, frags):
+        # whitespace that str.rstrip strips but split("\n") keeps inside a
+        # line (the dot-licensed line-start rule), predicate substrings in
+        # longer words (the find-based line prefilter), and several
+        # predicate lines per text
+        from hades_spark.functions.triples import (
+            extract_triples, extract_triples_spec)
+
+        s = "".join(frags)
+        assert extract_triples(s) == extract_triples_spec(s)
+
+    def test_several_hit_lines_and_substrings(self):
+        from hades_spark.functions.triples import (
+            extract_triples, extract_triples_spec)
+
+        s = ("reuses nothing here\nA1 uses B2.\nlinkstores\nno hits\n"
+             "C3 linkstores D4. E5 links F6.\nusesX usesX.\nG7 uses H8.\n"
+             "I9\tcites\tJ0.")
+        got = extract_triples(s)
+        assert got == extract_triples_spec(s)
+        assert [(t["subj"], t["pred"], t["obj"]) for t in got] == [
+            ("A1", "uses", "B2"), ("E5", "links", "F6"), ("G7", "uses", "H8"),
+            ("I9", "cites", "J0")]
+
+    def test_corpus_triples_benchmark_shape(self):
+        from hades_spark.functions.triples import (
+            extract_triples, extract_triples_spec)
+        from hades_spark.pipeline.corpus import gen_pages
+
+        for p in gen_pages(60, seed=1, compute_text=True, richness=30):
+            assert extract_triples(p.text) == extract_triples_spec(p.text)
 
     def test_corpus_triples_equivalence(self):
         from hades_spark.functions.triples import (
@@ -130,3 +219,26 @@ class TestCrossLineSentenceStart:
         got = extract_triples(".\n  uses A1 uses B2.")
         assert [(t["subj"], t["pred"], t["obj"], t["start_char"])
                 for t in got] == [("uses A1", "uses", "B2", 4)]
+
+    def test_unicode_whitespace_before_licensed_line(self):
+        # '\x85' and '\u2028' are whitespace to both str.isspace and \s
+        # but do not end a line for split("\n"); a dot before them still
+        # licenses the next line's subject, and without the dot it does not
+        from hades_spark.functions.triples import (extract_triples,
+                                                   extract_triples_spec)
+
+        for s, want in [
+            ("A.\x85\n  uses A1 uses B2.", [("uses A1", "uses", "B2", 6)]),
+            ("A.\u2028\n  uses A1 uses B2.", [("uses A1", "uses", "B2", 6)]),
+            ("A. \x85\n\u2028\n uses A1 uses B2.",
+             [("uses A1", "uses", "B2", 8)]),
+            ("A.\r\n\x0c\n\x1c uses A1 uses B2.",
+             [("uses A1", "uses", "B2", 8)]),
+            ("x.\u2028  uses A1 uses B2.", [("uses A1", "uses", "B2", 5)]),
+            ("A\x85\n  uses A1 uses B2.", []),
+            ("\x85\n  uses A1 uses B2.", []),
+        ]:
+            spec = extract_triples_spec(s)
+            assert extract_triples(s) == spec, s
+            assert [(t["subj"], t["pred"], t["obj"], t["start_char"])
+                    for t in spec] == want, s
