@@ -50,94 +50,6 @@ def normalize_surface_col(c) -> F.Column:
     return F.trim(F.regexp_replace(F.lower(c), r"[^a-z0-9]+", " "))
 
 
-def squash_col(c) -> F.Column:
-    """Normalized form with spaces removed — the shingling basis, so that
-    'Common Crawl' and 'CommonCrawl' share all their 3-grams."""
-    return F.regexp_replace(normalize_surface_col(c), " ", "")
-
-
-def canonical_map(
-    surfaces: DataFrame,
-    surface_col: str = "surface",
-    threshold: float = 0.8,
-    num_hashes: int = 16,
-    bands: int = 16,
-    max_bucket_size: int = 150,
-    max_iter: int = 15,
-    work_partitions: int = 8,
-    local_threshold: int = 20_000,
-) -> DataFrame:
-    """distinct surfaces -> (surface, norm, canonical_id).
-
-    ``max_bucket_size=150`` (tighter than the generic LSH default): an
-    alias pair always shares rare ENTITY-SPECIFIC grams and therefore
-    co-occurs in a small bucket in some band; buckets past ~150 are
-    boilerplate-gram collisions ('the/system/...' substrings) that only
-    generate cross-entity candidate noise. Measured on a 154k-squash
-    vocabulary: cap 500 -> 100 loses ZERO verified pairs and cuts ~27%
-    of the stage wall (the verify join is the stage's dominant cost).
-
-    canonical_id is the lexicographically-smallest normalized form in the
-    surface's alias component; surfaces with no alias partner canonicalize
-    to their own normalized form.
-
-    ``work_partitions`` sizes the LSH/CC stages: the distinct-surface set is
-    orders of magnitude smaller than the corpus, so after the dedup shuffle
-    the work runs on few partitions (tiny-task scheduling overhead would
-    otherwise dominate); raise it when the surface vocabulary is itself
-    huge.
-
-    Adaptive execution (same policy as connected_components): when the
-    distinct normalized vocabulary fits under ``local_threshold`` the alias
-    graph is computed driver-side (exact shingle inverted index + verified
-    containment + union-find — a candidate SUPERSET of the banded-LSH
-    path, so never less complete); the distributed LSH + CC path runs
-    above it. ``local_threshold=0`` forces distributed (tests do).
-    """
-    # localCheckpoint (lazy) rather than .cache(): materialized once on
-    # first action, blocks freed when the frame is GC'd — repeated
-    # canonicalization calls in a long session must not pin storage
-    distinct = (
-        surfaces.select(F.col(surface_col).alias("surface"))
-        .dropDuplicates(["surface"])
-        .repartition(work_partitions)
-        .withColumn("norm", normalize_surface_col(F.col("surface")))
-        .withColumn("squash", squash_col(F.col("surface")))
-        .filter(F.length("squash") > 0)
-        .localCheckpoint(eager=False)
-    )
-
-    # alias pairs between normalized forms (dedup identical norms first:
-    # they cluster for free via the norm key itself)
-    norms = distinct.select("norm", "squash").dropDuplicates(["norm"]) \
-                    .localCheckpoint(eager=False)
-
-    if local_threshold > 0:
-        # count-then-collect, never limit(N).collect(): a global limit over
-        # shuffled input runs CollectLimit's incremental partition scans,
-        # whose overhead grows with partition count
-        if norms.count() <= local_threshold:
-            head = norms.collect()
-            spark = surfaces.sparkSession
-            mapping = _local_canonical(head, threshold, max_bucket_size)
-            map_df = _local_map_df(spark, mapping)
-            return distinct.join(F.broadcast(map_df), "norm", "left") \
-                .select("surface", "norm",
-                        F.coalesce("canonical_id", "norm").alias("canonical_id"))
-
-    norm_map = _distributed_norm_components(
-        norms, threshold, num_hashes, bands, max_bucket_size, max_iter)
-    out = (
-        distinct.join(norm_map, "norm", "left")
-        .select(
-            "surface", "norm",
-            F.coalesce(F.col("canonical_id"), F.col("norm"))
-             .alias("canonical_id"),
-        )
-    )
-    return out
-
-
 def _distributed_norm_components(
     norms: DataFrame,
     threshold: float,
@@ -188,10 +100,28 @@ def canonical_norm_map(
     max_iter: int = 15,
     local_threshold: int = 20_000,
 ) -> DataFrame:
-    """distinct normalized forms -> (norm, canonical_id).
-    (See canonical_map on the tighter bucket cap.) The norm-level
-    core of canonical_map, for callers that normalize surfaces JVM-side
-    (one less distinct/shuffle chain on the hot path)."""
+    """normalized forms (``normalize_surface_col`` output) ->
+    (norm, canonical_id), one row per distinct non-empty norm.
+
+    canonical_id is the lexicographically-smallest norm in the norm's
+    alias component; norms with no alias partner canonicalize to
+    themselves.
+
+    ``max_bucket_size=150`` (tighter than the generic LSH default): an
+    alias pair always shares rare ENTITY-SPECIFIC grams and therefore
+    co-occurs in a small bucket in some band; buckets past ~150 are
+    boilerplate-gram collisions ('the/system/...' substrings) that only
+    generate cross-entity candidate noise. Measured on a 154k-squash
+    vocabulary: cap 500 -> 100 loses ZERO verified pairs and cuts ~27%
+    of the stage wall (the verify join is the stage's dominant cost).
+
+    Adaptive execution (same policy as connected_components): when the
+    distinct vocabulary fits under ``local_threshold`` the alias graph is
+    computed driver-side (exact shingle inverted index + verified
+    containment + union-find — a candidate SUPERSET of the banded-LSH
+    path, so never less complete); the distributed LSH + CC path runs
+    above it. ``local_threshold=0`` forces distributed (tests do).
+    """
     keyed = (
         norms.select(F.col(norm_col).alias("norm"))
         .dropDuplicates(["norm"])

@@ -90,7 +90,7 @@ def connected_components(
     edges.unpersist()
     if not converged:
         # returning silently-unconverged labels would corrupt downstream
-        # canonical_map / near-dup cluster assignments on long chains
+        # canonical_norm_map / near-dup cluster assignments on long chains
         raise RuntimeError(
             f"connected_components: min-label propagation did not converge "
             f"in max_iter={max_iter} rounds (graph diameter exceeds the "

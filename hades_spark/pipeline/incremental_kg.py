@@ -96,14 +96,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from ..functions.triples import raw_triples
-from ..operators.canonicalize import (MAX_ALIAS_SQUASH_LEN,
-                                      normalize_surface_col)
+from ..operators.canonicalize import MAX_ALIAS_SQUASH_LEN
 from ..operators.components import alternating_components
 from ..operators.lsh import (cap_and_self_join, char_shingles, lsh_buckets,
                              pair_scores, touching_pairs_from_buckets)
 from ..sources.io import (delete_by_key, recover_table, replace_table,
                           upsert_by_key, write_table)
-from .kg import apply_canonical_map, distinct_edges
+from .kg import apply_canonical_map, distinct_edges, norm_triples
 
 
 _LSH = dict(num_hashes=16, bands=16, max_bucket_size=150)
@@ -442,14 +441,6 @@ def _bucket_rows(norms: DataFrame) -> DataFrame:
     ).select(F.col("_id").alias("squash"), "band", "bh")
 
 
-def _norm_raw(pages: DataFrame) -> DataFrame:
-    return raw_triples(pages).select(
-        "url", "pred", "confidence",
-        normalize_surface_col(F.col("subj")).alias("subj_norm"),
-        normalize_surface_col(F.col("obj")).alias("obj_norm"),
-    )
-
-
 def _norms_of(raw: DataFrame) -> DataFrame:
     return (
         raw.select(F.explode(F.array("subj_norm", "obj_norm")).alias("norm"))
@@ -619,8 +610,8 @@ def _init_state_locked(spark: SparkSession, pages: DataFrame,
 
         shutil.rmtree(tmp, ignore_errors=True)
     clock = _StageClock()
-    appended = _append_raw_batch(spark, _norm_raw(pages), state_dir,
-                                 batch_id,
+    appended = _append_raw_batch(spark, norm_triples(raw_triples(pages)),
+                                 state_dir, batch_id,
                                  absorbed=_absorbed_ids(meta, "raw"))
     _append_crawl_ts(spark, pages, state_dir, batch_id, meta)
     clock.mark("extract")
@@ -630,7 +621,7 @@ def _init_state_locked(spark: SparkSession, pages: DataFrame,
         # means SAME pages — verify (cheaply, by row count) instead of
         # silently dropping different pages under a reused id
         stored = spark.read.parquet(str(batch_dir)).count()
-        fresh = _norm_raw(pages).count()
+        fresh = norm_triples(raw_triples(pages)).count()
         if stored != fresh:
             raise ValueError(
                 f"init_state: raw/batch={batch_id} already holds {stored} "
@@ -756,7 +747,7 @@ def _incremental_update_locked(spark: SparkSession, new_pages: DataFrame,
                 "edges": spark.read.parquet(f"{state_dir}/edges").count()}
     cur_batch = batch_id or f"b-{uuid.uuid4().hex[:12]}"
     clock = _StageClock()
-    new_raw = _norm_raw(new_pages).localCheckpoint(eager=True)
+    new_raw = norm_triples(raw_triples(new_pages)).localCheckpoint(eager=True)
     clock.mark("extract")
     already_appended = (
         batch_id is not None
@@ -1324,8 +1315,8 @@ def incremental_reingest(spark: SparkSession, pages: DataFrame,
             # pages are extracted here — brand-new urls skip straight to
             # the insert leg, so the batch's dominant extraction cost is
             # paid once, not twice, on the mostly-new-urls crawl shape.
-            new_raw = _norm_raw(
-                pages.join(overlap, "url", "left_semi")) \
+            new_raw = norm_triples(raw_triples(
+                pages.join(overlap, "url", "left_semi"))) \
                 .localCheckpoint(eager=True)
 
             def _fp(rows: DataFrame) -> DataFrame:

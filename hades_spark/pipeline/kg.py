@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions.extractors import extract_text_routed_udf
 from ..functions.keys import edge_content_key_col
+from ..operators.canonicalize import normalize_surface_col
 from .corpus import pages_df
 
 
@@ -36,6 +37,19 @@ def ensure_text(pages: DataFrame) -> DataFrame:
         "text",
         F.coalesce(F.col("text"),
                    extract_text_routed_udf(F.col("url"), F.col("html"))),
+    )
+
+
+def norm_triples(raw: DataFrame) -> DataFrame:
+    """Surface triples (url, subj, pred, obj, confidence) -> the normalized
+    rows every path canonicalizes: (url, pred, confidence, subj_norm,
+    obj_norm). THE single copy of the projection — shared by the build,
+    the staged oracle pipeline, the metered pipeline, incremental
+    maintenance and the deploy path (``persist.materialize_kg``)."""
+    return raw.select(
+        "url", "pred", "confidence",
+        normalize_surface_col(F.col("subj")).alias("subj_norm"),
+        normalize_surface_col(F.col("obj")).alias("obj_norm"),
     )
 
 
@@ -84,19 +98,11 @@ def canonical_triples(
     long-lived sessions that call this repeatedly without cleanup
     accumulate storage until eviction."""
     from ..functions.triples import raw_triples
-    from ..operators.canonicalize import canonical_norm_map, normalize_surface_col
+    from ..operators.canonicalize import canonical_norm_map
 
     # one narrow mapInArrow pass (decode + extract + emit exploded triple
     # rows), then JVM-side surface normalization; cached once
-    raw = (
-        raw_triples(pages)
-        .select(
-            "url", "pred", "confidence",
-            normalize_surface_col(F.col("subj")).alias("subj_norm"),
-            normalize_surface_col(F.col("obj")).alias("obj_norm"),
-        )
-        .cache()
-    )
+    raw = norm_triples(raw_triples(pages)).cache()
     if caches is not None:
         caches.append(raw)
 
@@ -151,18 +157,13 @@ def run_kg_pipeline_staged(spark, n_pages: int = 150, seed: int = 42,
     back, so oracle and query aggregate byte-identical inputs.
     """
     from ..functions.triples import raw_triples
-    from ..operators.canonicalize import normalize_surface_col
     from ..operators.components import alternating_components
     from ..operators.lsh import char_shingles, verified_pairs
 
     if stage_dir is None:
         stage_dir = default_kg_stage_dir()
     pages = pages_df(spark, n_pages, seed=seed, with_text=False)
-    raw = raw_triples(pages).select(
-        "url", "pred", "confidence",
-        normalize_surface_col(F.col("subj")).alias("subj_norm"),
-        normalize_surface_col(F.col("obj")).alias("obj_norm"),
-    )
+    raw = norm_triples(raw_triples(pages))
     raw.write.mode("overwrite").parquet(f"{stage_dir}/raw")
     raw = spark.read.parquet(f"{stage_dir}/raw")
 

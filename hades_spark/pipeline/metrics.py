@@ -114,20 +114,13 @@ def run_kg_pipeline_metered(
     from pyspark.sql import functions as F
 
     from ..functions.triples import raw_triples
-    from ..operators.canonicalize import (canonical_norm_map,
-                                          normalize_surface_col)
-    from .kg import apply_canonical_map, distinct_edges
+    from ..operators.canonicalize import canonical_norm_map
+    from .kg import apply_canonical_map, distinct_edges, norm_triples
 
     metrics = StageMetrics(spark, metrics_path, run_id)
 
     with metrics.stage("extract_triples") as s:
-        raw = (
-            raw_triples(pages)
-            .select("url", "pred", "confidence",
-                    normalize_surface_col(F.col("subj")).alias("subj_norm"),
-                    normalize_surface_col(F.col("obj")).alias("obj_norm"))
-            .localCheckpoint(eager=True)
-        )
+        raw = norm_triples(raw_triples(pages)).localCheckpoint(eager=True)
         s.rows = raw.count()
 
     with metrics.stage("canonicalize") as s:

@@ -11,11 +11,14 @@ rule; identical partitioning):
     <out>/manifest/             stage/unit completion records
     <out>/metrics/              per-stage row counts + durations
 
-Stage 1 (extract+mention+triple) is embarrassingly parallel and runs
-unit-by-unit under the manifest — a killed run resumes at the first
-incomplete unit. Stages 2-3 (canonicalize, edge dedup) are global joins
-over the (tiny) distinct-surface set and the triple table; they are
-idempotent overwrites, so resume = rerun.
+Stage 1 (extract+mention+triple) is embarrassingly parallel: every
+pending manifest unit is written in one pass partitioned by unit, then
+recorded — a killed run re-runs the units of the interrupted pass and
+skips the recorded ones. The edge stage is the build's own chain
+(``kg.norm_triples`` -> ``canonical_norm_map`` -> ``apply_canonical_map``
+-> ``distinct_edges``) over the raw-triple table, so the deploy path writes
+the same edges as ``distinct_edges(canonical_triples(pages))``; it is an
+idempotent overwrite, so resume = rerun.
 """
 
 from __future__ import annotations
@@ -24,18 +27,17 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions.keys import edge_content_key_col
 from ..functions.mentions import detect_mentions_udf
 from ..functions.triples import extract_triples_udf
-from ..operators.canonicalize import canonical_map
+from ..operators.canonicalize import canonical_norm_map
 from ..sources.manifest import Manifest, run_stage_with_resume
-from .kg import ensure_text
+from .kg import apply_canonical_map, distinct_edges, ensure_text, norm_triples
 
 
-def _stage1(unit_df: DataFrame) -> DataFrame:
+def _stage1(pages: DataFrame) -> DataFrame:
     """extract text + mentions + surface triples in ONE narrow pass
     (single scan of html, no shuffle)."""
-    pages = ensure_text(unit_df)
+    pages = ensure_text(pages)
     return pages.select(
         "url", "warc_ts", "lang", "text",
         detect_mentions_udf("url", "html", "text").alias("mentions"),
@@ -88,29 +90,16 @@ def materialize_kg(
                     spark.read.parquet(f"{out_dir}/raw_triples").count(),
                     round(time.perf_counter() - t0, 3)))
 
-    # global stages: canonicalization + edge materialization
+    # global stage: the build's canonicalize + dedup chain
     t0 = time.perf_counter()
-    raw = spark.read.parquet(f"{out_dir}/raw_triples")
-    surfaces = raw.select(F.explode(F.array("subj", "obj")).alias("surface"))
-    cmap = F.broadcast(canonical_map(surfaces, threshold=threshold).cache())
-    edges = (
-        raw.join(cmap.select(F.col("surface").alias("subj"),
-                             F.col("canonical_id").alias("subj_id")), "subj", "left")
-        .join(cmap.select(F.col("surface").alias("obj"),
-                          F.col("canonical_id").alias("obj_id")), "obj", "left")
-        .select(
-            F.coalesce("subj_id", "subj").alias("subj"), "pred",
-            F.coalesce("obj_id", "obj").alias("obj"), "url", "confidence",
-        )
-        .groupBy("subj", "pred", "obj")
-        .agg(F.max("confidence").alias("confidence"),
-             F.min("url").alias("url"),
-             F.count("*").cast("bigint").alias("support"))
-        .withColumn("edge_key", edge_content_key_col(
-            F.col("subj"), F.col("obj"), F.col("pred")))
-    )
-    edges.write.mode("overwrite").partitionBy("pred") \
+    raw = norm_triples(spark.read.parquet(f"{out_dir}/raw_triples"))
+    norms = raw.select(
+        F.explode(F.array("subj_norm", "obj_norm")).alias("norm"))
+    cmap = canonical_norm_map(norms, threshold=threshold).cache()
+    distinct_edges(apply_canonical_map(raw, cmap)) \
+        .write.mode("overwrite").partitionBy("pred") \
         .parquet(f"{out_dir}/edges")
+    cmap.unpersist()
     n_edges = spark.read.parquet(f"{out_dir}/edges").count()
     metrics.append((run_id, "edges", n_edges,
                     round(time.perf_counter() - t0, 3)))

@@ -5,7 +5,9 @@ The reference persists a completed/failed set after every item
 (``sync.py:265-356``); restated Spark-first as an append-only manifest
 parquet table — resuming a stage = anti-join the input's unit ids against
 the manifest's completed set (I3 / U3 semantics), so re-runs are idempotent
-and a killed run continues exactly where it stopped.
+and a killed run re-runs only the units it had not recorded. A stage writes
+all of its pending units in one pass partitioned by unit and records them
+afterwards, so a kill mid-pass re-runs that whole pass.
 
 Units are logical partitions of the input (e.g. url-hash buckets), not
 Spark task partitions — stable across cluster sizes, which is what makes
@@ -43,9 +45,16 @@ class Manifest:
 
     def record(self, stage: str, unit: int, status: str = "completed",
                rows_out: int = 0, error: str | None = None) -> None:
-        row = [(stage, unit, status, rows_out, error, self.run_id,
-                dt.datetime.now(dt.timezone.utc).replace(tzinfo=None))]
-        self.spark.createDataFrame(row, MANIFEST_SCHEMA) \
+        self.record_many(stage, [(unit, rows_out)], status, error)
+
+    def record_many(self, stage: str, units: list[tuple[int, int]],
+                    status: str = "completed",
+                    error: str | None = None) -> None:
+        """Append one row per ``(unit, rows_out)`` in a single write."""
+        ts = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+        rows = [(stage, u, status, n, error, self.run_id, ts)
+                for u, n in units]
+        self.spark.createDataFrame(rows, MANIFEST_SCHEMA) \
             .write.mode("append").parquet(self.path)
 
     def pending(self, df: DataFrame, stage: str, unit_col: str = "unit") -> DataFrame:
@@ -71,32 +80,36 @@ def run_stage_with_resume(
     out_path: str,
     key_col: str,
     n_units: int = 16,
-    partition_by: list[str] | None = None,
 ) -> None:
-    """Run ``transform(unit_df) -> DataFrame`` per pending unit, writing each
-    unit's output to its own ``unit=<u>/`` partition directory with
-    mode=overwrite, then recording completion. A crash BETWEEN the write and
-    the manifest record is safe: the resume re-runs the unit and the
-    overwrite replaces the orphaned output instead of appending a duplicate
-    (the committed-but-unrecorded window an append-based design has).
-    ``spark.read.parquet(out_path)`` discovers ``unit`` as a partition
-    column, so downstream readers also get the lineage of which bucket each
-    row came from for free.
+    """Run ``transform(df) -> DataFrame`` over every pending unit in ONE
+    write partitioned by ``unit`` (``<out_path>/unit=<u>/``) with dynamic
+    partition overwrite, then record the pending units in one manifest
+    append. ``transform`` must keep ``key_col``: the unit is re-derived
+    from it after the transform.
+
+    Crash safety is overwrite-then-record: a crash BETWEEN the write and
+    the manifest record leaves those units pending, and the resume
+    rewrites their partitions instead of appending a duplicate (the
+    committed-but-unrecorded window an append-based design has). The
+    trade of the single pass: a killed run re-runs every unit of the
+    interrupted pass, not just one. ``spark.read.parquet(out_path)``
+    discovers ``unit`` as a partition column, so downstream readers also
+    get the lineage of which bucket each row came from for free.
 
     Unit-granular, not row-granular: at 100 TB the manifest stays tiny
-    (n_units rows per stage) while still bounding recomputation to one
-    unit's worth of work.
+    (n_units rows per stage).
     """
-    keyed = with_unit(inp, key_col, n_units)
-    todo = manifest.pending(keyed, stage)
-    units = [r["unit"] for r in todo.select("unit").distinct().collect()]
-    for u in sorted(units):
-        unit_df = keyed.filter(F.col("unit") == u).drop("unit")
-        out = transform(unit_df).cache()
-        n = out.count()  # materializes the cache; write reuses it
-        w = out.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(f"{out_path}/unit={u}")
-        out.unpersist()
-        manifest.record(stage, u, "completed", rows_out=n)
+    todo = manifest.pending(with_unit(inp, key_col, n_units), stage)
+    units = sorted(r["unit"] for r in todo.select("unit").distinct().collect())
+    if not units:
+        return
+    out = with_unit(transform(todo.drop("unit")), key_col, n_units)
+    out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic") \
+        .partitionBy("unit").parquet(out_path)
+    # explicit schema: the read stays valid when no unit wrote a row
+    written = dict(
+        manifest.spark.read.schema(out.schema).parquet(out_path)
+        .filter(F.col("unit").isin(units))
+        .groupBy("unit").count().collect()
+    )
+    manifest.record_many(stage, [(u, written.get(u, 0)) for u in units])

@@ -4,7 +4,9 @@ import shutil
 
 from pyspark.sql import functions as F
 
+from hades_spark.functions.triples import raw_triples
 from hades_spark.pipeline.incremental_kg import incremental_update, init_state
+from hades_spark.pipeline.kg import norm_triples
 from hades_spark.schemas import PAGES
 
 
@@ -18,6 +20,11 @@ def _page(i, sentence):
 
 def _pages(spark, rows):
     return spark.createDataFrame([_page(i, s) for i, s in rows], PAGES)
+
+
+def _norm_raw(pages):
+    """The normalized raw-triple rows an update appends for its batch."""
+    return norm_triples(raw_triples(pages))
 
 
 BATCH1 = [(0, "AlphaBeta uses Zeta."),
@@ -128,8 +135,7 @@ class TestExactlyOnceResume:
         cmap/edges caught up: re-running the update with the same
         batch_id must converge to the full-rebuild result, counting the
         batch exactly once."""
-        from hades_spark.pipeline.incremental_kg import (
-            _append_raw_batch, _norm_raw)
+        from hades_spark.pipeline.incremental_kg import _append_raw_batch
 
         inc = str(tmp_path / "crash")
         full = str(tmp_path / "crashfull")
@@ -170,8 +176,7 @@ class TestAdviceR4:
         batch (incomplete state), then an id-less update with DIFFERENT
         pages arrives — its pages must be counted, not silently no-op'd
         under a colliding fixed 'init' id."""
-        from hades_spark.pipeline.incremental_kg import (
-            _append_raw_batch, _norm_raw)
+        from hades_spark.pipeline.incremental_kg import _append_raw_batch
 
         inc = str(tmp_path / "initcrash")
         # a crashed init: default-id batch committed, nothing else
@@ -187,8 +192,7 @@ class TestAdviceR4:
         """ADVICE r3: all-numeric caller ids make Hive infer the batch
         partition column as int; the resume/store filters must compare as
         string, not NULL-out and drop every stored row."""
-        from hades_spark.pipeline.incremental_kg import (
-            _append_raw_batch, _norm_raw)
+        from hades_spark.pipeline.incremental_kg import _append_raw_batch
 
         inc = str(tmp_path / "numeric")
         full = str(tmp_path / "numfull")

@@ -190,6 +190,46 @@ class TestManifestResume:
                               n_units=2)
         assert spark.read.parquet(f"{tmp}/out").count() == n1 == 10
 
+    def test_manifest_lineage(self, spark, tmp):
+        """One completed row per input unit, rows_out = the unit's written
+        rows (0 when the transform emits nothing); a rerun adds no rows
+        and rewrites no files."""
+        from pathlib import Path
+
+        inp = spark.createDataFrame([(f"u{i}", i) for i in range(40)],
+                                    "key string, v int")
+        units = {r["unit"]: r["n"] for r in with_unit(inp, "key", 4)
+                 .groupBy("unit").agg(F.count("*").alias("n")).collect()}
+        assert len(units) == 4
+        empty = min(units)
+
+        def xform(df):
+            # the transform drops every row of one unit
+            return with_unit(df, "key", 4).filter(F.col("unit") != empty) \
+                .drop("unit")
+
+        m = Manifest(spark, f"{tmp}/m", "runL")
+        run_stage_with_resume(m, "s", inp, xform, f"{tmp}/out", "key",
+                              n_units=4)
+        rows = spark.read.parquet(f"{tmp}/m").collect()
+        assert sorted(r["unit"] for r in rows) == sorted(units)
+        assert all(r["status"] == "completed" and r["stage"] == "s"
+                   for r in rows)
+        written = {r["unit"]: r["count"] for r in spark.read.parquet(
+            f"{tmp}/out").groupBy("unit").count().collect()}
+        assert empty not in written
+        assert {r["unit"]: r["rows_out"] for r in rows} == \
+            {u: (0 if u == empty else n) for u, n in units.items()} == \
+            {u: written.get(u, 0) for u in units}
+
+        files = {f: f.stat().st_mtime_ns
+                 for f in Path(tmp).rglob("*") if f.is_file()}
+        run_stage_with_resume(m, "s", inp, xform, f"{tmp}/out", "key",
+                              n_units=4)
+        assert spark.read.parquet(f"{tmp}/m").count() == len(rows)
+        assert {f: f.stat().st_mtime_ns
+                for f in Path(tmp).rglob("*") if f.is_file()} == files
+
 
 class TestIncremental:
     def test_watermark_advances_and_filters(self, spark, tmp):

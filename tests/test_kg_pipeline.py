@@ -98,20 +98,25 @@ class TestAdaptiveExecution:
                 for r in connected_components(pairs, local_threshold=0).collect()}
         assert local == dist
 
-    def test_canonical_local_vs_distributed(self, spark):
-        from hades_spark.operators.canonicalize import canonical_map
+    @staticmethod
+    def _canonical_by_surface(spark, surfaces, **kw):
+        """canonical_norm_map over the normalize_surface'd inputs, read
+        back per surface."""
+        from hades_spark.operators.canonicalize import (canonical_norm_map,
+                                                        normalize_surface)
 
-        surfaces = spark.createDataFrame(
-            [("HADES",), ("hades",), ("H.A.D.E.S.",), ("the HADES system",),
-             ("Apache Spark",), ("Spark",), ("apache spark",),
-             ("PostgreSQL",), ("Postgres",), ("unrelated thing",)],
-            "surface string")
-        local = {(r["surface"], r["canonical_id"])
-                 for r in canonical_map(surfaces).collect()}
-        dist = {(r["surface"], r["canonical_id"])
-                for r in canonical_map(surfaces, local_threshold=0).collect()}
-        assert local == dist
-        by_surface = dict(local)
+        norms = spark.createDataFrame(
+            [(normalize_surface(s),) for s in surfaces], "norm string")
+        by_norm = dict(canonical_norm_map(norms, **kw).collect())
+        return {s: by_norm[normalize_surface(s)] for s in surfaces}
+
+    def test_canonical_local_vs_distributed(self, spark):
+        surfaces = ["HADES", "hades", "H.A.D.E.S.", "the HADES system",
+                    "Apache Spark", "Spark", "apache spark",
+                    "PostgreSQL", "Postgres", "unrelated thing"]
+        by_surface = self._canonical_by_surface(spark, surfaces)
+        assert self._canonical_by_surface(
+            spark, surfaces, local_threshold=0) == by_surface
         assert by_surface["HADES"] == by_surface["the HADES system"]
         assert by_surface["Apache Spark"] == by_surface["Spark"]
         assert by_surface["PostgreSQL"] == by_surface["Postgres"]
@@ -125,30 +130,27 @@ class TestAdaptiveExecution:
         squash-identical giants still merge via the squash key, and the
         local and distributed paths agree on all of it."""
         from hades_spark.operators.canonicalize import (
-            MAX_ALIAS_SQUASH_LEN, canonical_map)
+            MAX_ALIAS_SQUASH_LEN, normalize_surface)
 
         blob = "alphaproject " + "page window batch scan " * (
             MAX_ALIAS_SQUASH_LEN // 10)
         assert len(blob.replace(" ", "")) > MAX_ALIAS_SQUASH_LEN
-        surfaces = spark.createDataFrame(
-            [("AlphaProject",), ("the AlphaProject system",),
-             (blob,), (blob.upper(),),            # squash-identical pair
-             (blob + " tail",)],                  # a DIFFERENT giant
-            "surface string")
-        local = {(r["surface"], r["canonical_id"])
-                 for r in canonical_map(surfaces).collect()}
-        dist = {(r["surface"], r["canonical_id"])
-                for r in canonical_map(surfaces, local_threshold=0)
-                .collect()}
-        assert local == dist
-        by = dict(local)
+        # same squash as blob, but a DIFFERENT norm (one space dropped)
+        blob_joined = blob.upper().replace(" ", "", 1)
+        assert normalize_surface(blob_joined) != normalize_surface(blob)
+        surfaces = ["AlphaProject", "the AlphaProject system",
+                    blob, blob_joined,            # squash-identical pair
+                    blob + " tail"]               # a DIFFERENT giant
+        by = self._canonical_by_surface(spark, surfaces)
+        assert self._canonical_by_surface(
+            spark, surfaces, local_threshold=0) == by
         # short alias pair still clusters
         assert by["AlphaProject"] == by["the AlphaProject system"]
         # the giant CONTAINS 'alphaproject' (containment 1.0 on the
         # short side) but is excluded from candidates by the cap
         assert by[blob] != by["AlphaProject"]
         # squash-identical giants merge with no shingles at all
-        assert by[blob] == by[blob.upper()]
+        assert by[blob] == by[blob_joined]
         # distinct giants stay apart
         assert by[blob + " tail"] != by[blob]
 

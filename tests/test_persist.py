@@ -1,11 +1,14 @@
 """Materialized-pipeline tests: tables land, resume is exact."""
 
+import datetime as dt
 import shutil
 
 from pyspark.sql import functions as F
 
 from hades_spark.pipeline.corpus import pages_df
+from hades_spark.pipeline.kg import canonical_triples, distinct_edges
 from hades_spark.pipeline.persist import materialize_kg
+from hades_spark.schemas import PAGES
 from hades_spark.sources.manifest import Manifest
 
 
@@ -25,6 +28,26 @@ class TestMaterialize:
         mentions = spark.read.parquet(f"{out}/mentions")
         assert {r["kind"] for r in mentions.select("kind").distinct().collect()} \
             >= {"link", "code"}
+
+    def test_deploy_edges_equal_build_edges(self, spark, tmp_path):
+        """The deploy path writes exactly the build's edges, including for
+        surfaces that normalize to empty (non-ASCII-only, punctuation-only)."""
+        odd = spark.createDataFrame(
+            [("https://odd.example/0.html",
+              dt.datetime(2025, 1, 1, tzinfo=dt.timezone.utc),
+              "<html><body><p>日本 uses Spark. -- stores Data.</p>"
+              "</body></html>".encode(), None, "en")], PAGES)
+        pages = pages_df(spark, 60, seed=5, with_text=False).unionByName(odd)
+        out = str(tmp_path / "kg")
+        materialize_kg(spark, pages, out, n_units=4)
+        cols = ["subj", "pred", "obj", "edge_key", "support", "confidence",
+                "url"]
+        got = spark.read.parquet(f"{out}/edges").select(*cols)
+        want = distinct_edges(canonical_triples(pages)).select(*cols)
+        assert got.filter(F.col("url") == "https://odd.example/0.html") \
+            .count() == 2
+        assert got.exceptAll(want).count() == 0
+        assert want.exceptAll(got).count() == 0
 
     def test_crash_resume_byte_identical(self, spark, tmp_path):
         pages = pages_df(spark, 50, seed=9, with_text=False)
