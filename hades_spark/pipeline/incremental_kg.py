@@ -51,6 +51,15 @@ count stayed under it (800k-base bench, ~280 edge diffs).
      partitions the keys name are rewritten, no moved-key scan runs, and
      the keys a component merge dissolved are deleted in the same pass.
 
+``incremental_delete`` runs the same steps with the signs flipped (a
+purge, re-paired downward cap crossings, removed norms), and
+``incremental_reingest`` is a delete leg then an update leg. The steps
+they share are written once: ``_open_state`` (heal compactions and a
+pairs/cmap swap crash window, init or refuse an incomplete state, replay
+a completed id, build a missing bucket store once, refuse older table
+layouts), ``_verified_pairs``, ``_recluster`` (scope, components, new
+map, ``changed``), ``_rewrite_edges`` and ``_auto_compact``.
+
 Every batch-sized intermediate is materialized exactly once, and the
 update is latency-bound (its Spark job count sets its wall time), so:
 dedup only where multiplicity or a broadcast's size needs it — never
@@ -88,6 +97,7 @@ import contextlib
 import functools
 import json
 import os
+import shutil
 import time
 import uuid
 from pathlib import Path
@@ -119,7 +129,7 @@ _STORE_COLS = {"raw": _RAW_COLS, "buckets": ["squash", "band", "bh"],
                "crawl_ts": ["url", "warc_ts"]}
 # batch-dir stores that append/compact/heal together. crawl_ts is a tiny
 # (url, warc_ts) sidecar — one row per url per ingesting batch — consulted
-# only by incremental_reingest's newer_only ordering guard (raw rows don't
+# only by incremental_reingest's crawl-ordering guard (raw rows don't
 # carry the crawl timestamp; storing it per-row would bloat every triple).
 # Legacy states without the dir just skip the guard.
 _BATCH_STORES = ("raw", "buckets", "crawl_ts")
@@ -276,8 +286,6 @@ def _heal_compactions(state_dir: str, meta: dict) -> None:
             # delete absorbed dirs only once the combined data is live
             # (or was itself absorbed by a later compaction)
             if dest.exists() or rec["id"] in _absorbed_ids(meta, store):
-                import shutil
-
                 for aid in absorbed:
                     shutil.rmtree(root / f"batch={aid}",
                                   ignore_errors=True)
@@ -288,8 +296,6 @@ def _heal_compactions(state_dir: str, meta: dict) -> None:
         for tmp in root.glob(".compact-*.tmp"):
             cid = tmp.name[len(".compact-"):-len(".tmp")]
             if cid not in recorded:
-                import shutil
-
                 shutil.rmtree(tmp, ignore_errors=True)
 
 
@@ -369,11 +375,19 @@ def _compact_state_locked(spark: SparkSession, state_dir: str,
     return {"compacted": True, "id": cid, **stats}
 
 
-def _read_raw(spark: SparkSession, state_dir: str) -> DataFrame:
+def _read_raw(spark: SparkSession, state_dir: str,
+              exclude: str | None = None) -> DataFrame:
     """The raw store is laid out as ``raw/batch=<id>/`` partitions (each
     appended with an atomic dir rename — exactly-once); project away the
-    batch partition column."""
-    return spark.read.parquet(f"{state_dir}/raw").select(*_RAW_COLS)
+    batch partition column, after dropping batch ``exclude`` if given.
+    The batch column is compared AS STRING: Hive inference types an
+    all-numeric id set as int, and an int-vs-string comparison would NULL
+    out and drop every row (ADVICE r3)."""
+    raw = spark.read.parquet(f"{state_dir}/raw")
+    if exclude is not None:
+        raw = raw.filter(
+            F.col("batch").cast("string") != F.lit(str(exclude)))
+    return raw.select(*_RAW_COLS)
 
 
 def _append_batch_dir(df: DataFrame, state_dir: str, sub: str,
@@ -407,7 +421,7 @@ def _append_crawl_ts(spark: SparkSession, pages: DataFrame,
     """Record the batch's per-url crawl timestamp in the ``crawl_ts``
     sidecar (one tiny row per url; max over in-batch duplicates). Fed by
     init/update/reingest; consulted only by ``incremental_reingest``'s
-    newer_only ordering guard. Tolerates ts-less callers (legacy frames)
+    crawl-ordering guard. Tolerates ts-less callers (legacy frames)
     — the guard simply has nothing to compare for those urls. Idempotent
     per batch id (same atomic-dir-rename machinery as raw).
     ``incremental_delete`` leaves sidecar entries in place: they are
@@ -503,14 +517,81 @@ def _live_buckets(bk: DataFrame, norms: DataFrame) -> DataFrame:
     )
 
 
-def _relabeled(old_cmap: DataFrame, sub_cmap: DataFrame) -> DataFrame:
-    """Norms of the recomputed sub-map whose canonical id changed,
-    materialized. Only sub-map norms can change label; a new norm has no
-    old label and counts as changed."""
-    old = old_cmap.withColumnRenamed("canonical_id", "_old")
-    return old.join(sub_cmap, "norm", "right") \
+def _verified_pairs(cand: DataFrame, threshold: float) -> DataFrame:
+    """Candidate pairs (a, b, band, bh) -> the verified ones, keeping
+    their generating bucket (the pairs store is provenance rows, so the
+    cap can be re-evaluated as buckets change), materialized. Only the
+    squashes of a candidate re-shingle, from the squash STRING itself (no
+    raw re-scan); ``pair_scores`` materializes their hashed form once."""
+    keyed = (
+        cand.select(F.explode(F.array("a", "b")).alias("squash"))
+        .dropDuplicates(["squash"])
+        .select(F.col("squash").alias("_id"),
+                char_shingles(F.col("squash"), 3).alias("sh"))
+        .filter(F.size("sh") > 0)
+    )
+    return pair_scores(cand, keyed, threshold, "containment",
+                       keep_cols=("band", "bh")) \
+        .select("a", "b", "band", "bh").localCheckpoint(eager=True)
+
+
+def _recluster(old_cmap: DataFrame, seed_pairs: DataFrame,
+               pairs: DataFrame, store: DataFrame, clock: _StageClock,
+               added: DataFrame | None = None,
+               removed: DataFrame | None = None
+               ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Recompute the components an update or delete can have changed.
+
+    The scope is every old component holding a squash of ``seed_pairs``
+    or of the ``added`` (new) / ``removed`` (norm, squash) frames: live
+    pairs never span components, so whole components keep the min-norm
+    labels globally correct, and any norm of a squash witnesses its old
+    component (squash-identical norms share one). ``sub_norms`` (scope
+    minus removed plus added) is clustered over the ``pairs`` rows LIVE
+    in the post-operation bucket ``store`` — >= 1 generating bucket under
+    the cap, exactly the pairs a full rebuild would generate.
+
+    Returns ``sub_norms``, ``new_cmap`` and ``changed`` (the sub-map
+    norms whose canonical id changed; a new norm counts), each
+    materialized. No dedup: each set only feeds a semi/anti join."""
+    sq = F.regexp_replace("norm", " ", "").alias("squash")
+    seeds = seed_pairs.select(F.explode(F.array("a", "b")).alias("squash"))
+    for norms in (added, removed):
+        if norms is not None:
+            seeds = seeds.unionByName(norms.select("squash"))
+    affected_ids = old_cmap.select(sq, "canonical_id") \
+        .join(F.broadcast(seeds), "squash", "left_semi") \
+        .select("canonical_id")
+    sub_norms = old_cmap \
+        .join(F.broadcast(affected_ids), "canonical_id", "left_semi")
+    if removed is not None:
+        sub_norms = sub_norms.join(removed.select("norm"), "norm",
+                                   "left_anti")
+    sub_norms = sub_norms.select("norm", sq)
+    if added is not None:
+        sub_norms = sub_norms.unionByName(added.select("norm", "squash"))
+    sub_norms = sub_norms.localCheckpoint(eager=True)
+    clock.mark("scope")
+    sub_pairs = pairs.join(
+        F.broadcast(sub_norms.select(F.col("squash").alias("a"))), "a",
+        "left_semi") \
+        .join(_live_buckets(store, sub_norms), ["band", "bh"], "left_semi")
+    sub_cmap = _cmap_from_pairs(sub_norms, sub_pairs) \
+        .localCheckpoint(eager=True)
+    # materialized once: the edge rewrite maps through it twice and the
+    # commit writes it. It drops sub_norms and the removed norms (each
+    # in scope via its own squash) from the old map: both materialized
+    gone = sub_norms.select("norm")
+    if removed is not None:
+        gone = gone.unionByName(removed.select("norm"))
+    new_cmap = old_cmap.join(F.broadcast(gone), "norm", "left_anti") \
+        .unionByName(sub_cmap).localCheckpoint(eager=True)
+    clock.mark("components")
+    changed = old_cmap.withColumnRenamed("canonical_id", "_old") \
+        .join(sub_cmap, "norm", "right") \
         .filter(~F.col("_old").eqNullSafe(F.col("canonical_id"))) \
         .select("norm").localCheckpoint(eager=True)
+    return sub_norms, new_cmap, changed
 
 
 def _row_counts(frames: dict[str, DataFrame]) -> dict[str, int]:
@@ -606,8 +687,6 @@ def _init_state_locked(spark: SparkSession, pages: DataFrame,
     Path(state_dir, "raw").mkdir(parents=True, exist_ok=True)
     # sweep half-written append tmp dirs from a crashed previous attempt
     for tmp in Path(state_dir, "raw").glob(".batch-*.tmp-*"):
-        import shutil
-
         shutil.rmtree(tmp, ignore_errors=True)
     clock = _StageClock()
     appended = _append_raw_batch(spark, norm_triples(raw_triples(pages)),
@@ -677,6 +756,100 @@ def _init_state_locked(spark: SparkSession, pages: DataFrame,
     })
 
 
+class _State:
+    """An opened state dir: its manifest plus its pairs, cmap and bucket
+    tables, each read on first use (each read costs a Spark job, and
+    reingest itself reads none). A table of an older layout, which the
+    incremental == full-rebuild invariant cannot hold over, is refused."""
+
+    def __init__(self, spark: SparkSession, state_dir: str,
+                 meta: dict) -> None:
+        self.spark, self.dir, self.meta = spark, state_dir, meta
+
+    def _read(self, table: str, col: str, legacy: str) -> DataFrame:
+        df = self.spark.read.parquet(f"{self.dir}/{table}")
+        if col not in df.columns:
+            raise ValueError(
+                f"{self.dir}/{table} {legacy}; rebuild the state with "
+                f"init_state over the full corpus once.")
+        return df
+
+    @functools.cached_property
+    def pairs(self) -> DataFrame:
+        return self._read(
+            "pairs", "band", "lacks bucket provenance (band, bh): a "
+            "pre-provenance state's pairs cannot be re-evaluated against "
+            "the cap as buckets change")
+
+    @functools.cached_property
+    def cmap(self) -> DataFrame:
+        return self.spark.read.parquet(f"{self.dir}/cmap")
+
+    @functools.cached_property
+    def buckets(self) -> DataFrame:
+        """(squash, band, bh, batch)"""
+        return self._read(
+            "buckets", "squash", "is keyed by norm: a pre-squash-level "
+            "state's bucket populations use other cap semantics than the "
+            "full rebuild")
+
+
+def _open_state(spark: SparkSession, state_dir: str, op_id: str | None,
+                init_pages: DataFrame | None = None,
+                threshold: float = 0.8) -> _State | dict:
+    """The entry step of update, delete and reingest (under the lock).
+    It first heals a previous run's crash windows — a half-applied
+    compaction could double-expose absorbed batch dirs, and a restored
+    pairs/cmap swap flips the state complete. Then:
+
+    - an incomplete state (fresh, or a crashed init) is built from
+      ``init_pages`` under the CALLER'S id, so a resume of this batch
+      finds its batch=<id> marker instead of double-counting under a
+      second id (an id-less init gets a UNIQUE id: a fixed "init" could
+      collide with a crashed init's raw/batch=init of DIFFERENT pages and
+      drop the new ones); without ``init_pages`` it is refused;
+    - a completed ``op_id`` is an exactly-once replay, a no-op (its dir
+      may have been compacted away);
+    - a state older than the bucket store gets the store built once,
+      from every raw batch but ``op_id``'s.
+
+    Returns the ``_State``, or the init/replay stats to return as-is."""
+    meta = _load_meta(state_dir)
+    _heal_compactions(state_dir, meta)
+    recover_table(f"{state_dir}/pairs")
+    recover_table(f"{state_dir}/cmap")
+    if not _state_complete(state_dir):
+        if init_pages is None:
+            raise ValueError(
+                f"{state_dir} is not a complete state (crashed init?); "
+                f"finish the build via incremental_update first")
+        _init_state_locked(spark, init_pages, state_dir, threshold,
+                           batch_id=op_id or f"init-{uuid.uuid4().hex[:12]}")
+        return {"initialized": True,
+                "edges": spark.read.parquet(f"{state_dir}/edges").count()}
+    if op_id is not None and op_id in meta["completed"]:
+        return {"initialized": False, "replayed": True,
+                "edges": spark.read.parquet(f"{state_dir}/edges").count()}
+    if not any(Path(state_dir, "buckets").glob("batch=*")):
+        _append_batch_dir(
+            _bucket_rows(_norms_of(_read_raw(spark, state_dir, op_id))),
+            state_dir, "buckets", "rebuild")
+    return _State(spark, state_dir, meta)
+
+
+def _auto_compact(spark: SparkSession, state_dir: str, stats: dict,
+                  every: int | None) -> None:
+    """Once the raw store holds ``every`` batch dirs, compact them into
+    one baseline batch (``None`` disables); update and reingest end with
+    it. It is a separate commit AFTER the operation's completed-marker —
+    a crash between the two leaves a committed operation and a no-op'd
+    compaction, nothing half-done."""
+    if every is not None and \
+            len(list(Path(state_dir, "raw").glob("batch=*"))) >= every:
+        stats["compaction"] = _compact_state_locked(spark, state_dir,
+                                                    min_batches=2)
+
+
 def incremental_update(spark: SparkSession, new_pages: DataFrame,
                        state_dir: str, threshold: float = 0.8,
                        batch_id: str | None = None,
@@ -696,9 +869,7 @@ def incremental_update(spark: SparkSession, new_pages: DataFrame,
     by compacting them into one baseline batch, so an unattended
     thousand-update stream keeps O(1) dirs without anyone remembering to
     call ``compact_state``. Pass ``None`` to disable (callers that
-    schedule compaction themselves). The compaction is a separate commit
-    AFTER this batch's completed-marker — a crash between the two leaves
-    a committed update and a no-op'd compaction, nothing half-done.
+    schedule compaction themselves).
 
     Takes the single-writer lock for the whole update (two concurrent
     updaters raise StateLockedError instead of interleaving manifests).
@@ -706,45 +877,17 @@ def incremental_update(spark: SparkSession, new_pages: DataFrame,
     with _state_lock(state_dir):
         stats = _incremental_update_locked(spark, new_pages, state_dir,
                                            threshold, batch_id)
-        if compact_every_n_batches is not None and not stats.get("replayed"):
-            n_dirs = len(list(
-                (Path(state_dir) / "raw").glob("batch=*")))
-            if n_dirs >= compact_every_n_batches:
-                stats["compaction"] = _compact_state_locked(
-                    spark, state_dir, min_batches=2)
+        if not stats.get("replayed"):
+            _auto_compact(spark, state_dir, stats, compact_every_n_batches)
         return stats
 
 
 def _incremental_update_locked(spark: SparkSession, new_pages: DataFrame,
                                state_dir: str, threshold: float = 0.8,
                                batch_id: str | None = None) -> dict:
-    # heal any crash window from a previous run's atomic swaps AND any
-    # half-applied compaction BEFORE deciding the path (a restored
-    # pairs/cmap flips the state complete; an unfinished compaction
-    # could double-expose absorbed batch dirs)
-    meta = _load_meta(state_dir)
-    _heal_compactions(state_dir, meta)
-    recover_table(f"{state_dir}/pairs")
-    recover_table(f"{state_dir}/cmap")
-    if not _state_complete(state_dir):
-        # fresh state OR a crashed init: (re-)run the full build under the
-        # CALLER'S batch id, so a later resume of this same batch is
-        # recognized by the append's batch=<id> marker instead of being
-        # double-counted under a second id. A caller-less init gets a
-        # UNIQUE id — a fixed "init" id could collide with a half-built
-        # raw/batch=init left by a crashed earlier init with DIFFERENT
-        # pages, silently dropping the new pages (ADVICE r3).
-        _init_state_locked(spark, new_pages, state_dir, threshold,
-                           batch_id=batch_id or
-                           f"init-{uuid.uuid4().hex[:12]}")
-        n = spark.read.parquet(f"{state_dir}/edges").count()
-        return {"initialized": True, "edges": n}
-    if batch_id is not None and batch_id in meta["completed"]:
-        # exactly-once replay of a FULLY COMMITTED batch: the state
-        # already reflects it (its dir may have been compacted away, so
-        # the dir-based resume below can't run) — converged, no-op
-        return {"initialized": False, "replayed": True,
-                "edges": spark.read.parquet(f"{state_dir}/edges").count()}
+    st = _open_state(spark, state_dir, batch_id, new_pages, threshold)
+    if isinstance(st, dict):
+        return st
     cur_batch = batch_id or f"b-{uuid.uuid4().hex[:12]}"
     clock = _StageClock()
     new_raw = norm_triples(raw_triples(new_pages)).localCheckpoint(eager=True)
@@ -752,25 +895,11 @@ def _incremental_update_locked(spark: SparkSession, new_pages: DataFrame,
     already_appended = (
         batch_id is not None
         and (Path(state_dir) / "raw" / f"batch={batch_id}").exists())
-    old_raw = _read_raw(spark, state_dir)
-    if already_appended:
-        # crash-resume: the batch is in the store; exclude it from the
-        # "old" side so the recompute sees each row exactly once. The
-        # batch partition column is compared AS STRING: Hive inference
-        # types an all-numeric id set as int, and an int-vs-string
-        # comparison would NULL out and drop every row (ADVICE r3).
-        old_raw = spark.read.parquet(f"{state_dir}/raw") \
-            .filter(F.col("batch").cast("string") != F.lit(str(batch_id))) \
-            .select(*_RAW_COLS)
-    old_pairs = spark.read.parquet(f"{state_dir}/pairs")
-    if "band" not in old_pairs.columns:
-        raise ValueError(
-            f"{state_dir}/pairs lacks bucket provenance (band, bh) — a "
-            f"state built by a pre-provenance version. Its pairs cannot "
-            f"be re-evaluated against the cap as buckets grow (the "
-            f"incremental == full-rebuild invariant needs that); rebuild "
-            f"the state with init_state over the full corpus once.")
-    old_cmap = spark.read.parquet(f"{state_dir}/cmap")
+    # crash-resume: the batch is in the store; exclude it from the "old"
+    # side so the recompute sees each row exactly once
+    old_raw = _read_raw(spark, state_dir,
+                        batch_id if already_appended else None)
+    old_pairs, old_cmap = st.pairs, st.cmap
 
     # 2. alias pairs touching a NEW squash, generated from the PERSISTENT
     # bucket store: minhash signatures are computed for squashes never
@@ -785,21 +914,7 @@ def _incremental_update_locked(spark: SparkSession, new_pages: DataFrame,
         .join(old_cmap.select("norm"), "norm", "left_anti") \
         .localCheckpoint(eager=True)
     clock.mark("norms")
-    bdir = Path(state_dir) / "buckets"
-    if not bdir.exists() or not any(bdir.glob("batch=*")):
-        # pre-bucket-store state: one-time rebuild of the old vocabulary
-        _append_batch_dir(_bucket_rows(_norms_of(old_raw)), state_dir,
-                          "buckets", "rebuild")
-    store_raw = spark.read.parquet(str(bdir))
-    if "squash" not in store_raw.columns:
-        raise ValueError(
-            f"{state_dir}/buckets is keyed by norm — a state built by a "
-            f"pre-squash-level version. Its bucket populations and pairs "
-            f"use different cap semantics than the full rebuild (the "
-            f"incremental == full-rebuild invariant needs squash-level "
-            f"counts); rebuild the state with init_state over the full "
-            f"corpus once.")
-    store_old = store_raw \
+    store_old = st.buckets \
         .filter(F.col("batch").cast("string") != F.lit(str(cur_batch))) \
         .select("squash", "band", "bh")
     new_bk = _bucket_rows(
@@ -814,24 +929,9 @@ def _incremental_update_locked(spark: SparkSession, new_pages: DataFrame,
         all_bk, new_bk.filter(F.col("band") == 0)
         .select(F.col("squash").alias("_id")),
         _LSH["max_bucket_size"], keep_bucket=True)
-    # verify shingles come from the squash STRING itself — no raw
-    # re-scan; only squashes involved in a candidate pair re-shingle.
-    # pair_scores materializes its hashed form once, so no checkpoint here
-    keyed = (
-        cand.select(F.explode(F.array("a", "b")).alias("squash"))
-        .dropDuplicates(["squash"])
-        .select(F.col("squash").alias("_id"),
-                char_shingles(F.col("squash"), 3).alias("sh"))
-        .filter(F.size("sh") > 0)
-    )
-    # verified rows keep their generating (band, bh) — the pairs store is
-    # provenance rows, so the cap can be re-evaluated as buckets grow.
-    # Materialized once: scope, components and the commit all read it
-    touching_prov = pair_scores(cand, keyed, threshold, "containment",
-                                keep_cols=("band", "bh")) \
-        .select("a", "b", "band", "bh").localCheckpoint(eager=True)
-    if not (bdir / f"batch={cur_batch}").exists():
-        _append_batch_dir(new_bk, state_dir, "buckets", cur_batch)
+    # scope, components and the commit all read the verified rows
+    touching_prov = _verified_pairs(cand, threshold)
+    _append_batch_dir(new_bk, state_dir, "buckets", cur_batch)
     # touching pairs are disjoint from old pairs except on a resume after
     # the pairs swap: the dedup matters only for the table write
     all_pairs = old_pairs.unionByName(touching_prov)
@@ -843,9 +943,8 @@ def _incremental_update_locked(spark: SparkSession, new_pages: DataFrame,
     # NO pairs in a full rebuild — its previously generated pairs must
     # lose that bucket's support (they stay alive only via some other
     # still-under-cap bucket). Only touched buckets change size, so the
-    # scan is O(touched bucket contents); buckets only ever grow
-    # (squashes are never removed), so a bucket that crossed never comes
-    # back.
+    # scan is O(touched bucket contents); under updates buckets only grow,
+    # so a bucket that crossed never comes back.
     cap = _LSH["max_bucket_size"]
     crossing = (
         store_old.select("band", "bh", F.lit(0).alias("_new"))
@@ -857,59 +956,21 @@ def _incremental_update_locked(spark: SparkSession, new_pages: DataFrame,
         .filter((F.col("_n") - F.col("_add") <= cap) & (F.col("_n") > cap))
         .select("band", "bh")
     )
-    # pairs whose liveness may have flipped: their components need the
-    # same recompute a new pair triggers
+    # 3. recompute ONLY affected components: those adjacent to a new pair
+    # OR a liveness-flipped pair, plus those of every new norm's squash (a
+    # new norm can lower its component's min-norm canonical id even when
+    # its squash — and therefore the pair set — is unchanged)
     dimmed = old_pairs.join(F.broadcast(crossing), ["band", "bh"],
                             "left_semi")
-
-    # 3. recompute ONLY affected components: old components adjacent to a
-    # new pair OR a liveness-flipped pair (either endpoint — live pairs
-    # never span components), plus the components of every new norm's
-    # squash (a new norm can lower its component's min-norm canonical id
-    # even when its squash — and therefore the pair set — is unchanged).
-    # squash -> old component is derivable from cmap alone: squash is a
-    # pure function of norm, and squash-identical norms always share a
-    # component, so any norm of the squash witnesses its canonical id.
-    # No dedup below: every set only feeds a semi/anti join.
-    old_sq_cmap = old_cmap.select(
-        F.regexp_replace("norm", " ", "").alias("squash"), "canonical_id")
-    seeds = touching_prov.unionByName(dimmed).select(
-        F.explode(F.array("a", "b")).alias("squash")) \
-        .unionByName(new_norms.select("squash"))
-    affected_ids = old_sq_cmap \
-        .join(F.broadcast(seeds), "squash", "left_semi") \
-        .select("canonical_id")
-    affected_old = old_cmap \
-        .join(F.broadcast(affected_ids), "canonical_id", "left_semi") \
-        .select("norm",
-                F.regexp_replace("norm", " ", "").alias("squash"))
-    # affected_old and new_norms are disjoint and each unique by norm
-    sub_norms = affected_old.unionByName(new_norms.select("norm", "squash")) \
-        .localCheckpoint(eager=True)
-    clock.mark("scope")
-    sub_prov = all_pairs.join(
-        F.broadcast(sub_norms.select(F.col("squash").alias("a"))), "a",
-        "left_semi")
-    # LIVENESS: a pair feeds CC only while >= 1 of its generating buckets
-    # is still under the cap — exactly the pairs a full rebuild over the
-    # CURRENT bucket population would generate
-    live_keys = _live_buckets(store_old.unionByName(new_bk), sub_norms)
-    sub_pairs = sub_prov.join(live_keys, ["band", "bh"], "left_semi")
-    sub_cmap = _cmap_from_pairs(sub_norms, sub_pairs) \
-        .localCheckpoint(eager=True)
-    # materialized once: the edge rewrite maps through it twice and the
-    # commit writes it
-    new_cmap = old_cmap \
-        .join(F.broadcast(sub_norms.select("norm")), "norm", "left_anti") \
-        .unionByName(sub_cmap).localCheckpoint(eager=True)
-    clock.mark("components")
+    sub_norms, new_cmap, changed = _recluster(
+        old_cmap, touching_prov.unionByName(dimmed), all_pairs,
+        store_old.unionByName(new_bk), clock, added=new_norms)
 
     # 4. rewrite only affected edge keys: rows touching a norm whose
     # canonical changed (old relabeled components) or a new norm, plus
     # every new row — a new row over entirely-old norms still increments
     # the support of an existing edge key. The old rows touching a
     # changed norm are scanned once and serve both maps.
-    changed = _relabeled(old_cmap, sub_cmap)
     old_touching = _touching_rows(old_raw, changed).localCheckpoint(eager=True)
     n, rewritten = _rewrite_edges(
         spark, state_dir, old_raw.unionByName(new_raw), old_touching,
@@ -924,7 +985,7 @@ def _incremental_update_locked(spark: SparkSession, new_pages: DataFrame,
         _append_raw_batch(spark, new_raw, state_dir, cur_batch)
     # outside the guard: a crash between the raw append and this line
     # resumes with already_appended=True and must still record the ts
-    _append_crawl_ts(spark, new_pages, state_dir, cur_batch, meta)
+    _append_crawl_ts(spark, new_pages, state_dir, cur_batch, st.meta)
     # ATOMIC swaps (write-tmp + rename), never a bare overwrite: a crash
     # mid-write must leave the OLD pairs/cmap readable — losing old-old
     # pairs would split components forever (touching-pair generation
@@ -934,7 +995,7 @@ def _incremental_update_locked(spark: SparkSession, new_pages: DataFrame,
     # LAST: the completed marker — everything above is idempotent, so a
     # crash before this line resumes via the batch-dir path, and a crash
     # after it short-circuits as a replay
-    _mark_completed(state_dir, meta, cur_batch)
+    _mark_completed(state_dir, st.meta, cur_batch)
     clock.mark("commit")
     # merged_pairs runs once, in its write: count the written table
     n |= _row_counts(
@@ -998,20 +1059,9 @@ def incremental_delete(spark: SparkSession, urls, state_dir: str,
 def _incremental_delete_locked(spark: SparkSession, urls, state_dir: str,
                                threshold: float,
                                delete_id: str | None) -> dict:
-    import shutil
-
-    meta = _load_meta(state_dir)
-    _heal_compactions(state_dir, meta)
-    recover_table(f"{state_dir}/pairs")
-    recover_table(f"{state_dir}/cmap")
-    if not _state_complete(state_dir):
-        raise ValueError(
-            f"incremental_delete: {state_dir} is not a complete state "
-            f"(crashed init?); finish the build via incremental_update "
-            f"before deleting")
-    if delete_id is not None and delete_id in meta["completed"]:
-        return {"replayed": True,
-                "edges": spark.read.parquet(f"{state_dir}/edges").count()}
+    st = _open_state(spark, state_dir, delete_id)
+    if isinstance(st, dict):
+        return st
     del_id = delete_id or f"del-{uuid.uuid4().hex[:12]}"
     clock = _StageClock()
     # the url set only feeds semi/anti joins: no dedup
@@ -1039,7 +1089,7 @@ def _incremental_delete_locked(spark: SparkSession, urls, state_dir: str,
     clock.mark("stage")
     if n_removed == 0:
         if delete_id is not None:
-            _mark_completed(state_dir, meta, del_id)
+            _mark_completed(state_dir, st.meta, del_id)
         shutil.rmtree(stage, ignore_errors=True)
         return {"deleted_rows": 0, "replayed": False,
                 "edges": spark.read.parquet(f"{state_dir}/edges").count()}
@@ -1058,19 +1108,8 @@ def _incremental_delete_locked(spark: SparkSession, urls, state_dir: str,
     remaining = _read_raw(spark, state_dir)
     clock.mark("purge")
 
-    old_pairs = spark.read.parquet(f"{state_dir}/pairs")
-    if "band" not in old_pairs.columns:
-        raise ValueError(
-            f"{state_dir}/pairs lacks bucket provenance (band, bh); "
-            f"rebuild the state with init_state once before deleting")
-    old_cmap = spark.read.parquet(f"{state_dir}/cmap")
-    store_raw = spark.read.parquet(f"{state_dir}/buckets")
-    if "squash" not in store_raw.columns:
-        raise ValueError(
-            f"{state_dir}/buckets is keyed by norm (pre-squash-level "
-            f"state); rebuild the state with init_state once before "
-            f"deleting")
-    store_rows = store_raw.select("squash", "band", "bh")
+    old_pairs, old_cmap = st.pairs, st.cmap
+    store_rows = st.buckets.select("squash", "band", "bh")
     cap = _LSH["max_bucket_size"]
 
     # norms that leave the vocabulary: candidates are the removed rows'
@@ -1115,18 +1154,9 @@ def _incremental_delete_locked(spark: SparkSession, urls, state_dir: str,
     cur_store = store_rows.join(removed_sq, "squash", "left_anti")
     members = cur_store.join(crossing, ["band", "bh"], "left_semi") \
         .select(F.col("squash").alias("_id"), "band", "bh")
-    cand_pairs = cap_and_self_join(members, cap, distinct=False,
-                                   keep_bucket=True)
-    involved = cand_pairs \
-        .select(F.explode(F.array("a", "b")).alias("squash")) \
-        .dropDuplicates(["squash"])
-    keyed = involved.select(
-        F.col("squash").alias("_id"),
-        char_shingles(F.col("squash"), 3).alias("sh")) \
-        .filter(F.size("sh") > 0)
-    regen = pair_scores(cand_pairs, keyed, threshold, "containment",
-                        keep_cols=("band", "bh")) \
-        .select("a", "b", "band", "bh").localCheckpoint(eager=True)
+    regen = _verified_pairs(
+        cap_and_self_join(members, cap, distinct=False, keep_bucket=True),
+        threshold)
     # pairs with a removed endpoint leave the store PERMANENTLY (a removed
     # squash may be the bridge of a component — keeping the pair would
     # keep the component merged where a rebuild splits it)
@@ -1140,46 +1170,18 @@ def _incremental_delete_locked(spark: SparkSession, urls, state_dir: str,
     clock.mark("verify")
 
     # affected components: every removed norm's squash (splits, min-norm
-    # relabels) + every re-paired squash (downward crossings can MERGE).
-    # Live pairs never span components, so pulling whole components into
-    # scope keeps the sub-recompute's min-norm labels globally correct.
-    old_sq_cmap = old_cmap.select(
-        F.regexp_replace("norm", " ", "").alias("squash"), "canonical_id")
-    seed_sq = removed_norms.select("squash") \
-        .unionByName(regen.select(F.explode(F.array("a", "b"))
-                                  .alias("squash")))
-    affected_ids = old_sq_cmap \
-        .join(F.broadcast(seed_sq), "squash", "left_semi") \
-        .select("canonical_id")
-    affected_members = old_cmap \
-        .join(F.broadcast(affected_ids), "canonical_id", "left_semi") \
-        .select("norm").localCheckpoint(eager=True)
-    sub_norms = affected_members \
-        .join(removed_norms.select("norm"), "norm", "left_anti") \
-        .select("norm", F.regexp_replace("norm", " ", "").alias("squash")) \
-        .localCheckpoint(eager=True)
-    clock.mark("scope")
-
-    sub_prov = merged_pairs.join(
-        F.broadcast(sub_norms.select(F.col("squash").alias("a"))), "a",
-        "left_semi")
+    # relabels) + every re-paired squash (downward crossings can MERGE);
     # liveness against the POST-delete population (the bucket-store purge
     # happens later in the commit order; subtract at the DataFrame level)
-    sub_pairs = sub_prov.join(_live_buckets(cur_store, sub_norms),
-                              ["band", "bh"], "left_semi")
-    sub_cmap = _cmap_from_pairs(sub_norms, sub_pairs) \
-        .localCheckpoint(eager=True)
-    new_cmap = old_cmap \
-        .join(F.broadcast(affected_members), "norm", "left_anti") \
-        .unionByName(sub_cmap).localCheckpoint(eager=True)
-    clock.mark("components")
+    sub_norms, new_cmap, changed = _recluster(
+        old_cmap, regen, merged_pairs, cur_store, clock,
+        removed=removed_norms)
 
     # edge fix: keys whose support changed = keys of rows touching a
     # relabeled norm + keys the removed rows contributed to (their
     # remaining contributors re-aggregate; keys with none die). The
     # removed rows existed under the OLD map, so they ride in both maps'
     # candidate rows.
-    changed = _relabeled(old_cmap, sub_cmap)
     source = _touching_rows(remaining, changed).unionByName(removed) \
         .localCheckpoint(eager=True)
     n, rewritten = _rewrite_edges(
@@ -1197,7 +1199,7 @@ def _incremental_delete_locked(spark: SparkSession, urls, state_dir: str,
     replace_table(new_cmap, f"{state_dir}/cmap")
     delete_by_key(spark, f"{state_dir}/buckets", removed_sq, ["squash"],
                   partition_by=["batch"], broadcast_keys=True)
-    _mark_completed(state_dir, meta, del_id)
+    _mark_completed(state_dir, st.meta, del_id)
     shutil.rmtree(stage, ignore_errors=True)
     clock.mark("commit")
     n |= _row_counts(rewritten)
@@ -1221,8 +1223,6 @@ def _incremental_delete_locked(spark: SparkSession, urls, state_dir: str,
 def incremental_reingest(spark: SparkSession, pages: DataFrame,
                          state_dir: str, threshold: float = 0.8,
                          batch_id: str | None = None,
-                         skip_unchanged: bool = True,
-                         newer_only: bool = True,
                          compact_every_n_batches: int | None = 32) -> dict:
     """RE-CRAWL semantics: fold ``pages`` into the state where a url may
     already be present — the reference's delete-on-reingest contract
@@ -1232,25 +1232,12 @@ def incremental_reingest(spark: SparkSession, pages: DataFrame,
     crawl only. A plain ``incremental_update`` would double-count
     (the old raw rows stay in the store).
 
-    ``skip_unchanged=True`` short-circuits per url on the EXTRACTED
-    triple set (I4 change detection at the semantic level): a re-crawled
-    page whose normalized triples are identical to the stored ones is
-    dropped before the purge — boilerplate-only recrawls (the common
-    case on a real crawl cadence) cost one anti-join, not a
-    delete+insert cycle. Byte-level fingerprint checks belong UPSTREAM
-    (cheaper, catches unchanged HTML before extraction); this guard
-    catches changed-HTML-same-triples.
-
-    ``newer_only=True`` enforces latest-crawl ORDERING on out-of-order
-    delivery (a crawl fleet's batches arrive in completion order, not
-    crawl order): within the batch only each url's newest ``warc_ts``
-    row survives, and a url whose batch timestamp is STRICTLY older than
-    the state's recorded crawl ts (the ``crawl_ts`` sidecar store) is
-    dropped before any extraction — replaying last week's batch after
-    today's cannot regress a url to stale content. Equal timestamps fall
-    through to the fingerprint guard (a re-delivery of the same crawl is
-    unchanged by definition). Legacy states without the sidecar skip the
-    check and start recording from the next batch.
+    Before the purge, two guards drop the urls that need no change: a
+    url whose crawl (``warc_ts``; within the batch, each url's newest) is
+    STRICTLY older than the state's recorded one in the ``crawl_ts``
+    sidecar, so replaying last week's batch cannot regress it; and a url
+    whose normalized triple multiset equals the stored one (change
+    detection on the extraction; byte-level checks belong upstream).
 
     EXACTLY-ONCE: with a ``batch_id``, the purge commits under
     ``<batch_id>-purge`` and the insert under ``batch_id`` — each leg
@@ -1262,18 +1249,11 @@ def incremental_reingest(spark: SparkSession, pages: DataFrame,
     """
     purge_id = f"{batch_id}-purge" if batch_id else None
     with _state_lock(state_dir):
-        meta = _load_meta(state_dir)
-        if not _state_complete(state_dir):
-            _init_state_locked(spark, pages, state_dir, threshold,
-                               batch_id=batch_id or
-                               f"init-{uuid.uuid4().hex[:12]}")
-            n = spark.read.parquet(f"{state_dir}/edges").count()
-            return {"initialized": True, "edges": n}
-        if batch_id is not None and batch_id in meta["completed"]:
-            return {"replayed": True, "edges":
-                    spark.read.parquet(f"{state_dir}/edges").count()}
+        st = _open_state(spark, state_dir, batch_id, pages, threshold)
+        if isinstance(st, dict):
+            return st
         t_guard = time.perf_counter()
-        if newer_only and "warc_ts" in pages.columns:
+        if "warc_ts" in pages.columns:
             # within-batch latest-crawl: keep each url's newest row only
             # (batch-bounded window — never corpus-sized)
             w = Window.partitionBy("url").orderBy(F.col("warc_ts").desc())
@@ -1285,8 +1265,8 @@ def incremental_reingest(spark: SparkSession, pages: DataFrame,
         overlap = page_urls.join(stored_urls, "url", "left_semi") \
             .localCheckpoint(eager=True)
         ts_root = Path(state_dir) / "crawl_ts"
-        if (newer_only and "warc_ts" in pages.columns
-                and ts_root.exists() and not overlap.isEmpty()):
+        if ("warc_ts" in pages.columns and ts_root.exists()
+                and not overlap.isEmpty()):
             # cross-batch ordering: drop recrawls STRICTLY older than the
             # state's recorded crawl ts — before the (expensive)
             # fingerprint extraction ever sees them. The sidecar scan is
@@ -1307,7 +1287,7 @@ def incremental_reingest(spark: SparkSession, pages: DataFrame,
             page_urls = pages.select("url").dropDuplicates(["url"])
         else:
             n_stale = 0
-        if skip_unchanged and not overlap.isEmpty():
+        if not overlap.isEmpty():
             # a url is UNCHANGED when its stored triple multiset equals
             # the fresh extraction: one order-insensitive per-url
             # fingerprint on each side (sorted row-hash list, so
@@ -1355,7 +1335,7 @@ def incremental_reingest(spark: SparkSession, pages: DataFrame,
             # safety: an own-batch ts in the store compares EQUAL, and the
             # stale filter is strictly-less-than, so a crash-and-rerun
             # still reaches the fingerprint guard and converges.
-            _append_crawl_ts(spark, pages, state_dir, batch_id, meta)
+            _append_crawl_ts(spark, pages, state_dir, batch_id, st.meta)
         # the insert url set MATERIALIZES BEFORE the purge: the purge
         # swaps raw partition files, and a lazy plan over the pre-purge
         # read would fail FILE_NOT_EXIST when evaluated afterwards. Both
@@ -1375,7 +1355,7 @@ def incremental_reingest(spark: SparkSession, pages: DataFrame,
         if to_insert.isEmpty():
             if batch_id is not None:
                 # RELOAD the manifest: the purge leg may have appended
-                # its own completed-marker since ``meta`` was read —
+                # its own completed-marker since ``st.meta`` was read —
                 # saving the stale dict would clobber it
                 _mark_completed(state_dir, _load_meta(state_dir), batch_id)
             stats["update"] = {"skipped": True, "reason": "no changes"}
@@ -1384,13 +1364,5 @@ def incremental_reingest(spark: SparkSession, pages: DataFrame,
         stats["update"] = _incremental_update_locked(
             spark, to_insert, state_dir, threshold, batch_id)
         stats["update_sec"] = round(time.perf_counter() - t0, 3)
-        # same auto-compaction contract as incremental_update: an
-        # unattended recrawl stream keeps O(1) raw dirs without anyone
-        # remembering to call compact_state
-        if compact_every_n_batches is not None:
-            n_dirs = len(list(
-                (Path(state_dir) / "raw").glob("batch=*")))
-            if n_dirs >= compact_every_n_batches:
-                stats["compaction"] = _compact_state_locked(
-                    spark, state_dir, min_batches=2)
+        _auto_compact(spark, state_dir, stats, compact_every_n_batches)
         return stats

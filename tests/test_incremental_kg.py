@@ -2,6 +2,7 @@
 
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from hades_spark.functions.triples import raw_triples
@@ -692,6 +693,33 @@ class TestSquashLevelState:
             incremental_update(spark, _pages(spark, BATCH2), inc)
 
 
+class TestPreBucketStoreState:
+    """A state written before the bucket store existed has no buckets/
+    dir. Update and delete share one open step, which builds the store
+    once from the old vocabulary, so both still equal a rebuild."""
+
+    @pytest.mark.parametrize("op", ["update", "delete"])
+    def test_missing_bucket_store_rebuilt_once(self, spark, tmp_path, op):
+        from hades_spark.pipeline.incremental_kg import incremental_delete
+
+        inc = str(tmp_path / f"nobk_{op}")
+        full = str(tmp_path / f"nobk_{op}_full")
+        init_state(spark, _pages(spark, BATCH1), inc)
+        shutil.rmtree(f"{inc}/buckets")
+        if op == "update":
+            incremental_update(spark, _pages(spark, BATCH2), inc)
+            latest = BATCH1 + BATCH2
+        else:
+            # pages 1 and 3 hold every 'qux': a squash leaves the store
+            gone = [f"https://t.example/{i}.html" for i in (1, 3)]
+            assert incremental_delete(spark, gone, inc)["removed_squashes"]
+            latest = [r for r in BATCH1 if r[0] not in (1, 3)]
+        init_state(spark, _pages(spark, latest), full)
+        assert _edge_set(spark, inc) == _edge_set(spark, full)
+        bk = spark.read.parquet(f"{inc}/buckets")
+        assert bk.filter(F.col("batch") == "rebuild").count() > 0
+
+
 class TestStageMetrics:
     """North-rule seam: per-stage throughput metrics emitted for every
     init/update into <state_dir>/metrics.jsonl (the incremental twin of
@@ -730,35 +758,49 @@ class TestStageMetrics:
 
 
 class TestJobBudget:
-    """An update is latency-bound: its Spark job count sets its wall time.
-    With each delta materialized once and no exchange feeding only a
-    semi/anti join, this 20-page Zipf update runs 92 Spark jobs
-    (local[4]); the ceiling adds a small margin for adaptive planning.
-    A regression that re-runs a lineage or re-adds a dead dedup shows up
-    here before it shows up in a benchmark."""
+    """An update or delete is latency-bound: its Spark job count sets its
+    wall time. With each delta materialized once and no exchange feeding
+    only a semi/anti join, this 20-page Zipf update runs 92 Spark jobs
+    and the 12-url delete that follows it 105 (local[4]); each ceiling
+    adds a ~14% margin for adaptive planning. A regression that re-runs a
+    lineage or re-adds a dead dedup shows up here before it shows up in a
+    benchmark."""
 
     MAX_JOBS = 105
+    MAX_DELETE_JOBS = 121
 
     def test_update_job_count_within_budget(self, spark, tmp_path):
         from hades_spark.pipeline.corpus import gen_pages
+        from hades_spark.pipeline.incremental_kg import incremental_delete
 
         rows = [(p.url, p.warc_ts, p.html, None, p.lang) for p in
                 gen_pages(60, seed=42, compute_text=False, richness=5,
                           vocab_size=150_000)]
         inc = str(tmp_path / "budget")
         init_state(spark, spark.createDataFrame(rows[:40], PAGES), inc)
-        batch = spark.createDataFrame(rows[40:], PAGES)
         sc = spark.sparkContext
-        sc.setJobGroup("incremental-update-budget", "job budget")
-        try:
-            stats = incremental_update(spark, batch, inc, batch_id="b1")
-        finally:
-            for prop in ("spark.jobGroup.id", "spark.job.description"):
-                sc.setLocalProperty(prop, None)
-        jobs = sc.statusTracker().getJobIdsForGroup(
-            "incremental-update-budget")
+
+        def jobs_of(group, op):
+            sc.setJobGroup(group, "job budget")
+            try:
+                stats = op()
+            finally:
+                for prop in ("spark.jobGroup.id", "spark.job.description"):
+                    sc.setLocalProperty(prop, None)
+            return stats, len(sc.statusTracker().getJobIdsForGroup(group))
+
+        batch = spark.createDataFrame(rows[40:], PAGES)
+        stats, jobs = jobs_of(
+            "incremental-update-budget",
+            lambda: incremental_update(spark, batch, inc, batch_id="b1"))
         assert stats["changed_norms"] > 0  # the update relabeled norms
-        assert len(jobs) <= self.MAX_JOBS, len(jobs)
+        assert jobs <= self.MAX_JOBS, jobs
+        gone = [r[0] for r in rows[0:60:5]]
+        stats, jobs = jobs_of(
+            "incremental-delete-budget",
+            lambda: incremental_delete(spark, gone, inc, delete_id="d1"))
+        assert stats["edges_deleted"] > 0  # the delete dropped edge keys
+        assert jobs <= self.MAX_DELETE_JOBS, jobs
 
 
 class TestIncrementalDelete:
@@ -1013,6 +1055,27 @@ class TestIncrementalReingest:
                                      batch_id="rc1")
         assert stats["reingested_urls"] == 1
         assert stats["purge"]["deleted_rows"] > 0
+        latest = [r for r in BATCH1 if r[0] != 1] + recrawl
+        init_state(spark, _pages(spark, latest), full)
+        assert _edge_set(spark, inc) == _edge_set(spark, full)
+
+    def test_recrawl_in_pairs_swap_crash_window(self, spark, tmp_path):
+        """A crash between the two renames of a pairs swap leaves only
+        ``.pairs.bak-<hex>``. Reingest must restore it like update and
+        delete do, not take the state for a crashed init and rebuild it
+        from raw, where the recrawled url's old rows still sit."""
+        from pathlib import Path
+
+        from hades_spark.pipeline.incremental_kg import incremental_reingest
+
+        inc = str(tmp_path / "swinc")
+        full = str(tmp_path / "swfull")
+        init_state(spark, _pages(spark, BATCH1), inc)
+        Path(inc, "pairs").rename(Path(inc, ".pairs.bak-deadbeef"))
+        recrawl = [(1, "BetaGamma indexes Womp."),
+                   (5, "FreshThing cites Qux.")]
+        incremental_reingest(spark, _pages(spark, recrawl), inc,
+                             batch_id="rc1")
         latest = [r for r in BATCH1 if r[0] != 1] + recrawl
         init_state(spark, _pages(spark, latest), full)
         assert _edge_set(spark, inc) == _edge_set(spark, full)
