@@ -2,25 +2,22 @@
 
 Pure-Python detectors (reference semantics:
 ``extractors_markdown.py:489-617`` for HTML links / tables / code blocks,
-``academic_citation_toolkit.py:545-665`` for citation-style entries) wrapped
-in a single Arrow-batched pandas UDF that returns ``array<struct>`` rows per
-page, then exploded into the ``mentions`` table. UDTF-shaped: one input row
--> many mention rows, but expressed as UDF + ``explode`` so Catalyst still
-prunes/pushes around it.
+``academic_citation_toolkit.py:545-665`` for citation-style entries) run
+per page inside the stage-1 ``mapInArrow`` kernel (``persist._stage1``),
+which returns an ``array<struct>`` column per page; ``explode_mentions``
+turns that into the ``mentions`` table. UDTF-shaped: one input row -> many
+mention rows, but expressed as an array column + ``explode`` so Catalyst
+still prunes/pushes around it.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 from typing import Any
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import ArrayType
 
-from ..schemas import MENTION
-from .html_text import decode_html_bytes, html_to_text, unescape_html
+from .html_text import html_to_text, unescape_html
 
 # --- HTML structural mentions ------------------------------------------------
 
@@ -342,40 +339,19 @@ def detect_mentions(content: str, text: str,
     return mentions
 
 
-@F.pandas_udf(ArrayType(MENTION))
-def detect_mentions_udf(
-    it: Iterator[tuple[pd.Series, pd.Series, pd.Series]],
-) -> Iterator[pd.Series]:
-    for url_s, html_s, text_s in it:
-        # decode_html_bytes = the SAME utf-8 -> latin-1 ladder the text
-        # extraction uses, so mention surfaces match the extracted text
-        # byte-for-byte on invalid-utf8 pages (no U+FFFD divergence)
-        yield pd.Series([
-            detect_mentions(
-                decode_html_bytes(h) if isinstance(h, (bytes, bytearray)) or h is None
-                else h,
-                t or "",
-                url=u,
-            )
-            for u, h, t in zip(url_s, html_s, text_s)
-        ])
-
-
-def mentions_table(pages: DataFrame) -> DataFrame:
-    """pages(url, html, text) -> mentions table (one row per mention).
-
-    Narrow until the explode; mention_id is position-stable so re-runs are
-    idempotent (deterministic keys, no uuids).
-    """
-    exploded = (
-        pages
-        .select("url", F.posexplode_outer(
-            detect_mentions_udf("url", "html", "text")).alias("pos", "m"))
+def explode_mentions(df: DataFrame) -> DataFrame:
+    """(url, mentions array) -> one row per mention: posexplode, drop the
+    null rows of pages without mentions, and key each row by a
+    position-stable ``mention_id`` (re-runs are idempotent: deterministic
+    keys, no uuids)."""
+    return (
+        df.select("url", F.posexplode_outer("mentions").alias("pos", "m"))
         .filter(F.col("m").isNotNull())
-        .select("url", "pos", F.col("m.*"))
+        .select(
+            "url",
+            F.concat_ws("#", "url", F.col("pos").cast("string"))
+            .alias("mention_id"),
+            F.col("m.*"),
+        )
     )
-    return exploded.select(
-        "url",
-        F.concat_ws("#", "url", F.col("pos").cast("string")).alias("mention_id"),
-        "surface", "kind", "start_char", "end_char", "attrs", "confidence",
-    )
+

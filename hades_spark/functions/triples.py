@@ -1,21 +1,16 @@
 """Spark bindings for SVO triple extraction.
 
-Pure logic in ``hades_spark.textcore.svo`` (stdlib-only); here: the Arrow
-UDF/mapInArrow wrappers and the ``raw_triples`` stage. The mapInArrow path
-is the production stage-1: it moves the page bytes JVM->python exactly once
-with no pandas materialization, decodes/extracts/emits exploded triple rows
-in a single pass, and ships back only the (tiny) triple columns.
+Pure logic in ``hades_spark.textcore.svo`` (stdlib-only); here: the
+build's ``raw_triples`` stage, a mapInArrow pass that moves the page bytes
+JVM->python exactly once with no pandas materialization, decodes/extracts/
+emits exploded triple rows in a single pass, and ships back only the
+(tiny) triple columns. The deploy path's stage 1 (``persist._stage1``)
+calls the same ``extract_triples`` inside its own mapInArrow kernel.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (
-    ArrayType, DoubleType, IntegerType, StringType, StructField, StructType,
-)
 
 from ..textcore.svo import (  # noqa: F401  (re-exported public API)
     DEFAULT_PREDICATES,
@@ -23,22 +18,8 @@ from ..textcore.svo import (  # noqa: F401  (re-exported public API)
     extract_triples_spec,
 )
 
-RAW_TRIPLE = StructType([
-    StructField("subj", StringType(), False),
-    StructField("pred", StringType(), False),
-    StructField("obj", StringType(), False),
-    StructField("start_char", IntegerType(), True),
-    StructField("confidence", DoubleType(), True),
-])
-
 RAW_TRIPLES_SCHEMA = ("url string, subj string, pred string, obj string, "
                       "start_char int, confidence double")
-
-
-@F.pandas_udf(ArrayType(RAW_TRIPLE))
-def extract_triples_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    for s in batches:
-        yield s.map(lambda t: extract_triples(t))
 
 
 def _arrow_extract_batches(it):

@@ -113,6 +113,7 @@ from ..operators.lsh import (cap_and_self_join, char_shingles, lsh_buckets,
 from ..sources.io import (delete_by_key, recover_table, replace_table,
                           upsert_by_key, write_table)
 from .kg import apply_canonical_map, distinct_edges, norm_triples
+from .metrics import StageClock
 
 
 _LSH = dict(num_hashes=16, bands=16, max_bucket_size=150)
@@ -133,21 +134,6 @@ _STORE_COLS = {"raw": _RAW_COLS, "buckets": ["squash", "band", "bh"],
 # carry the crawl timestamp; storing it per-row would bloat every triple).
 # Legacy states without the dir just skip the guard.
 _BATCH_STORES = ("raw", "buckets", "crawl_ts")
-
-
-class _StageClock:
-    """Driver-side per-stage stopwatch. Segments are measured BETWEEN
-    Spark actions (the update's eager checkpoints / table writes), so a
-    segment's wall covers exactly the jobs that materialize that stage."""
-
-    def __init__(self) -> None:
-        self.secs: dict[str, float] = {}
-        self._t = time.perf_counter()
-
-    def mark(self, stage: str) -> None:
-        now = time.perf_counter()
-        self.secs[stage] = round(self.secs.get(stage, 0.0) + now - self._t, 3)
-        self._t = now
 
 
 def _emit_metrics(state_dir: str, batch_id, op: str,
@@ -536,7 +522,7 @@ def _verified_pairs(cand: DataFrame, threshold: float) -> DataFrame:
 
 
 def _recluster(old_cmap: DataFrame, seed_pairs: DataFrame,
-               pairs: DataFrame, store: DataFrame, clock: _StageClock,
+               pairs: DataFrame, store: DataFrame, clock: StageClock,
                added: DataFrame | None = None,
                removed: DataFrame | None = None
                ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -688,7 +674,7 @@ def _init_state_locked(spark: SparkSession, pages: DataFrame,
     # sweep half-written append tmp dirs from a crashed previous attempt
     for tmp in Path(state_dir, "raw").glob(".batch-*.tmp-*"):
         shutil.rmtree(tmp, ignore_errors=True)
-    clock = _StageClock()
+    clock = StageClock()
     appended = _append_raw_batch(spark, norm_triples(raw_triples(pages)),
                                  state_dir, batch_id,
                                  absorbed=_absorbed_ids(meta, "raw"))
@@ -889,7 +875,7 @@ def _incremental_update_locked(spark: SparkSession, new_pages: DataFrame,
     if isinstance(st, dict):
         return st
     cur_batch = batch_id or f"b-{uuid.uuid4().hex[:12]}"
-    clock = _StageClock()
+    clock = StageClock()
     new_raw = norm_triples(raw_triples(new_pages)).localCheckpoint(eager=True)
     clock.mark("extract")
     already_appended = (
@@ -1063,7 +1049,7 @@ def _incremental_delete_locked(spark: SparkSession, urls, state_dir: str,
     if isinstance(st, dict):
         return st
     del_id = delete_id or f"del-{uuid.uuid4().hex[:12]}"
-    clock = _StageClock()
+    clock = StageClock()
     # the url set only feeds semi/anti joins: no dedup
     if isinstance(urls, DataFrame):
         urls_df = urls.select("url")

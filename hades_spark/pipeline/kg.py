@@ -24,28 +24,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.extractors import extract_text_routed_udf
 from ..functions.keys import edge_content_key_col
 from ..operators.canonicalize import normalize_surface_col
 from .corpus import pages_df
-
-
-def ensure_text(pages: DataFrame) -> DataFrame:
-    """Fill the text column where missing (idempotent re-extraction,
-    format-routed by url: html / markdown / latex)."""
-    return pages.withColumn(
-        "text",
-        F.coalesce(F.col("text"),
-                   extract_text_routed_udf(F.col("url"), F.col("html"))),
-    )
 
 
 def norm_triples(raw: DataFrame) -> DataFrame:
     """Surface triples (url, subj, pred, obj, confidence) -> the normalized
     rows every path canonicalizes: (url, pred, confidence, subj_norm,
     obj_norm). THE single copy of the projection — shared by the build,
-    the staged oracle pipeline, the metered pipeline, incremental
-    maintenance and the deploy path (``persist.materialize_kg``)."""
+    the staged oracle pipeline, incremental maintenance and the deploy
+    path (``persist.materialize_kg``)."""
     return raw.select(
         "url", "pred", "confidence",
         normalize_surface_col(F.col("subj")).alias("subj_norm"),
@@ -58,8 +47,9 @@ def apply_canonical_map(raw: DataFrame, cmap: DataFrame,
     """Raw normalized triples x (norm -> canonical_id) map -> canonical
     (subj, pred, obj) triples with content edge keys. THE single copy of
     the mapping block — shared by ``canonical_triples``, the staged
-    oracle pipeline, the metered pipeline, and incremental maintenance,
-    so a semantics change lands everywhere at once."""
+    oracle pipeline, incremental maintenance and the deploy path
+    (``persist.materialize_kg``), so a semantics change lands everywhere
+    at once."""
     c = F.broadcast(cmap) if broadcast_map else cmap
     subj_map = c.select(F.col("norm").alias("subj_norm"),
                         F.col("canonical_id").alias("subj_id"))

@@ -809,14 +809,13 @@ def mm_meta_q(spark: SparkSession, sf: str) -> DataFrame:
 
 @register("kg_extract_text")
 def kg_extract_q(spark: SparkSession, sf: str) -> DataFrame:
-    from .functions.extractors import extract_text_routed_udf
+    # the deploy path's stage-1 kernel: its text column is what
+    # materialize_kg and stream_extract write
     from .pipeline.corpus import pages_df
+    from .pipeline.persist import _stage1
 
     pages = pages_df(spark, 150, seed=42, with_text=False)
-    return pages.select(
-        "url",
-        F.length(extract_text_routed_udf(F.col("url"), F.col("html")))
-         .alias("text_len"))
+    return _stage1(pages).select("url", F.length("text").alias("text_len"))
 
 
 _MENTIONS_STAGE = f"{STAGE_ROOT}/hades_mentions_oracle_stage"
@@ -832,24 +831,20 @@ FROM ex WHERE m IS NOT NULL GROUP BY 1 ORDER BY 1
 
 @register("kg_mentions", _MENTIONS_ORACLE)
 def kg_mentions_q(spark: SparkSession, sf: str) -> DataFrame:
-    # staged: the per-page mention ARRAYS go to parquet; the oracle unnests
-    # and recomputes the kind histogram, verifying the explode + null-filter
-    # + aggregation tail (detection itself is python-regex, unit-tested)
-    from .functions.mentions import detect_mentions_udf, mentions_table
+    # staged: the per-page mention ARRAYS of the deploy path's stage-1
+    # kernel go to parquet; the oracle unnests and recomputes the kind
+    # histogram, verifying the explode_mentions + aggregation tail
+    # (detection itself is python-regex, unit-tested)
+    from .functions.mentions import explode_mentions
     from .pipeline.corpus import pages_df
+    from .pipeline.persist import _stage1
 
     pages = pages_df(spark, 150, seed=42, with_text=True)
-    pages.select(
-        "url", detect_mentions_udf("url", "html", "text").alias("mentions")
-    ).write.mode("overwrite").parquet(f"{_MENTIONS_STAGE}/with_mentions")
+    _stage1(pages).select("url", "mentions") \
+        .write.mode("overwrite").parquet(f"{_MENTIONS_STAGE}/with_mentions")
     staged = spark.read.parquet(f"{_MENTIONS_STAGE}/with_mentions")
-    m = (
-        staged.select("url", F.posexplode_outer("mentions").alias("pos", "m"))
-        .filter(F.col("m").isNotNull())
-        .select("url", F.col("m.kind").alias("kind"))
-    )
-    return m.groupBy("kind").agg(F.count("*").cast("bigint").alias("cnt")) \
-            .orderBy("kind")
+    return explode_mentions(staged).groupBy("kind") \
+        .agg(F.count("*").cast("bigint").alias("cnt")).orderBy("kind")
 
 
 from .pipeline.kg import kg_edges_oracle_sql as _kg_oracle  # noqa: E402

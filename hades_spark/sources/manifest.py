@@ -3,11 +3,13 @@
 The reference persists a completed/failed set after every item
 (``batch.py:162-313``) and an incremental watermark doc
 (``sync.py:265-356``); restated Spark-first as an append-only manifest
-parquet table — resuming a stage = anti-join the input's unit ids against
-the manifest's completed set (I3 / U3 semantics), so re-runs are idempotent
-and a killed run re-runs only the units it had not recorded. A stage writes
-all of its pending units in one pass partitioned by unit and records them
-afterwards, so a kill mid-pass re-runs that whole pass.
+parquet table — resuming a stage = drop the input's units that the same
+``run_id`` has recorded as completed (I3 / U3 semantics), so re-runs are
+idempotent and a killed run re-runs only the units it had not recorded. A
+stage writes all of its pending units in one pass partitioned by unit and
+records them afterwards, so a kill mid-pass re-runs that whole pass. A run
+id names one input: a new run id starts the stage over, whatever earlier
+runs recorded in the same manifest.
 
 Units are logical partitions of the input (e.g. url-hash buckets), not
 Spark task partitions — stable across cluster sizes, which is what makes
@@ -37,9 +39,13 @@ class Manifest:
         return self.spark.read.parquet(self.path)
 
     def completed_units(self, stage: str) -> DataFrame:
+        """Units this run (``run_id``) recorded as completed for ``stage``;
+        rows of earlier runs are history, never a resume point."""
         return (
             self._read()
-            .filter((F.col("stage") == stage) & (F.col("status") == "completed"))
+            .filter((F.col("stage") == stage)
+                    & (F.col("status") == "completed")
+                    & (F.col("run_id") == self.run_id))
             .select("unit").distinct()
         )
 
@@ -56,12 +62,6 @@ class Manifest:
                 for u, n in units]
         self.spark.createDataFrame(rows, MANIFEST_SCHEMA) \
             .write.mode("append").parquet(self.path)
-
-    def pending(self, df: DataFrame, stage: str, unit_col: str = "unit") -> DataFrame:
-        """Drop rows whose unit is already completed for this stage."""
-        done = self.completed_units(stage) \
-            .withColumnRenamed("unit", unit_col)
-        return df.join(F.broadcast(done), unit_col, "left_anti")
 
 
 def with_unit(df: DataFrame, key_col: str, n_units: int = 64,
@@ -82,10 +82,15 @@ def run_stage_with_resume(
     n_units: int = 16,
 ) -> None:
     """Run ``transform(df) -> DataFrame`` over every pending unit in ONE
-    write partitioned by ``unit`` (``<out_path>/unit=<u>/``) with dynamic
-    partition overwrite, then record the pending units in one manifest
-    append. ``transform`` must keep ``key_col``: the unit is re-derived
-    from it after the transform.
+    write partitioned by ``unit`` (``<out_path>/unit=<u>/``), then record
+    the pending units in one manifest append. ``transform`` must keep
+    ``key_col``: the unit is re-derived from it after the transform.
+
+    Resume is scoped to ``manifest.run_id``: a run that has recorded units
+    for ``stage`` skips them and replaces only the pending units'
+    partitions (dynamic partition overwrite); a run that has recorded none
+    replaces ``out_path`` whole, so no unit written by an earlier run (of
+    other input) survives into this run's output.
 
     Crash safety is overwrite-then-record: a crash BETWEEN the write and
     the manifest record leaves those units pending, and the resume
@@ -99,13 +104,19 @@ def run_stage_with_resume(
     Unit-granular, not row-granular: at 100 TB the manifest stays tiny
     (n_units rows per stage).
     """
-    todo = manifest.pending(with_unit(inp, key_col, n_units), stage)
+    done = [r["unit"] for r in manifest.completed_units(stage).collect()]
+    todo = with_unit(inp, key_col, n_units)
+    if done:
+        todo = todo.filter(~F.col("unit").isin(done))
     units = sorted(r["unit"] for r in todo.select("unit").distinct().collect())
-    if not units:
+    if done and not units:
         return
     out = with_unit(transform(todo.drop("unit")), key_col, n_units)
-    out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic") \
+    out.write.mode("overwrite") \
+        .option("partitionOverwriteMode", "dynamic" if done else "static") \
         .partitionBy("unit").parquet(out_path)
+    if not units:
+        return
     # explicit schema: the read stays valid when no unit wrote a row
     written = dict(
         manifest.spark.read.schema(out.schema).parquet(out_path)

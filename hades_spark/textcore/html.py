@@ -8,8 +8,8 @@ Semantics match the reference extractor exactly (its
 ``_html_to_plain_text`` / ``_unescape_html`` rules and its utf-8 -> latin-1
 decode ladder); ``html_to_text_spec`` is their literal transcription. The
 transformation MUST run on the Python ``re`` engine in the python worker —
-the build's ``raw_triples`` mapInArrow pass and the deploy path's pandas
-UDFs both call ``html_to_text`` there. Spark SQL's Java regex differs on
+the build's ``raw_triples`` mapInArrow pass and the deploy path's stage-1
+mapInArrow kernel (``persist._stage1``) both call ``html_to_text`` there. Spark SQL's Java regex differs on
 unicode case folding, DOTALL interplay and ``\\Z``, so translating these
 rewrites to ``regexp_replace`` columns would silently break the per-url
 byte-identical contract.

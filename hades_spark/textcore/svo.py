@@ -11,7 +11,8 @@ extractor.
 
 Runs on the Python ``re`` engine in the python worker: the build's and
 the incremental update's ``raw_triples`` mapInArrow pass, and the deploy
-path's ``extract_triples_udf``, all call ``extract_triples``.
+path's stage-1 mapInArrow kernel (``persist._stage1``), all call
+``extract_triples``.
 """
 
 from __future__ import annotations

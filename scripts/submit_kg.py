@@ -8,15 +8,17 @@ The north rule's deployment shape::
         --py-files dist/hades_spark.zip \\
         scripts/submit_kg.py \\
         --input  s3://bucket/pages/          # or omit for a synthetic corpus
-        --output /path/to/edges \\
-        --metrics /path/to/metrics
+        --output /path/to/kg --run-id crawl-2025-01
 
 Reads an (url, warc_ts, html, text, lang) pages table (BASELINE.json
-input_hint — parquet here, Iceberg on a real deployment), runs
-extract -> triples -> canonicalize -> edge dedup with per-stage metrics,
-writes the edge table partitioned by pred, and prints ONE JSON line of
-stage metrics to stdout. No ``local[...]`` is hard-coded: the master
-comes from spark-submit, so the same script runs at N and 4N executors.
+input_hint — parquet here, Iceberg on a real deployment) and runs
+``persist.materialize_kg`` into the ``--output`` KG root: ``pages_text``,
+``mentions``, ``raw_triples``, ``edges`` (partitioned by pred),
+``manifest`` and ``metrics``. Prints ONE JSON line of stage metrics to
+stdout. Re-submitting the same command resumes the run from its
+manifest; a new ``--run-id`` (for new input) starts over and replaces
+every table. No ``local[...]`` is hard-coded: the master comes from
+spark-submit, so the same script runs at N and 4N executors.
 """
 
 from __future__ import annotations
@@ -39,9 +41,11 @@ def main() -> int:
                     help="synthetic corpus size when --input is omitted")
     ap.add_argument("--vocab", type=int, default=0,
                     help="synthetic entity vocabulary size (0 = legacy)")
-    ap.add_argument("--output", required=True, help="edge table dir")
-    ap.add_argument("--metrics", default=None, help="metrics table dir")
-    ap.add_argument("--run-id", default="submit0")
+    ap.add_argument("--output", required=True, help="KG root dir")
+    ap.add_argument("--run-id", required=True,
+                    help="names this run of this input: re-submitting with "
+                         "the same id resumes it; new input needs a new id, "
+                         "which rebuilds every table under --output")
     args = ap.parse_args()
     if args.input_format == "warc" and not args.input:
         ap.error("--input-format warc requires --input (a WARC dir/glob)")
@@ -55,7 +59,7 @@ def main() -> int:
              .config("spark.sql.session.timeZone", "UTC")
              .getOrCreate())
 
-    from hades_spark.pipeline.metrics import run_kg_pipeline_metered
+    from hades_spark.pipeline.persist import materialize_kg
 
     if args.input and args.input_format == "warc":
         from hades_spark.sources.warc import warc_pages_df
@@ -69,11 +73,9 @@ def main() -> int:
         pages = pages_df_distributed(
             spark, args.pages, seed=42, vocab_size=args.vocab)
 
-    edges, metrics = run_kg_pipeline_metered(
-        spark, pages, metrics_path=args.metrics, run_id=args.run_id)
-    edges.write.mode("overwrite").partitionBy("pred").parquet(args.output)
-    print(json.dumps({"run_id": args.run_id, "stages": metrics,
-                      "edges": metrics["materialize_edges"]["rows"]}))
+    stages = materialize_kg(spark, pages, args.output, run_id=args.run_id)
+    print(json.dumps({"run_id": args.run_id, "stages": stages,
+                      "edges": stages["edges"]["rows"]}))
     spark.stop()
     return 0
 

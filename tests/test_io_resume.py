@@ -190,6 +190,27 @@ class TestManifestResume:
                               n_units=2)
         assert spark.read.parquet(f"{tmp}/out").count() == n1 == 10
 
+    def test_new_run_id_starts_over(self, spark, tmp):
+        """Units another run recorded are not skipped: a new run id over
+        new input rewrites the whole output, and no unit of the old input
+        survives (also units the new input does not touch)."""
+        old = spark.createDataFrame([(f"u{i}", i) for i in range(40)],
+                                    "key string, v int")
+        new = spark.createDataFrame([("u0", 100), ("u1", 101)],
+                                    "key string, v int")
+        assert with_unit(new, "key", 8).select("unit").distinct().count() \
+            < with_unit(old, "key", 8).select("unit").distinct().count()
+        run_stage_with_resume(Manifest(spark, f"{tmp}/m", "runA"), "s", old,
+                              lambda d: d, f"{tmp}/out", "key", n_units=8)
+        m = Manifest(spark, f"{tmp}/m", "runB")
+        run_stage_with_resume(m, "s", new, lambda d: d, f"{tmp}/out", "key",
+                              n_units=8)
+        got = {(r["key"], r["v"]) for r in
+               spark.read.parquet(f"{tmp}/out").collect()}
+        assert got == {("u0", 100), ("u1", 101)}
+        assert {r["unit"] for r in m.completed_units("s").collect()} == \
+            {r["unit"] for r in with_unit(new, "key", 8).collect()}
+
     def test_manifest_lineage(self, spark, tmp):
         """One completed row per input unit, rows_out = the unit's written
         rows (0 when the transform emits nothing); a rerun adds no rows

@@ -9,7 +9,7 @@ from hades_spark.pipeline.corpus import (
     gen_pages,
     pages_df,
 )
-from hades_spark.pipeline.kg import canonical_triples, distinct_edges, ensure_text
+from hades_spark.pipeline.kg import canonical_triples, distinct_edges
 
 
 class TestTripleExtraction:
@@ -54,12 +54,67 @@ class TestNormalization:
 
 
 class TestPipeline:
-    def test_ensure_text_fills_and_matches(self, spark):
-        pages = pages_df(spark, 40, seed=3, with_text=False)
-        filled = ensure_text(pages)
-        truth = {p.url: p.text for p in gen_pages(40, seed=3)}
-        for r in filled.select("url", "text").collect():
-            assert r["text"] == truth[r["url"]]
+    def test_stage1_matches_per_page_functions(self, spark):
+        """The deploy path's stage 1 (one mapInArrow pass) equals the pure
+        per-page functions row for row: null text is extracted through the
+        format router, given text is kept, mentions see the html through
+        the utf-8 -> latin-1 ladder, and a page with neither mentions nor
+        triples gets empty arrays, not nulls. Compared as JSON: map
+        columns cannot go through exceptAll."""
+        import datetime as dt
+
+        from hades_spark.functions.mentions import detect_mentions
+        from hades_spark.pipeline.persist import _stage1
+        from hades_spark.schemas import PAGES
+        from hades_spark.textcore.html import decode_html_bytes
+        from hades_spark.textcore.route import extract_text
+
+        ts = dt.datetime(2025, 1, 1, tzinfo=dt.timezone.utc)
+        bad, md, empty = ("https://bad.example/0.html",
+                          "https://md.example/1.md",
+                          "https://e.example/2.html")
+        odd = spark.createDataFrame([
+            (bad, ts, b"<html><body><p>Caf\xe9 uses Spark.</p>"
+             b"<a href='https://x.example/'>caf\xe9 link</a></body></html>",
+             None, "en"),
+            (md, ts, b"# Title\n[link](https://y.example/) text",
+             "Given uses Text.", "en"),
+            (empty, ts, b"<html><body><p>nothing here</p></body></html>",
+             None, None),
+        ], PAGES)
+        pages = pages_df(spark, 40, seed=3, with_text=False).unionByName(odd)
+
+        def per_page(r):
+            text = r.text if r.text is not None else extract_text(r.url,
+                                                                  r.html)
+            return (r.url, r.warc_ts, r.lang, text,
+                    detect_mentions(decode_html_bytes(r.html), text,
+                                    url=r.url),
+                    extract_triples(text))
+
+        got = _stage1(pages)
+        want = spark.createDataFrame(
+            [per_page(r) for r in pages.collect()], got.schema)
+
+        def as_json(df):
+            # createDataFrame stores a dict's map entries key-sorted
+            sorted_attrs = F.transform("mentions", lambda m: m.withField(
+                "attrs", F.map_from_entries(F.array_sort(
+                    F.map_entries(m["attrs"])))))
+            return df.select("url", "warc_ts", "lang", "text",
+                             F.to_json(sorted_attrs).alias("mentions"),
+                             F.to_json("triples").alias("triples"))
+
+        assert as_json(got).exceptAll(as_json(want)).count() == 0
+        assert as_json(want).exceptAll(as_json(got)).count() == 0
+        rows = {r["url"]: r for r in got.collect()}
+        assert len(rows) == 43
+        for p in gen_pages(40, seed=3):
+            assert rows[p.url]["text"] == p.text
+        assert rows[bad]["text"].startswith("Café uses Spark.")
+        assert rows[bad]["mentions"][0]["surface"] == "café link"
+        assert rows[md]["text"] == "Given uses Text."
+        assert rows[empty]["mentions"] == [] and rows[empty]["triples"] == []
 
     def test_pipeline_precision_recall(self, spark):
         n = 120

@@ -2,49 +2,49 @@
 
 import json
 import subprocess
-import sys
 
 import pytest
-from pyspark.sql import functions as F
 
 
 class TestStageMetrics:
     def test_metered_pipeline_matches_plain(self, spark, tmp_path):
+        """materialize_kg, the metered deploy path, writes the plain build's
+        edges and one metrics row per stage with rows and seconds."""
         from hades_spark.pipeline.corpus import pages_df
         from hades_spark.pipeline.kg import canonical_triples, distinct_edges
-        from hades_spark.pipeline.metrics import run_kg_pipeline_metered
+        from hades_spark.pipeline.persist import materialize_kg
 
+        out = str(tmp_path / "kg")
         pages = pages_df(spark, 60, seed=5, with_text=False)
-        edges, metrics = run_kg_pipeline_metered(
-            spark, pages, metrics_path=str(tmp_path / "m"))
+        stages = materialize_kg(spark, pages, out, run_id="r1", n_units=4)
         plain = distinct_edges(canonical_triples(pages))
-        a = {tuple(r) for r in
-             edges.select("subj", "pred", "obj", "support").collect()}
+        a = {tuple(r) for r in spark.read.parquet(f"{out}/edges")
+             .select("subj", "pred", "obj", "support").collect()}
         b = {tuple(r) for r in
              plain.select("subj", "pred", "obj", "support").collect()}
         assert a == b
-        # one metrics row per stage, rows and throughput populated
-        assert set(metrics) == {"extract_triples", "canonicalize",
-                                "materialize_edges"}
-        for v in metrics.values():
-            assert v["rows"] > 0 and v["seconds"] > 0 \
-                and v["rows_per_sec"] > 0
-        tbl = spark.read.parquet(str(tmp_path / "m"))
+        # one metrics row per stage, rows and seconds populated
+        assert set(stages) == {"extract", "project", "edges"}
+        for v in stages.values():
+            assert v["rows"] > 0 and v["sec"] > 0
+        tbl = spark.read.parquet(f"{out}/metrics")
         assert tbl.count() == 3
-        assert {r["stage"] for r in tbl.select("stage").collect()} == \
-            set(metrics)
+        assert {r["stage"]: (r["rows_out"], r["duration_sec"])
+                for r in tbl.collect()} == \
+            {st: (v["rows"], v["sec"]) for st, v in stages.items()}
 
     def test_metrics_append_across_runs(self, spark, tmp_path):
-        from hades_spark.pipeline.metrics import StageMetrics
+        """A second run into the same KG root under a new run_id
+        rebuilds it and appends its own metrics rows under that run_id."""
+        from hades_spark.pipeline.corpus import pages_df
+        from hades_spark.pipeline.persist import materialize_kg
 
-        p = str(tmp_path / "m2")
+        out = str(tmp_path / "kg")
+        pages = pages_df(spark, 20, seed=5, with_text=False)
         for run in ["r1", "r2"]:
-            m = StageMetrics(spark, p, run_id=run)
-            with m.stage("s") as s:
-                s.rows = 5
-            m.flush()
-        tbl = spark.read.parquet(p)
-        assert tbl.count() == 2
+            materialize_kg(spark, pages, out, run_id=run, n_units=2)
+        tbl = spark.read.parquet(f"{out}/metrics")
+        assert tbl.count() == 6
         assert {r["run_id"] for r in tbl.collect()} == {"r1", "r2"}
 
 
@@ -62,8 +62,7 @@ class TestSparkSubmit:
             capture_output=True, text=True, cwd=repo, check=True,
         ).stdout.strip()
         spark_submit = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
-        out_dir = str(tmp_path / "edges")
-        met_dir = str(tmp_path / "metrics")
+        out_dir = str(tmp_path / "kg")
         env = dict(os.environ)
         env.pop("PYTHONPATH", None)  # the zip must be self-sufficient
         r = subprocess.run(
@@ -72,8 +71,7 @@ class TestSparkSubmit:
              "--py-files", zip_path if os.path.isabs(zip_path)
              else f"{repo}/{zip_path}",
              f"{repo}/scripts/submit_kg.py",
-             "--pages", "60", "--output", out_dir,
-             "--metrics", met_dir, "--run-id", "t1"],
+             "--pages", "60", "--output", out_dir, "--run-id", "t1"],
             capture_output=True, text=True, timeout=420, env=env,
         )
         assert r.returncode == 0, r.stderr[-2000:]
@@ -81,8 +79,8 @@ class TestSparkSubmit:
                 if ln.startswith("{")][-1]
         payload = json.loads(line)
         assert payload["edges"] > 0
-        assert set(payload["stages"]) == {"extract_triples", "canonicalize",
-                                          "materialize_edges"}
+        assert set(payload["stages"]) == {"extract", "project", "edges"}
         import glob
-        assert glob.glob(f"{out_dir}/pred=*/*.parquet")
-        assert glob.glob(f"{met_dir}/*.parquet")
+        assert glob.glob(f"{out_dir}/edges/pred=*/*.parquet")
+        assert glob.glob(f"{out_dir}/metrics/*.parquet")
+        assert glob.glob(f"{out_dir}/manifest/*.parquet")

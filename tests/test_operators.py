@@ -358,13 +358,14 @@ class TestDecodeConsistency:
         assert "�" not in link["surface"]
 
     def test_udf_path_matches(self, spark):
-        from hades_spark.functions.mentions import mentions_table
-        from hades_spark.functions.html_text import with_extracted_text
+        from hades_spark.functions.mentions import explode_mentions
+        from hades_spark.pipeline.persist import _stage1
+        from hades_spark.schemas import PAGES
 
         html = b"<a href='https://x.example/a'>caf\xe9 link text here</a>"
         pages = spark.createDataFrame(
-            [("u1", bytearray(html))], "url string, html binary")
-        out = mentions_table(with_extracted_text(pages)).collect()
+            [("u1", None, bytearray(html), None, None)], PAGES)
+        out = explode_mentions(_stage1(pages)).collect()
         surfaces = [r["surface"] for r in out if r["kind"] == "link"]
         assert surfaces == ["café link text here"]
 

@@ -49,6 +49,24 @@ class TestMaterialize:
         assert got.exceptAll(want).count() == 0
         assert want.exceptAll(got).count() == 0
 
+    def test_new_run_id_rebuilds_from_new_input(self, spark, tmp_path):
+        """A second run into the same root under a new run id writes the
+        second input's KG: no unit recorded by the first run is skipped or
+        left behind."""
+        out = str(tmp_path / "kg")
+        first = pages_df(spark, 40, seed=5, with_text=False)
+        second = pages_df(spark, 6, seed=7, with_text=False)
+        materialize_kg(spark, first, out, run_id="r1", n_units=8)
+        materialize_kg(spark, second, out, run_id="r2", n_units=8)
+        cols = ["subj", "pred", "obj", "support"]
+        got = spark.read.parquet(f"{out}/edges").select(*cols)
+        want = distinct_edges(canonical_triples(second)).select(*cols)
+        assert got.exceptAll(want).count() == 0
+        assert want.exceptAll(got).count() == 0
+        assert {r["url"] for r in
+                spark.read.parquet(f"{out}/pages_text").collect()} == \
+            {r["url"] for r in second.collect()}
+
     def test_crash_resume_byte_identical(self, spark, tmp_path):
         pages = pages_df(spark, 50, seed=9, with_text=False)
 

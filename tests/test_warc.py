@@ -300,12 +300,16 @@ class TestWarcSubmit:
         r = subprocess.run(
             ["python", f"{repo}/scripts/submit_kg.py",
              "--input", str(warc_dir), "--input-format", "warc",
-             "--output", str(tmp_path / "edges"),
-             "--metrics", str(tmp_path / "metrics"), "--run-id", "warc1"],
+             "--output", str(tmp_path / "kg"), "--run-id", "warc1"],
             capture_output=True, text=True, timeout=420, env=env,
         )
         assert r.returncode == 0, r.stderr[-2000:]
         payload = json.loads(
             [ln for ln in r.stdout.splitlines() if ln.startswith("{")][-1])
         assert payload["edges"] > 0
-        assert "extract_triples" in payload["stages"]
+        assert set(payload["stages"]) == {"extract", "project", "edges"}
+        import glob
+        kg = tmp_path / "kg"
+        assert glob.glob(f"{kg}/edges/pred=*/*.parquet")
+        assert glob.glob(f"{kg}/metrics/*.parquet")
+        assert glob.glob(f"{kg}/manifest/*.parquet")
