@@ -185,21 +185,16 @@ def run(sf_dir: str, cpus: int, n_pages: int) -> dict:
     if vocab:
         from pyspark.sql import functions as F
 
+        from hades_spark.operators.canonicalize import ALIAS_LSH, norm_vocab
         from hades_spark.operators.lsh import lsh_bucket_size_stats
 
         raw = kg_caches[0]  # cached raw triples (url, pred, *_norm)
-        norms = (
-            raw.select(F.explode(F.array("subj_norm", "obj_norm"))
-                       .alias("norm"))
-            .dropDuplicates(["norm"])
-            .withColumn("squash", F.regexp_replace("norm", " ", ""))
-            .filter(F.length("squash") > 0)
-        )
+        norms = norm_vocab(raw)
         n_norms = norms.count()  # post-squash-filter: the same count
         # canonical_norm_map's local-vs-distributed decision uses
         from hades_spark.operators.lsh import char_shingles
 
-        # bucket stats over distinct SQUASHES at cap 150 — the blocking
+        # bucket stats over distinct SQUASHES at the alias cap — the blocking
         # the production canonicalization path ACTUALLY runs (norm-level
         # stats at cap 500 would overstate bucket sizes: squash-identical
         # norms are deduped before LSH)
@@ -212,7 +207,8 @@ def run(sf_dir: str, cpus: int, n_pages: int) -> dict:
                               if n_norms > local_threshold else "local"),
             "kg_lsh_buckets": lsh_bucket_size_stats(
                 squashes, "squash", char_shingles(F.col("squash"), 3),
-                num_hashes=16, bands=16, cap=150),
+                num_hashes=ALIAS_LSH["num_hashes"], bands=ALIAS_LSH["bands"],
+                cap=ALIAS_LSH["max_bucket_size"]),
         }
     for c in kg_caches:
         c.unpersist(True)

@@ -17,7 +17,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, functions as F
 
-from .html_text import html_to_text, unescape_html
+from ..textcore.html import html_to_text, unescape_html
+from ..textcore.route import detect_format
 
 # --- HTML structural mentions ------------------------------------------------
 
@@ -323,8 +324,6 @@ def detect_mentions(content: str, text: str,
     detection over the extracted text plus id-less bibliography entries.
     Emission order is deterministic per format.
     """
-    from .extractors import detect_format
-
     fmt = detect_format(url, content)
 
     if fmt == "latex":

@@ -6,24 +6,30 @@ web scale (the same real-world entity surfacing under many keys: 'HADES' /
 'hades' / 'H.A.D.E.S.') is:
 
   1. normalize each surface (lower, strip non-alnum runs to single space),
-  2. MinHash-LSH over character 3-grams of the squashed form -> candidate
-     alias pairs (plus the exact-normalized-form pairs, which LSH finds
-     trivially),
-  3. exact-Jaccard verification at ``threshold``,
-  4. connected components over the verified alias graph,
+  2. MinHash-LSH over character 3-grams of the SQUASH (the norm with its
+     spaces removed) -> candidate alias pairs of squashes,
+  3. exact containment verification at ``threshold``,
+  4. connected components over the verified squash pairs,
   5. canonical_id = min(normalized form) within each component.
 
-Every step is a DataFrame op; the CC loop is the only iteration.
+Steps 2-5 are the alias decision, and this module owns it: ``ALIAS_LSH``
+plus the four functions ``norm_vocab`` -> ``alias_buckets`` ->
+(``lsh.cap_and_self_join``) -> ``verified_alias_pairs`` ->
+``alias_labels``. The build's distributed path and the incremental KG
+state (``pipeline/incremental_kg.py``: init, update, delete) call the
+same functions, which is what keeps a maintained state equal to a
+rebuild. Every step is a DataFrame op; the CC loop is the only iteration.
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from .components import alternating_components
-from .lsh import char_shingles, verified_pairs
+from .lsh import (cap_and_self_join, char_shingles, lsh_buckets,
+                  pair_scores)
 
 _NON_ALNUM = re.compile(r"[^a-z0-9]+")
 
@@ -35,10 +41,21 @@ _NON_ALNUM = re.compile(r"[^a-z0-9]+")
 # value — measured: ~10k such norms stalled an 800k-page reingest for
 # 40+ minutes in the LSH hash stage. Capped norms stay self-canonical,
 # and squash-IDENTICAL giants still merge through the squash key itself
-# (exact dedup needs no shingles). The cap is mirrored by the incremental
-# state's bucket store and the staged oracle pipeline, so the
-# rebuild == incremental invariant holds under it.
+# (exact dedup needs no shingles). ``alias_buckets`` applies the cap, so
+# the build and the incremental state's bucket store share it.
 MAX_ALIAS_SQUASH_LEN = 256
+
+#: The LSH config of the alias decision. ``bands == num_hashes`` (one
+#: signature row per band) so low-Jaccard containment pairs ('spark' in
+#: 'apachespark') still surface as candidates. ``max_bucket_size`` caps
+#: buckets before pairing: an alias pair always shares rare
+#: ENTITY-SPECIFIC grams and therefore co-occurs in a small bucket in
+#: some band; buckets past ~150 are boilerplate-gram collisions that
+#: only generate cross-entity candidate noise (measured on a 154k-squash
+#: vocabulary: cap 500 -> 100 loses ZERO verified pairs and cuts ~27% of
+#: the stage wall). A dict, read at call time, so that patching one key
+#: reaches every caller.
+ALIAS_LSH = dict(num_hashes=16, bands=16, max_bucket_size=150)
 
 
 def normalize_surface(s: str) -> str:
@@ -50,92 +67,103 @@ def normalize_surface_col(c) -> F.Column:
     return F.trim(F.regexp_replace(F.lower(c), r"[^a-z0-9]+", " "))
 
 
-def _distributed_norm_components(
-    norms: DataFrame,
-    threshold: float,
-    num_hashes: int,
-    bands: int,
-    max_bucket_size: int,
-    max_iter: int,
-) -> DataFrame:
-    """(norm, squash) -> (norm, canonical_id), distributed.
+def norm_vocab(rows: DataFrame) -> DataFrame:
+    """-> (norm, squash), one row per distinct norm whose squash is
+    non-empty. ``rows`` holds a ``norm`` column, or is normalized triple
+    rows (``kg.norm_triples``), whose subj_norm and obj_norm are both
+    taken."""
+    norm = F.col("norm") if "norm" in rows.columns \
+        else F.explode(F.array("subj_norm", "obj_norm"))
+    return (
+        rows.select(norm.alias("norm"))
+        .dropDuplicates(["norm"])
+        .withColumn("squash", F.regexp_replace("norm", " ", ""))
+        .filter(F.length("squash") > 0)
+    )
 
-    LSH + verification + CC run over DISTINCT SQUASHES, not norms:
-    squash-identical norms ('alpha beta' / 'alphabeta') have identical
-    shingle sets (containment 1.0 at any threshold), so they cluster FOR
-    FREE via the squash key itself — running them through LSH would put
-    each group in the same bucket in EVERY band (J = 1.0), multiplying
-    candidate-pair volume by bands for zero information. On a 200k-norm
-    vocabulary this removes ~35% of LSH rows and the single largest
-    source of duplicated pairs. canonical_id = min norm across the
-    component (same contract as before: squash-level components are
-    relabeled with the smallest member NORM)."""
-    squashes = norms.select("squash").dropDuplicates(["squash"]) \
+
+def alias_buckets(vocab: DataFrame) -> DataFrame:
+    """(…, squash) -> (squash, band, bh) minhash-LSH bucket rows under
+    ``ALIAS_LSH``. The minhash groupBy collapses repeated squashes, so
+    there is one row per (squash, band) and bucket populations count
+    DISTINCT squashes. Rows are a pure function of the squash, so rows
+    stored earlier (the incremental state's bucket store) and fresh ones
+    are interchangeable. Over-long squashes (``MAX_ALIAS_SQUASH_LEN``)
+    get no rows: they never pair and never count against a cap."""
+    squashes = vocab.select("squash") \
         .filter(F.length("squash") <= MAX_ALIAS_SQUASH_LEN)
-    pairs = verified_pairs(
+    return lsh_buckets(
         squashes, "squash", char_shingles(F.col("squash"), 3),
-        threshold=threshold, metric="containment",
-        num_hashes=num_hashes, bands=bands,
-        max_bucket_size=max_bucket_size,
+        num_hashes=ALIAS_LSH["num_hashes"], bands=ALIAS_LSH["bands"],
+    ).select(F.col("_id").alias("squash"), "band", "bh")
+
+
+def verified_alias_pairs(cand: DataFrame, threshold: float) -> DataFrame:
+    """Candidate squash pairs (a, b, band, bh) -> the ones whose 3-gram
+    containment reaches ``threshold``, keeping their generating bucket
+    (so a bucket store can re-evaluate the cap as buckets change),
+    materialized. Only the squashes of a candidate are shingled, from
+    the squash string itself; ``pair_scores`` hashes them once."""
+    keyed = (
+        cand.select(F.explode(F.array("a", "b")).alias("squash"))
+        .dropDuplicates(["squash"])
+        .select(F.col("squash").alias("_id"),
+                char_shingles(F.col("squash"), 3).alias("sh"))
+        .filter(F.size("sh") > 0)
     )
-    # large-star/small-star: O(log^2 n) rounds regardless of alias-chain
-    # diameter (min-label is O(diameter) and raises past max_iter)
-    comp = alternating_components(pairs, "a", "b", max_iter=max(max_iter, 50))
-    lab = (
-        norms.join(comp, norms.squash == comp.node, "left")
-        .select("norm",
-                F.coalesce("component", F.col("squash")).alias("_comp"))
+    return pair_scores(cand, keyed, threshold, "containment",
+                       keep_cols=("band", "bh")) \
+        .select("a", "b", "band", "bh").localCheckpoint(eager=True)
+
+
+def alias_labels(vocab: DataFrame, pairs: DataFrame) -> DataFrame:
+    """(norm, squash) x squash pairs -> (norm, canonical_id). Components
+    run over squashes, so squash-identical norms ('alpha beta' /
+    'alphabeta') share one through the squash key even with no pair at
+    all; the canonical id is the lexicographically-smallest NORM of the
+    component. ``pairs`` may be provenance rows (a, b, band, bh), one per
+    generating bucket; components consume the distinct pair set."""
+    comp = alternating_components(
+        pairs.select("a", "b").dropDuplicates(["a", "b"]), "a", "b")
+    base = vocab.select("norm", "squash")
+    comp_of = F.coalesce("component", F.col("squash"))
+    return (
+        base.join(comp, base.squash == comp.node, "left")
+        .select("norm", F.min("norm").over(Window.partitionBy(comp_of))
+                .alias("canonical_id"))
     )
-    canon = lab.groupBy("_comp").agg(F.min("norm").alias("canonical_id"))
-    return lab.join(canon, "_comp").select("norm", "canonical_id")
 
 
 def canonical_norm_map(
     norms: DataFrame,
-    norm_col: str = "norm",
     threshold: float = 0.8,
-    num_hashes: int = 16,
-    bands: int = 16,
-    max_bucket_size: int = 150,
-    max_iter: int = 15,
     local_threshold: int = 20_000,
 ) -> DataFrame:
-    """normalized forms (``normalize_surface_col`` output) ->
-    (norm, canonical_id), one row per distinct non-empty norm.
+    """normalized forms (a ``norm`` column of ``normalize_surface_col``
+    output) -> (norm, canonical_id), one row per distinct non-empty norm.
 
     canonical_id is the lexicographically-smallest norm in the norm's
     alias component; norms with no alias partner canonicalize to
     themselves.
 
-    ``max_bucket_size=150`` (tighter than the generic LSH default): an
-    alias pair always shares rare ENTITY-SPECIFIC grams and therefore
-    co-occurs in a small bucket in some band; buckets past ~150 are
-    boilerplate-gram collisions ('the/system/...' substrings) that only
-    generate cross-entity candidate noise. Measured on a 154k-squash
-    vocabulary: cap 500 -> 100 loses ZERO verified pairs and cuts ~27%
-    of the stage wall (the verify join is the stage's dominant cost).
-
     Adaptive execution (same policy as connected_components): when the
     distinct vocabulary fits under ``local_threshold`` the alias graph is
     computed driver-side (exact shingle inverted index + verified
     containment + union-find — a candidate SUPERSET of the banded-LSH
-    path, so never less complete); the distributed LSH + CC path runs
-    above it. ``local_threshold=0`` forces distributed (tests do).
+    path, so never less complete); above it the distributed chain runs
+    (``alias_buckets`` -> ``cap_and_self_join`` ->
+    ``verified_alias_pairs`` -> ``alias_labels``). ``local_threshold=0``
+    forces distributed (tests do).
     """
-    keyed = (
-        norms.select(F.col(norm_col).alias("norm"))
-        .dropDuplicates(["norm"])
-        .withColumn("squash", F.regexp_replace("norm", " ", ""))
-        .filter(F.length("squash") > 0)
-        .localCheckpoint(eager=False)
-    )
-    if local_threshold > 0 and keyed.count() <= local_threshold:
-        spark = norms.sparkSession
-        mapping = _local_canonical(keyed.collect(), threshold, max_bucket_size)
-        return _local_map_df(spark, mapping)
-
-    return _distributed_norm_components(
-        keyed, threshold, num_hashes, bands, max_bucket_size, max_iter)
+    vocab = norm_vocab(norms).localCheckpoint(eager=False)
+    cap = ALIAS_LSH["max_bucket_size"]
+    if local_threshold > 0 and vocab.count() <= local_threshold:
+        mapping = _local_canonical(vocab.collect(), threshold, cap)
+        return _local_map_df(norms.sparkSession, mapping)
+    cand = cap_and_self_join(
+        alias_buckets(vocab).withColumnRenamed("squash", "_id"), cap,
+        keep_bucket=True)
+    return alias_labels(vocab, verified_alias_pairs(cand, threshold))
 
 
 def _local_map_df(spark, mapping: dict[str, str]) -> DataFrame:

@@ -156,9 +156,11 @@ def cap_and_self_join(buckets: DataFrame,
     """(_id, band, bh) bucket rows -> (a, b) candidate pairs, a < b: cap
     pathological buckets (boilerplate) BEFORE the self-join, pair within
     surviving buckets, dedup. THE single copy of the cap + pairing
-    semantics (candidate generation, touch-pruned incremental generation,
-    and the bucket-store path all call it — the incremental == full
-    invariant depends on one owner).
+    semantics: ``lsh_candidate_pairs``, the touch-pruned generator
+    ``touching_pairs_from_buckets`` and the alias decision
+    (``canonicalize.canonical_norm_map``'s distributed path and the
+    incremental KG state's init and delete) all call it — the
+    incremental == rebuild invariant depends on one owner.
 
     ``distinct=False`` skips the final (a, b) dedup — an EXCHANGE of the
     full multi-10M-row candidate frame. Callers feeding the broadcast
@@ -168,9 +170,11 @@ def cap_and_self_join(buckets: DataFrame,
     non-scaling term of the `pairs` stage on shared-bandwidth hosts).
 
     ``keep_bucket=True`` emits (a, b, band, bh) — one row per GENERATING
-    bucket, already unique per (a, b, band, bh) — so callers can persist
-    pair provenance (the incremental-KG store needs it to re-evaluate the
-    bucket cap as buckets grow; see pipeline/incremental_kg.py)."""
+    bucket, so callers can persist pair provenance (the incremental-KG
+    store needs it to re-evaluate the bucket cap as buckets grow; see
+    pipeline/incremental_kg.py). Those rows are unique by construction
+    when the bucket rows are (one self-join row per pair per bucket), so
+    no dedup runs and ``distinct`` does not apply."""
     # Deliberately a window count + streaming self-join, NOT a
     # collect_list + combinatorial array transform: the array shape was
     # measured 2x SLOWER on the 200k-page vocabulary (same-JVM A/B,
@@ -196,11 +200,7 @@ def cap_and_self_join(buckets: DataFrame,
     right = counted.select(F.col("band"), F.col("bh"), F.col("_id").alias("b"))
     joined = left.join(right, ["band", "bh"]).filter(F.col("a") < F.col("b"))
     if keep_bucket:
-        # per-bucket rows are unique by construction (one self-join row
-        # per pair per bucket); distinct only guards caller expectations
-        prov = joined.select("a", "b", "band", "bh")
-        return prov.dropDuplicates(["a", "b", "band", "bh"]) if distinct \
-            else prov
+        return joined.select("a", "b", "band", "bh")
     pairs = joined.select("a", "b")
     return pairs.dropDuplicates(["a", "b"]) if distinct else pairs
 
@@ -401,71 +401,22 @@ def verified_pairs(
                        pairs_distinct=False)
 
 
-def verified_pairs_touching(
-    df: DataFrame,
-    id_col: str,
-    shingle_expr,
-    touch_ids: DataFrame,
-    threshold: float,
-    metric: str,
-    num_hashes: int,
-    bands: int,
-    max_bucket_size: int,
-) -> DataFrame:
-    """``verified_pairs`` restricted to pairs with >= 1 endpoint in
-    ``touch_ids`` (single column named like ``id_col``) — the INCREMENTAL
-    canonicalization candidate generator: only LSH buckets CONTAINING a
-    touch id are self-joined, so adding a small batch of new ids never
-    re-pairs the whole vocabulary. Bucket-size caps are computed over the
-    FULL bucket contents (all rows of the touched buckets), so the pairs
-    emitted here are exactly the touch-adjacent subset of what a full
-    ``verified_pairs`` run over ``df`` emits — the invariant that makes
-    incremental == full-rebuild. The LSH parameters are REQUIRED (no
-    defaults): the invariant only holds when the incremental and the
-    full-rebuild side share one config (``incremental_kg._LSH``), and a
-    default here that drifted from the caller's full-side config would
-    silently break it."""
-    keyed = df.select(F.col(id_col).alias("_id"), shingle_expr.alias("sh")) \
-              .filter(F.size("sh") > 0).localCheckpoint(eager=False)
-    buckets = lsh_buckets(keyed, "_id", "sh",
-                          num_hashes=num_hashes, bands=bands)
-    touch = touch_ids.select(F.col(touch_ids.columns[0]).alias("_id")) \
-                     .dropDuplicates(["_id"])
-    pairs = touching_pairs_from_buckets(buckets, touch, max_bucket_size)
-    return pair_scores(pairs, keyed, threshold, metric)
-
-
 def touching_pairs_from_buckets(buckets: DataFrame, touch: DataFrame,
-                                max_bucket_size: int,
-                                keep_bucket: bool = False) -> DataFrame:
-    """(_id, band, bh) bucket rows + touch id set -> candidate (a, b)
-    pairs with >= 1 endpoint in ``touch``, generated ONLY from buckets
-    containing a touch id; caps apply to the full bucket contents (the
-    touch-adjacent-subset-of-full invariant). Shared by the inline
-    touching generator above and the incremental-KG persistent bucket
-    store (which feeds pre-computed bucket rows). ``touch`` must be
-    unique by ``_id``: each touch row flags the pairs it ends, so a
-    repeated id repeats them. ``keep_bucket=True`` keeps the generating
-    (band, bh) on every row (see ``cap_and_self_join``)."""
-    cols = ["a", "b", "band", "bh"] if keep_bucket else ["a", "b"]
+                                max_bucket_size: int) -> DataFrame:
+    """(_id, band, bh) bucket rows + touch id set -> candidate
+    (a, b, band, bh) rows with >= 1 endpoint in ``touch``, generated ONLY
+    from buckets containing a touch id, one row per generating bucket
+    (see ``cap_and_self_join(keep_bucket=True)``); caps apply to the full
+    bucket contents, so the pairs are exactly the touch-adjacent subset
+    of what the full self-join emits. The incremental KG update feeds it
+    its persistent bucket store (pre-computed bucket rows). ``touch`` must
+    be unique by ``_id``: each touch row flags the pairs it ends, so a
+    repeated id repeats them."""
     keys = buckets.join(touch, "_id", "left_semi").select("band", "bh")
     pruned = buckets.join(keys, ["band", "bh"], "left_semi")
-    pairs = cap_and_self_join(pruned, max_bucket_size, distinct=False,
-                              keep_bucket=keep_bucket)
+    pairs = cap_and_self_join(pruned, max_bucket_size, keep_bucket=True)
     # one pass over the pairs: flag either endpoint against the touch set
     ta = touch.select(F.col("_id").alias("a"), F.lit(True).alias("_ta"))
     tb = touch.select(F.col("_id").alias("b"), F.lit(True).alias("_tb"))
-    out = pairs.join(ta, "a", "left").join(tb, "b", "left") \
-        .filter(F.col("_ta") | F.col("_tb")).select(*cols)
-    # per-bucket rows are unique already; bare pairs repeat per bucket
-    return out if keep_bucket else out.dropDuplicates(cols)
-
-
-def verified_jaccard_pairs(df, id_col, shingle_expr, threshold,
-                           num_hashes: int = 32, bands: int = 8,
-                           max_bucket_size: int = 200) -> DataFrame:
-    """Back-compat alias returning (a, b, jaccard)."""
-    return verified_pairs(
-        df, id_col, shingle_expr, threshold, "jaccard",
-        num_hashes, bands, max_bucket_size,
-    ).withColumnRenamed("score", "jaccard")
+    return pairs.join(ta, "a", "left").join(tb, "b", "left") \
+        .filter(F.col("_ta") | F.col("_tb")).select("a", "b", "band", "bh")

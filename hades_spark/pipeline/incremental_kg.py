@@ -20,11 +20,14 @@ north rule's resumable-pipeline contract implies:
   <state_dir>/cmap/    (norm, canonical_id)
   <state_dir>/edges/   (subj, pred, obj, edge_key, confidence, url, support)
 
-The LSH unit is the SQUASH (norm with spaces removed), NOT the norm —
-mirroring ``canonicalize._distributed_norm_components`` (the full-rebuild
-path) exactly: squash-identical norms cluster for free via the squash key
-(no pairs needed, immune to the bucket cap), and bucket populations are
-counted in DISTINCT SQUASHES, so the cap binds identically in both paths.
+The LSH unit is the SQUASH (norm with spaces removed), NOT the norm: the
+state calls the alias decision of ``operators/canonicalize.py`` — the
+code the full-rebuild path runs — for its vocabulary (``norm_vocab``),
+bucket rows (``alias_buckets``, under ``ALIAS_LSH``), verification
+(``verified_alias_pairs``) and labels (``alias_labels``). Squash-identical
+norms cluster for free via the squash key (no pairs needed, immune to the
+bucket cap), and bucket populations are counted in DISTINCT SQUASHES, so
+the cap binds identically in both paths.
 Keying by norm instead diverged at scale: a large squash-group inflated
 norm-level bucket counts past the cap where the rebuild's squash-level
 count stayed under it (800k-base bench, ~280 edge diffs).
@@ -33,9 +36,10 @@ count stayed under it (800k-base bench, ~280 edge diffs).
   1. extract triples from the NEW pages only (the expensive stage never
      re-runs on old pages);
   2. generate alias pairs TOUCHING a new squash via the bucket store
-     (``touching_pairs_from_buckets`` + ``pair_scores``): only buckets
-     containing a new squash self-join, shingles come from the squash
-     string itself (no raw re-scan), and old-old pairs come from state;
+     (``touching_pairs_from_buckets`` + ``verified_alias_pairs``): only
+     buckets containing a new squash self-join, shingles come from the
+     squash string itself (no raw re-scan), and old-old pairs come from
+     state;
   3. recompute connected components ONLY for affected components (old
      components adjacent to a new or liveness-flipped pair, plus the
      squashes of all new norms — a new norm can MERGE two previously
@@ -57,8 +61,8 @@ purge, re-paired downward cap crossings, removed norms), and
 they share are written once: ``_open_state`` (heal compactions and a
 pairs/cmap swap crash window, init or refuse an incomplete state, replay
 a completed id, build a missing bucket store once, refuse older table
-layouts), ``_verified_pairs``, ``_recluster`` (scope, components, new
-map, ``changed``), ``_rewrite_edges`` and ``_auto_compact``.
+layouts), ``_recluster`` (scope, components, new map, ``changed``),
+``_rewrite_edges`` and ``_auto_compact``.
 
 Every batch-sized intermediate is materialized exactly once, and the
 update is latency-bound (its Spark job count sets its wall time), so:
@@ -106,17 +110,14 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from ..functions.triples import raw_triples
-from ..operators.canonicalize import MAX_ALIAS_SQUASH_LEN
-from ..operators.components import alternating_components
-from ..operators.lsh import (cap_and_self_join, char_shingles, lsh_buckets,
-                             pair_scores, touching_pairs_from_buckets)
+from ..operators.canonicalize import (ALIAS_LSH, alias_buckets,
+                                      alias_labels, norm_vocab,
+                                      verified_alias_pairs)
+from ..operators.lsh import cap_and_self_join, touching_pairs_from_buckets
 from ..sources.io import (delete_by_key, recover_table, replace_table,
                           upsert_by_key, write_table)
 from .kg import apply_canonical_map, distinct_edges, norm_triples
 from .metrics import StageClock
-
-
-_LSH = dict(num_hashes=16, bands=16, max_bucket_size=150)
 
 _RAW_COLS = ["url", "pred", "confidence", "subj_norm", "obj_norm"]
 
@@ -423,52 +424,6 @@ def _append_crawl_ts(spark: SparkSession, pages: DataFrame,
         absorbed=_absorbed_ids(meta, "crawl_ts"))
 
 
-def _bucket_rows(norms: DataFrame) -> DataFrame:
-    """(…, squash) -> (squash, band, bh) minhash-LSH bucket rows over the
-    DISTINCT squashes — the unit the persistent bucket store accumulates
-    (deterministic per squash, so store rows and freshly computed rows are
-    interchangeable). One row per (squash, band) — the minhash groupBy
-    collapses repeated squashes — so bucket populations are counted in
-    distinct squashes, exactly like the full-rebuild path.
-    Over-cap squashes (extraction garbage, see MAX_ALIAS_SQUASH_LEN) get
-    NO bucket rows — same exclusion the rebuild applies — so they never
-    generate candidates, never re-shingle, never count against caps."""
-    squashes = norms.select("squash") \
-        .filter(F.length("squash") <= MAX_ALIAS_SQUASH_LEN)
-    return lsh_buckets(
-        squashes, "squash", char_shingles(F.col("squash"), 3),
-        num_hashes=_LSH["num_hashes"], bands=_LSH["bands"],
-    ).select(F.col("_id").alias("squash"), "band", "bh")
-
-
-def _norms_of(raw: DataFrame) -> DataFrame:
-    return (
-        raw.select(F.explode(F.array("subj_norm", "obj_norm")).alias("norm"))
-        .dropDuplicates(["norm"])
-        .withColumn("squash", F.regexp_replace("norm", " ", ""))
-        .filter(F.length("squash") > 0)
-    )
-
-
-def _cmap_from_pairs(norms: DataFrame, pairs: DataFrame) -> DataFrame:
-    """(norm, squash) x squash-level pairs -> (norm, canonical_id), the
-    exact label semantics of ``_distributed_norm_components``: CC runs
-    over squashes, squash-identical norms share a component via the
-    squash key itself (even with no pairs at all), and the canonical id
-    is the lexicographically-smallest NORM in the component. ``pairs``
-    may be provenance rows (a, b, band, bh) — one row per generating
-    bucket; CC consumes the distinct pair set."""
-    comp = alternating_components(
-        pairs.select("a", "b").dropDuplicates(["a", "b"]), "a", "b")
-    base = norms.select("norm", "squash")
-    comp_of = F.coalesce("component", F.col("squash"))
-    return (
-        base.join(comp, base.squash == comp.node, "left")
-        .select("norm", F.min("norm").over(Window.partitionBy(comp_of))
-                .alias("canonical_id"))
-    )
-
-
 def _touching_rows(raw: DataFrame, norms: DataFrame) -> DataFrame:
     """Rows of ``raw`` whose subj_norm OR obj_norm is in ``norms`` (each
     norm once) — one pass: two left joins flag either side, then a
@@ -498,27 +453,9 @@ def _live_buckets(bk: DataFrame, norms: DataFrame) -> DataFrame:
     return (
         bk.join(F.broadcast(keys), ["band", "bh"], "left_semi")
         .groupBy("band", "bh").agg(F.count("*").alias("_n"))
-        .filter(F.col("_n") <= _LSH["max_bucket_size"])
+        .filter(F.col("_n") <= ALIAS_LSH["max_bucket_size"])
         .select("band", "bh")
     )
-
-
-def _verified_pairs(cand: DataFrame, threshold: float) -> DataFrame:
-    """Candidate pairs (a, b, band, bh) -> the verified ones, keeping
-    their generating bucket (the pairs store is provenance rows, so the
-    cap can be re-evaluated as buckets change), materialized. Only the
-    squashes of a candidate re-shingle, from the squash STRING itself (no
-    raw re-scan); ``pair_scores`` materializes their hashed form once."""
-    keyed = (
-        cand.select(F.explode(F.array("a", "b")).alias("squash"))
-        .dropDuplicates(["squash"])
-        .select(F.col("squash").alias("_id"),
-                char_shingles(F.col("squash"), 3).alias("sh"))
-        .filter(F.size("sh") > 0)
-    )
-    return pair_scores(cand, keyed, threshold, "containment",
-                       keep_cols=("band", "bh")) \
-        .select("a", "b", "band", "bh").localCheckpoint(eager=True)
 
 
 def _recluster(old_cmap: DataFrame, seed_pairs: DataFrame,
@@ -562,7 +499,7 @@ def _recluster(old_cmap: DataFrame, seed_pairs: DataFrame,
         F.broadcast(sub_norms.select(F.col("squash").alias("a"))), "a",
         "left_semi") \
         .join(_live_buckets(store, sub_norms), ["band", "bh"], "left_semi")
-    sub_cmap = _cmap_from_pairs(sub_norms, sub_pairs) \
+    sub_cmap = alias_labels(sub_norms, sub_pairs) \
         .localCheckpoint(eager=True)
     # materialized once: the edge rewrite maps through it twice and the
     # commit writes it. It drops sub_norms and the removed norms (each
@@ -694,34 +631,36 @@ def _init_state_locked(spark: SparkSession, pages: DataFrame,
                 f"was reused with different content; pass a fresh "
                 f"batch_id (new pages are NOT silently dropped)")
     raw = _read_raw(spark, state_dir)
-    norms = _norms_of(raw)
+    vocab = norm_vocab(raw)
     # seed the persistent bucket store (updates extend it per batch and
-    # never re-hash the full vocabulary)
-    _append_batch_dir(_bucket_rows(norms), state_dir, "buckets", batch_id,
-                      absorbed=_absorbed_ids(meta, "buckets"))
+    # never re-hash the full vocabulary). Like an update, hash only the
+    # squashes the store lacks: after a crashed init, the store already
+    # holds that attempt's rows, and a re-init under a fresh id must not
+    # count those squashes twice in the bucket populations
+    bk_root = Path(state_dir) / "buckets"
+    unhashed = vocab
+    if any(bk_root.glob("batch=*")):
+        unhashed = vocab.join(
+            spark.read.parquet(str(bk_root)).select("squash"), "squash",
+            "left_anti")
+    _append_batch_dir(alias_buckets(unhashed), state_dir, "buckets",
+                      batch_id, absorbed=_absorbed_ids(meta, "buckets"))
     clock.mark("hash")
-    # verified SQUASH pairs WITH bucket provenance (a, b, band, bh): the
-    # store keeps one row per generating bucket so later updates can
-    # re-evaluate the cap as buckets grow (liveness = some generating
-    # bucket still <= cap). Same deferred-dedup broadcast tail as
-    # verified_pairs; all rows written here are live by construction
-    # (cap_and_self_join already dropped over-cap buckets).
-    keyed = norms.select("squash").dropDuplicates(["squash"]) \
-        .filter(F.length("squash") <= MAX_ALIAS_SQUASH_LEN).select(
-        F.col("squash").alias("_id"),
-        char_shingles(F.col("squash"), 3).alias("sh")) \
-        .filter(F.size("sh") > 0).localCheckpoint(eager=False)
-    cand_prov = cap_and_self_join(
-        lsh_buckets(keyed, "_id", "sh", num_hashes=_LSH["num_hashes"],
-                    bands=_LSH["bands"]),
-        _LSH["max_bucket_size"], distinct=False, keep_bucket=True)
-    pairs = pair_scores(cand_prov, keyed, threshold, "containment",
-                        pairs_distinct=False, keep_cols=("band", "bh")) \
-        .select("a", "b", "band", "bh")
-    replace_table(pairs, f"{state_dir}/pairs")
+    # verified SQUASH pairs WITH bucket provenance (a, b, band, bh), paired
+    # from the store just written (the vocabulary is hashed once): the
+    # pairs table keeps one row per generating bucket so later updates
+    # can re-evaluate the cap as buckets grow (liveness = some generating
+    # bucket still <= cap). All rows written here are live by
+    # construction (cap_and_self_join drops over-cap buckets).
+    store = spark.read.parquet(str(bk_root)) \
+        .select(F.col("squash").alias("_id"), "band", "bh")
+    replace_table(verified_alias_pairs(
+        cap_and_self_join(store, ALIAS_LSH["max_bucket_size"],
+                          keep_bucket=True), threshold),
+        f"{state_dir}/pairs")
     clock.mark("verify")
     pairs = spark.read.parquet(f"{state_dir}/pairs")
-    cmap = _cmap_from_pairs(norms, pairs)
+    cmap = alias_labels(vocab, pairs)
     replace_table(cmap, f"{state_dir}/cmap")
     clock.mark("components")
     cmap = spark.read.parquet(f"{state_dir}/cmap")
@@ -818,7 +757,7 @@ def _open_state(spark: SparkSession, state_dir: str, op_id: str | None,
                 "edges": spark.read.parquet(f"{state_dir}/edges").count()}
     if not any(Path(state_dir, "buckets").glob("batch=*")):
         _append_batch_dir(
-            _bucket_rows(_norms_of(_read_raw(spark, state_dir, op_id))),
+            alias_buckets(norm_vocab(_read_raw(spark, state_dir, op_id))),
             state_dir, "buckets", "rebuild")
     return _State(spark, state_dir, meta)
 
@@ -896,14 +835,14 @@ def _incremental_update_locked(spark: SparkSession, new_pages: DataFrame,
     # population (populations count distinct squashes, like the rebuild),
     # so it can neither create pairs nor flip liveness — it only joins
     # its squash's component and competes in the min-norm relabel.
-    new_norms = _norms_of(new_raw) \
+    new_norms = norm_vocab(new_raw) \
         .join(old_cmap.select("norm"), "norm", "left_anti") \
         .localCheckpoint(eager=True)
     clock.mark("norms")
     store_old = st.buckets \
         .filter(F.col("batch").cast("string") != F.lit(str(cur_batch))) \
         .select("squash", "band", "bh")
-    new_bk = _bucket_rows(
+    new_bk = alias_buckets(
         new_norms.join(store_old.select("squash"), "squash", "left_anti")) \
         .localCheckpoint(eager=True)
     clock.mark("hash")
@@ -914,9 +853,9 @@ def _incremental_update_locked(spark: SparkSession, new_pages: DataFrame,
     cand = touching_pairs_from_buckets(
         all_bk, new_bk.filter(F.col("band") == 0)
         .select(F.col("squash").alias("_id")),
-        _LSH["max_bucket_size"], keep_bucket=True)
+        ALIAS_LSH["max_bucket_size"])
     # scope, components and the commit all read the verified rows
-    touching_prov = _verified_pairs(cand, threshold)
+    touching_prov = verified_alias_pairs(cand, threshold)
     _append_batch_dir(new_bk, state_dir, "buckets", cur_batch)
     # touching pairs are disjoint from old pairs except on a resume after
     # the pairs swap: the dedup matters only for the table write
@@ -931,7 +870,7 @@ def _incremental_update_locked(spark: SparkSession, new_pages: DataFrame,
     # still-under-cap bucket). Only touched buckets change size, so the
     # scan is O(touched bucket contents); under updates buckets only grow,
     # so a bucket that crossed never comes back.
-    cap = _LSH["max_bucket_size"]
+    cap = ALIAS_LSH["max_bucket_size"]
     crossing = (
         store_old.select("band", "bh", F.lit(0).alias("_new"))
         .join(F.broadcast(new_bk.select("band", "bh")), ["band", "bh"],
@@ -1096,12 +1035,12 @@ def _incremental_delete_locked(spark: SparkSession, urls, state_dir: str,
 
     old_pairs, old_cmap = st.pairs, st.cmap
     store_rows = st.buckets.select("squash", "band", "bh")
-    cap = _LSH["max_bucket_size"]
+    cap = ALIAS_LSH["max_bucket_size"]
 
     # norms that leave the vocabulary: candidates are the removed rows'
     # norms (small); a candidate survives iff some REMAINING row still
     # uses it (column-pruned corpus scan, semi-joined to the candidates)
-    cand_norms = _norms_of(removed)
+    cand_norms = norm_vocab(removed)
     present = remaining \
         .select(F.explode(F.array("subj_norm", "obj_norm")).alias("norm")) \
         .join(F.broadcast(cand_norms.select("norm")), "norm", "left_semi")
@@ -1140,9 +1079,8 @@ def _incremental_delete_locked(spark: SparkSession, urls, state_dir: str,
     cur_store = store_rows.join(removed_sq, "squash", "left_anti")
     members = cur_store.join(crossing, ["band", "bh"], "left_semi") \
         .select(F.col("squash").alias("_id"), "band", "bh")
-    regen = _verified_pairs(
-        cap_and_self_join(members, cap, distinct=False, keep_bucket=True),
-        threshold)
+    regen = verified_alias_pairs(
+        cap_and_self_join(members, cap, keep_bucket=True), threshold)
     # pairs with a removed endpoint leave the store PERMANENTLY (a removed
     # squash may be the bridge of a component — keeping the pair would
     # keep the component merged where a rebuild splits it)

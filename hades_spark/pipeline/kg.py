@@ -5,7 +5,8 @@ pages(url, warc_ts, html, text, lang)
                           decodes, fills null text, emits exploded SVO rows)
   -> surface norms       (JVM-side ``normalize_surface_col``, cached)
   -> canonical_norm_map  (driver-side union-find on small vocabularies, else
-                          LSH + connected components over distinct norms)
+                          LSH + connected components over distinct squashes,
+                          the alias chain the incremental state also runs)
   -> triples             (``apply_canonical_map``: canonical subj/obj, sha256
                           edge key; ``distinct_edges``; write by pred)
 
@@ -147,6 +148,8 @@ def run_kg_pipeline_staged(spark, n_pages: int = 150, seed: int = 42,
     back, so oracle and query aggregate byte-identical inputs.
     """
     from ..functions.triples import raw_triples
+    from ..operators.canonicalize import (ALIAS_LSH, MAX_ALIAS_SQUASH_LEN,
+                                          norm_vocab)
     from ..operators.components import alternating_components
     from ..operators.lsh import char_shingles, verified_pairs
 
@@ -157,19 +160,13 @@ def run_kg_pipeline_staged(spark, n_pages: int = 150, seed: int = 42,
     raw.write.mode("overwrite").parquet(f"{stage_dir}/raw")
     raw = spark.read.parquet(f"{stage_dir}/raw")
 
-    keyed = (
-        raw.select(F.explode(F.array("subj_norm", "obj_norm")).alias("norm"))
-        .dropDuplicates(["norm"])
-        .withColumn("squash", F.regexp_replace("norm", " ", ""))
-        .filter(F.length("squash") > 0)
-    )
-    from ..operators.canonicalize import MAX_ALIAS_SQUASH_LEN
-
+    # norm-level pairs (the oracle's reference shape), under the alias
+    # decision's LSH config
+    vocab = norm_vocab(raw)
     pairs = verified_pairs(
-        keyed.filter(F.length("squash") <= MAX_ALIAS_SQUASH_LEN),
+        vocab.filter(F.length("squash") <= MAX_ALIAS_SQUASH_LEN),
         "norm", char_shingles(F.col("squash"), 3),
-        threshold=threshold, metric="containment",
-        num_hashes=16, bands=16, max_bucket_size=150,
+        threshold=threshold, metric="containment", **ALIAS_LSH,
     ).select("a", "b")
     pairs.write.mode("overwrite").parquet(f"{stage_dir}/pairs")
     pairs = spark.read.parquet(f"{stage_dir}/pairs")

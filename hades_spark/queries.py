@@ -847,11 +847,14 @@ def kg_mentions_q(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.count("*").cast("bigint").alias("cnt")).orderBy("kind")
 
 
+from .operators.canonicalize import ALIAS_LSH  # noqa: E402
 from .pipeline.kg import kg_edges_oracle_sql as _kg_oracle  # noqa: E402
 
 # frozen at import so the Spark writer and the oracle reader always agree,
 # even if HADES_ORACLE_STAGE_ROOT changes later in the process
 _KG_STAGE = f"{STAGE_ROOT}/hades_kg_oracle_stage"
+# the incremental states' oracles re-derive bucket liveness at this cap
+_BUCKET_CAP = ALIAS_LSH["max_bucket_size"]
 
 
 @register("kg_canonical_edges", _kg_oracle(_KG_STAGE))
@@ -870,7 +873,7 @@ def kg_edges_q(spark: SparkSession, sf: str) -> DataFrame:
 _I2_STATE = f"{STAGE_ROOT}/hades_i2_kg_state"
 
 
-@register("i2_incremental_kg", _kg_oracle(_I2_STATE, bucket_cap=150))
+@register("i2_incremental_kg", _kg_oracle(_I2_STATE, bucket_cap=_BUCKET_CAP))
 def i2_incremental(spark: SparkSession, sf: str) -> DataFrame:
     # Incremental KG maintenance (stage-2): build state from the first 120
     # corpus pages, fold pages 120..170 in via incremental_update (bucket-
@@ -2265,7 +2268,8 @@ def q5(spark: SparkSession, sf: str) -> DataFrame:
 _S8_STATE = f"{STAGE_ROOT}/hades_s8_kg_delete_state"
 
 
-@register("s8_incremental_delete", _kg_oracle(_S8_STATE, bucket_cap=150))
+@register("s8_incremental_delete",
+          _kg_oracle(_S8_STATE, bucket_cap=_BUCKET_CAP))
 def s8_incremental_delete_q(spark: SparkSession, sf: str) -> DataFrame:
     # Per-doc purge from the standing KG state (S8, stateful edition):
     # build state from 170 corpus pages, fold an update in, then DELETE
@@ -2299,7 +2303,8 @@ def s8_incremental_delete_q(spark: SparkSession, sf: str) -> DataFrame:
 _S9_STATE = f"{STAGE_ROOT}/hades_s9_kg_reingest_state"
 
 
-@register("s9_incremental_reingest", _kg_oracle(_S9_STATE, bucket_cap=150))
+@register("s9_incremental_reingest",
+          _kg_oracle(_S9_STATE, bucket_cap=_BUCKET_CAP))
 def s9_incremental_reingest_q(spark: SparkSession, sf: str) -> DataFrame:
     # Stale-edge cleanup on re-crawl (S9, stateful edition — the
     # reference's delete-on-reingest contract): build state from 170

@@ -2,9 +2,9 @@
 
 The reference dispatches on file extension (``extractors_markdown.py:93-103``
 routes .html/.htm to the HTML path, everything else to markdown; the LaTeX
-extractor owns .tex). Re-expressed as pure functions usable both inside
-Arrow workers (no pyspark import) and from the Spark binding layer
-(``hades_spark.functions.extractors``).
+extractor owns .tex). Re-expressed as pure functions with no pyspark
+import, so they run inside Arrow workers: the stage-1 ``mapInArrow``
+kernel (``persist._stage1``) and mention detection call them.
 """
 
 from __future__ import annotations

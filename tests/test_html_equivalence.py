@@ -7,7 +7,7 @@ per-url byte-identical contract.
 
 from hypothesis import given, settings, strategies as st
 
-from hades_spark.functions.html_text import (
+from hades_spark.textcore.html import (
     decode_html_bytes, html_to_text, html_to_text_spec, unescape_html,
     unescape_html_spec,
 )

@@ -8,7 +8,7 @@ with U+FFFD fallback), whitespace collapse, and the utf-8 -> latin-1 decode
 ladder (``:80-91``).
 """
 
-from hades_spark.functions.html_text import (
+from hades_spark.textcore.html import (
     decode_html_bytes,
     extract_text_from_html_bytes,
     html_to_text,
@@ -91,32 +91,23 @@ class TestDecodeLadder:
 class TestSparkUdf:
     def test_udf_matches_pure_python(self, spark):
         from hades_spark.pipeline.corpus import gen_pages
+        from hades_spark.pipeline.persist import _stage1
+        from hades_spark.schemas import PAGES
 
         pages = gen_pages(60, seed=7)
         df = spark.createDataFrame(
-            [(p.url, p.html) for p in pages], "url string, html binary"
-        )
-        from hades_spark.functions.extractors import extract_text_routed_udf
-        from hades_spark.functions.html_text import html_to_text_udf
-        from pyspark.sql import functions as F
+            [(p.url, None, p.html, None, None) for p in pages], PAGES)
 
-        # routed UDF = the corpus invariant for every format
-        got = {r["url"]: r["t"] for r in
-               df.select("url", extract_text_routed_udf(
-                   F.col("url"), F.col("html")).alias("t")).collect()}
+        # the stage-1 kernel's routed extraction = the corpus invariant
+        # for every format
+        got = {r["url"]: r["text"] for r in
+               _stage1(df).select("url", "text").collect()}
         for p in pages:
             assert got[p.url] == p.text, f"byte mismatch for {p.url}"
 
-        # the HTML-only UDF must agree on the .html pages (byte-identical
-        # per-url contract)
-        got_html = {r["url"]: r["t"] for r in
-                    df.select("url", html_to_text_udf(
-                        F.col("html")).alias("t")).collect()}
+        # the HTML-only extraction must agree on the .html pages
+        # (byte-identical per-url contract)
         for p in pages:
             if p.url.endswith(".html"):
-                assert got_html[p.url] == p.text, f"byte mismatch {p.url}"
-
-    def test_udf_is_arrow_batched(self):
-        # the UDF must be a pandas (Arrow) UDF, never a row-at-a-time one
-        from hades_spark.functions.html_text import html_to_text_udf
-        assert html_to_text_udf.evalType in (200, 204)  # SCALAR / SCALAR_ITER
+                assert extract_text_from_html_bytes(p.html) == got[p.url], \
+                    f"byte mismatch {p.url}"

@@ -349,6 +349,53 @@ class TestInitCrashResume:
         init_state(spark, _pages(spark, BATCH1), full)
         assert _edge_set(spark, inc) == _edge_set(spark, full)
 
+    def test_reinit_after_crash_hashes_each_squash_once(
+            self, spark, tmp_path, monkeypatch):
+        """A crashed init (raw and bucket rows committed, pairs/cmap/edges
+        missing) re-initialized by an id-less update under a fresh id: the
+        bucket store must still hold one row per (squash, band). Counted
+        twice, quxfoobar/quxfoobare's shared buckets read 4 squashes, so
+        at cap 2 their pair goes dead where a rebuild keeps it live."""
+        from hades_spark.operators.canonicalize import ALIAS_LSH
+
+        e1, e2 = TestCapCrossing.E1, TestCapCrossing.E2
+        a = [(0, f"{e1} uses Zeta."), (1, f"{e2} stores Womp.")]
+        b = [(5, "Zeta cites Blip.")]
+        c = [(10, "Qux Foobar embeds Blip.")]
+        inc, full = str(tmp_path / "reinit"), str(tmp_path / "reinit_full")
+        init_state(spark, _pages(spark, a), inc, batch_id="a")
+        for table in ("pairs", "cmap", "edges"):
+            shutil.rmtree(f"{inc}/{table}")
+        assert incremental_update(spark, _pages(spark, b), inc)["initialized"]
+        bk = spark.read.parquet(f"{inc}/buckets")
+        assert bk.count() == bk.select("squash", "band").distinct().count()
+
+        monkeypatch.setitem(ALIAS_LSH, "max_bucket_size", 2)
+        incremental_update(spark, _pages(spark, c), inc)
+        init_state(spark, _pages(spark, a + b + c), full)
+        assert _edge_set(spark, inc) == _edge_set(spark, full)
+        assert ("qux foobar", "stores", "womp") in \
+            {t[:3] for t in _edge_set(spark, inc)}
+
+    def test_init_hashes_vocabulary_once(self, spark, tmp_path, monkeypatch):
+        """init pairs from the bucket rows it just stored: one minhash
+        pass over the vocabulary, not one for the store and one for the
+        pairs."""
+        import hades_spark.operators.canonicalize as canon
+        import hades_spark.operators.lsh as lsh
+
+        calls = []
+        real = lsh.lsh_buckets
+
+        def counting(*args, **kwargs):
+            calls.append(args)
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(lsh, "lsh_buckets", counting)
+        monkeypatch.setattr(canon, "lsh_buckets", counting)
+        init_state(spark, _pages(spark, BATCH1), str(tmp_path / "once"))
+        assert len(calls) == 1
+
 
 class TestWriterLockAndAutoCompact:
     def test_concurrent_writer_raises(self, spark, tmp_path):
@@ -554,9 +601,9 @@ class TestCapCrossing:
     E1, E2, E3 = "QuxFoobar", "QuxFoobare", "QuxFoobareb"
 
     def _patch_cap(self, monkeypatch, cap=2):
-        import hades_spark.pipeline.incremental_kg as ikg
+        from hades_spark.operators.canonicalize import ALIAS_LSH
 
-        monkeypatch.setitem(ikg._LSH, "max_bucket_size", cap)
+        monkeypatch.setitem(ALIAS_LSH, "max_bucket_size", cap)
 
     def test_crossing_bucket_keeps_incremental_equal_rebuild(
             self, spark, tmp_path, monkeypatch):
@@ -609,8 +656,8 @@ class TestCapCrossing:
 
 
 class TestSquashLevelState:
-    """The state's LSH unit is the SQUASH, mirroring the full rebuild
-    (`canonicalize._distributed_norm_components`): squash-identical norms
+    """The state's LSH unit is the SQUASH, as in the full rebuild (both
+    call `canonicalize`'s alias functions): squash-identical norms
     merge with no pairs at all, bucket populations count DISTINCT
     squashes, and the canonical id is the min NORM of the component. The
     800k-base bench measured the norm-level version diverging ~280 edges
@@ -618,9 +665,9 @@ class TestSquashLevelState:
     rebuild's squash counts did not."""
 
     def _patch_cap(self, monkeypatch, cap):
-        import hades_spark.pipeline.incremental_kg as ikg
+        from hades_spark.operators.canonicalize import ALIAS_LSH
 
-        monkeypatch.setitem(ikg._LSH, "max_bucket_size", cap)
+        monkeypatch.setitem(ALIAS_LSH, "max_bucket_size", cap)
 
     def test_squash_twins_merge_with_no_pairs(self, spark, tmp_path,
                                               monkeypatch):
@@ -803,6 +850,26 @@ class TestJobBudget:
         assert jobs <= self.MAX_DELETE_JOBS, jobs
 
 
+class TestStateEqualsBuild:
+    def test_init_edges_equal_distributed_build(self, spark, tmp_path):
+        """The state and the build's distributed path run one alias
+        decision, so init's edges equal a distributed build of the same
+        pages (TestJobBudget's init corpus)."""
+        from hades_spark.pipeline.corpus import gen_pages
+        from hades_spark.pipeline.kg import canonical_triples, distinct_edges
+
+        rows = [(p.url, p.warc_ts, p.html, None, p.lang) for p in
+                gen_pages(40, seed=42, compute_text=False, richness=5,
+                          vocab_size=150_000)]
+        pages = spark.createDataFrame(rows, PAGES)
+        inc = str(tmp_path / "vsbuild")
+        init_state(spark, pages, inc)
+        built = distinct_edges(canonical_triples(pages, local_threshold=0)) \
+            .select("subj", "pred", "obj", "edge_key", "confidence", "url",
+                    "support")
+        assert _edge_set(spark, inc) == {tuple(r) for r in built.collect()}
+
+
 class TestIncrementalDelete:
     """Per-url purge from the standing state: delete == rebuild over the
     remaining pages (the S8 per-doc-purge seam, stateful edition)."""
@@ -868,10 +935,10 @@ class TestIncrementalDelete:
         cap=2, no pairs were EVER generated (3 > cap). Deleting E3's page
         drops the buckets to 2 <= cap — a rebuild would merge E1/E2, so
         the delete must REGENERATE those never-stored pairs."""
-        import hades_spark.pipeline.incremental_kg as ikg
+        from hades_spark.operators.canonicalize import ALIAS_LSH
         from hades_spark.pipeline.incremental_kg import incremental_delete
 
-        monkeypatch.setitem(ikg._LSH, "max_bucket_size", 2)
+        monkeypatch.setitem(ALIAS_LSH, "max_bucket_size", 2)
         E1, E2, E3 = TestCapCrossing.E1, TestCapCrossing.E2, TestCapCrossing.E3
         pages = [(0, f"{E1} uses Zeta."),
                  (1, f"{E2} stores Womp."),

@@ -64,7 +64,7 @@ class TestMarkdown:
 
 class TestFormatRouting:
     def test_detect_format(self):
-        from hades_spark.functions.extractors import detect_format
+        from hades_spark.textcore.route import detect_format
 
         assert detect_format("https://x/y.html", "") == "html"
         assert detect_format("https://x/readme.md", "") == "markdown"
@@ -72,14 +72,14 @@ class TestFormatRouting:
         assert detect_format("https://x/page", "# Title") == "markdown"
 
     def test_routed_udf(self, spark):
-        from pyspark.sql import functions as F
-
-        from hades_spark.functions.extractors import with_routed_text
+        from hades_spark.pipeline.persist import _stage1
+        from hades_spark.schemas import PAGES
 
         df = spark.createDataFrame(
-            [("https://a/x.html", b"<p>hello &amp; world</p>"),
-             ("https://a/y.md", b"# Title\n\n**bold** text")],
-            "url string, html binary")
-        out = {r["url"]: r["text"] for r in with_routed_text(df).collect()}
+            [("https://a/x.html", None, b"<p>hello &amp; world</p>", None,
+              None),
+             ("https://a/y.md", None, b"# Title\n\n**bold** text", None,
+              None)], PAGES)
+        out = {r["url"]: r["text"] for r in _stage1(df).collect()}
         assert out["https://a/x.html"] == "hello & world"
         assert out["https://a/y.md"] == "Title\n\nbold text"

@@ -134,8 +134,8 @@ class TestWarcSpark:
             b"<html>hello A</html>"
 
     def test_pages_feed_extraction(self, spark, tmp_path):
-        # the parsed pages flow straight into the existing extractor seam
-        from hades_spark.functions.html_text import with_extracted_text
+        # the parsed pages flow straight into the stage-1 kernel
+        from hades_spark.pipeline.persist import _stage1
 
         (tmp_path / "f.warc.gz").write_bytes(make_warc_bytes([{
             "warc_type": "response", "url": "https://e.com/x",
@@ -144,8 +144,8 @@ class TestWarcSpark:
             "headers": {"Content-Type":
                         "application/http; msgtype=response"}}],
             compress="member"))
-        pages = warc_pages_df(spark, str(tmp_path)).drop("text")
-        out = with_extracted_text(pages).collect()
+        pages = warc_pages_df(spark, str(tmp_path))
+        out = _stage1(pages).collect()
         assert "Alpha beta." in out[0]["text"]
 
 
