@@ -106,6 +106,7 @@ import time
 import uuid
 from pathlib import Path
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
@@ -135,6 +136,27 @@ _STORE_COLS = {"raw": _RAW_COLS, "buckets": ["squash", "band", "bh"],
 # carry the crawl timestamp; storing it per-row would bloat every triple).
 # Legacy states without the dir just skip the guard.
 _BATCH_STORES = ("raw", "buckets", "crawl_ts")
+
+# the state tables as written. Read with their schema, a scan skips the
+# Spark job that infers one from a parquet footer, and a store's batch
+# partition column is a string whatever its ids look like
+_SCHEMAS = {
+    "raw": "url string, pred string, confidence double, subj_norm string, "
+           "obj_norm string, batch string",
+    "buckets": "squash string, band int, bh bigint, batch string",
+    "pairs": "a string, b string, band int, bh bigint",
+    "cmap": "norm string, canonical_id string",
+}
+# tables of an older layout, which the incremental == full-rebuild
+# invariant cannot hold over: (data files, the column they lack, why)
+_LEGACY = {
+    "pairs": ("part-*.parquet", "band", "lacks bucket provenance (band, "
+              "bh): a pre-provenance state's pairs cannot be re-evaluated "
+              "against the cap as buckets change"),
+    "buckets": ("batch=*/part-*.parquet", "squash", "is keyed by norm: a "
+                "pre-squash-level state's bucket populations use other cap "
+                "semantics than the full rebuild"),
+}
 
 
 def _emit_metrics(state_dir: str, batch_id, op: str,
@@ -362,18 +384,30 @@ def _compact_state_locked(spark: SparkSession, state_dir: str,
     return {"compacted": True, "id": cid, **stats}
 
 
+def _read_table(spark: SparkSession, state_dir: str,
+                table: str) -> DataFrame:
+    """Read a state table with its known schema. A legacy file would fill
+    a column it lacks with NULLs under that schema, so an older layout is
+    refused first, from the footer of one data file, on the driver."""
+    if table in _LEGACY:
+        files, col, why = _LEGACY[table]
+        part = next(Path(state_dir, table).glob(files), None)
+        if part is not None and col not in pq.read_schema(part).names:
+            raise ValueError(
+                f"{state_dir}/{table} {why}; rebuild the state with "
+                f"init_state over the full corpus once.")
+    return spark.read.schema(_SCHEMAS[table]) \
+        .parquet(f"{state_dir}/{table}")
+
+
 def _read_raw(spark: SparkSession, state_dir: str,
               exclude: str | None = None) -> DataFrame:
     """The raw store is laid out as ``raw/batch=<id>/`` partitions (each
     appended with an atomic dir rename — exactly-once); project away the
-    batch partition column, after dropping batch ``exclude`` if given.
-    The batch column is compared AS STRING: Hive inference types an
-    all-numeric id set as int, and an int-vs-string comparison would NULL
-    out and drop every row (ADVICE r3)."""
-    raw = spark.read.parquet(f"{state_dir}/raw")
+    batch partition column, after dropping batch ``exclude`` if given."""
+    raw = _read_table(spark, state_dir, "raw")
     if exclude is not None:
-        raw = raw.filter(
-            F.col("batch").cast("string") != F.lit(str(exclude)))
+        raw = raw.filter(F.col("batch") != F.lit(str(exclude)))
     return raw.select(*_RAW_COLS)
 
 
@@ -641,8 +675,8 @@ def _init_state_locked(spark: SparkSession, pages: DataFrame,
     unhashed = vocab
     if any(bk_root.glob("batch=*")):
         unhashed = vocab.join(
-            spark.read.parquet(str(bk_root)).select("squash"), "squash",
-            "left_anti")
+            _read_table(spark, state_dir, "buckets").select("squash"),
+            "squash", "left_anti")
     _append_batch_dir(alias_buckets(unhashed), state_dir, "buckets",
                       batch_id, absorbed=_absorbed_ids(meta, "buckets"))
     clock.mark("hash")
@@ -652,18 +686,18 @@ def _init_state_locked(spark: SparkSession, pages: DataFrame,
     # can re-evaluate the cap as buckets grow (liveness = some generating
     # bucket still <= cap). All rows written here are live by
     # construction (cap_and_self_join drops over-cap buckets).
-    store = spark.read.parquet(str(bk_root)) \
+    store = _read_table(spark, state_dir, "buckets") \
         .select(F.col("squash").alias("_id"), "band", "bh")
     replace_table(verified_alias_pairs(
         cap_and_self_join(store, ALIAS_LSH["max_bucket_size"],
                           keep_bucket=True), threshold),
         f"{state_dir}/pairs")
     clock.mark("verify")
-    pairs = spark.read.parquet(f"{state_dir}/pairs")
+    pairs = _read_table(spark, state_dir, "pairs")
     cmap = alias_labels(vocab, pairs)
     replace_table(cmap, f"{state_dir}/cmap")
     clock.mark("components")
-    cmap = spark.read.parquet(f"{state_dir}/cmap")
+    cmap = _read_table(spark, state_dir, "cmap")
     write_table(distinct_edges(apply_canonical_map(raw, cmap)),
                 f"{state_dir}/edges",
                 partition_by=["pred"])
@@ -683,40 +717,25 @@ def _init_state_locked(spark: SparkSession, pages: DataFrame,
 
 class _State:
     """An opened state dir: its manifest plus its pairs, cmap and bucket
-    tables, each read on first use (each read costs a Spark job, and
-    reingest itself reads none). A table of an older layout, which the
-    incremental == full-rebuild invariant cannot hold over, is refused."""
+    tables, each read on first use (reingest itself reads none; an older
+    layout is refused by ``_read_table``)."""
 
     def __init__(self, spark: SparkSession, state_dir: str,
                  meta: dict) -> None:
         self.spark, self.dir, self.meta = spark, state_dir, meta
 
-    def _read(self, table: str, col: str, legacy: str) -> DataFrame:
-        df = self.spark.read.parquet(f"{self.dir}/{table}")
-        if col not in df.columns:
-            raise ValueError(
-                f"{self.dir}/{table} {legacy}; rebuild the state with "
-                f"init_state over the full corpus once.")
-        return df
-
     @functools.cached_property
     def pairs(self) -> DataFrame:
-        return self._read(
-            "pairs", "band", "lacks bucket provenance (band, bh): a "
-            "pre-provenance state's pairs cannot be re-evaluated against "
-            "the cap as buckets change")
+        return _read_table(self.spark, self.dir, "pairs")
 
     @functools.cached_property
     def cmap(self) -> DataFrame:
-        return self.spark.read.parquet(f"{self.dir}/cmap")
+        return _read_table(self.spark, self.dir, "cmap")
 
     @functools.cached_property
     def buckets(self) -> DataFrame:
         """(squash, band, bh, batch)"""
-        return self._read(
-            "buckets", "squash", "is keyed by norm: a pre-squash-level "
-            "state's bucket populations use other cap semantics than the "
-            "full rebuild")
+        return _read_table(self.spark, self.dir, "buckets")
 
 
 def _open_state(spark: SparkSession, state_dir: str, op_id: str | None,
@@ -839,8 +858,7 @@ def _incremental_update_locked(spark: SparkSession, new_pages: DataFrame,
         .join(old_cmap.select("norm"), "norm", "left_anti") \
         .localCheckpoint(eager=True)
     clock.mark("norms")
-    store_old = st.buckets \
-        .filter(F.col("batch").cast("string") != F.lit(str(cur_batch))) \
+    store_old = st.buckets.filter(F.col("batch") != F.lit(str(cur_batch))) \
         .select("squash", "band", "bh")
     new_bk = alias_buckets(
         new_norms.join(store_old.select("squash"), "squash", "left_anti")) \
@@ -924,7 +942,7 @@ def _incremental_update_locked(spark: SparkSession, new_pages: DataFrame,
     clock.mark("commit")
     # merged_pairs runs once, in its write: count the written table
     n |= _row_counts(
-        {**rewritten, "verify": spark.read.parquet(f"{state_dir}/pairs")})
+        {**rewritten, "verify": _read_table(spark, state_dir, "pairs")})
     stages = _emit_metrics(state_dir, cur_batch, "update", clock.secs, {
         k: n[k] for k in ("extract", "norms", "hash", "verify", "scope",
                           "components")} | {"edges": n["recomputed"]})

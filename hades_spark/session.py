@@ -2,9 +2,29 @@
 
 Centralises the config we rely on everywhere:
 - AQE on (runtime re-planning, skew-join splitting at 100 TB),
-- Arrow on (all our UDFs are pandas UDFs / mapInPandas),
+- Arrow on (the Python stages are ``mapInArrow`` kernels and Arrow-backed
+  local frames),
 - shuffle partitions sized to the local core count (on a real cluster this
-  is set by spark-submit; 2-3x total cores is the usual starting point).
+  is set by spark-submit; 2-3x total cores is the usual starting point),
+- a generated-code cache that holds the KG engine's working set.
+
+The codegen cache. Spark compiles each whole-stage-codegen and expression
+class with Janino and keeps the result in one JVM-wide LRU keyed by the
+generated source. Its size, ``spark.sql.codegen.cache.maxEntries``, is a
+static conf with a default of 100, and it is read once, when the first
+class of the JVM compiles. The incremental operations overflow that
+default: a 100-page ``incremental_update`` generates 245 distinct
+classes and a delete 120, so at 100 entries the LRU evicted each class
+before its next use. Every update then recompiled about 315 classes (a
+delete 283, an init 111-124) and ran them as fresh bytecode that the JIT
+had not compiled yet. ``CODEGEN_CACHE_ENTRIES`` sizes the cache to every
+KG operation's classes together, with margin, so a warm operation
+compiles nothing. Tasks read it from the SQL conf that Spark propagates
+as task local properties, where an executor's first compile finds it
+(checked in local mode only, where driver and executors share one JVM
+and one cache). A session built outside ``get_spark`` keeps Spark's 100,
+and so does a JVM whose first class compiled before a ``get_spark``
+session set the conf.
 """
 
 from __future__ import annotations
@@ -13,6 +33,16 @@ import os
 import threading
 
 from pyspark.sql import SparkSession
+
+#: ``spark.sql.codegen.cache.maxEntries``. One round of init (400 Zipf
+#: pages), two 100-page updates, a delete, a reingest, a distributed build
+#: and ``materialize_kg`` generates 619 distinct classes in one
+#: ``local[4]`` session. A second round on fresh state dirs compiles 6 at
+#: this cap: adaptive plans that the first round's data never chose. The
+#: cap is about 3x the measured set, so larger batches' plan variants and
+#: the other operators sharing a JVM still fit; JVM metaspace stayed near
+#: 180 MB with the cap at 100 or here.
+CODEGEN_CACHE_ENTRIES = 2000
 
 #: app ids whose python-worker pool has been (or is being) pre-warmed
 _WARMED_APPS: set[str] = set()
@@ -106,7 +136,8 @@ def get_spark(
             (or ``local[*]``) when unset. On a real cluster pass None and
             let spark-submit decide.
         shuffle_partitions: override for ``spark.sql.shuffle.partitions``.
-        extra_conf: additional key/value config pairs.
+        extra_conf: additional key/value config pairs; they override the
+            defaults above, ``spark.sql.codegen.cache.maxEntries`` too.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -135,6 +166,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -237,7 +237,11 @@ def _upsert_partition_scoped(
         f"`{f.name}` {f.dataType.simpleString()}"
         for f in affected.schema.fields))).alias("_aff")
 
-    live = spark.read.parquet(str(p)).alias("_live")
+    # an upsert reads the table with its new rows' schema: no footer
+    # inference job, and partition values typed as the rows type them
+    reader = spark.read if new_rows is None \
+        else spark.read.schema(new_rows.schema)
+    live = reader.parquet(str(p)).alias("_live")
     existing = live.join(aff, nullsafe_on(live, aff, partition_by),
                          "left_semi")
     existing_a = existing.alias("_ex")

@@ -816,14 +816,16 @@ class TestJobBudget:
     MAX_JOBS = 105
     MAX_DELETE_JOBS = 121
 
-    def test_update_job_count_within_budget(self, spark, tmp_path):
+    @staticmethod
+    def _round(spark, inc):
+        """init over 40 pages, a 20-page update, a 12-url delete; returns
+        each operation's (stats, Spark jobs)."""
         from hades_spark.pipeline.corpus import gen_pages
         from hades_spark.pipeline.incremental_kg import incremental_delete
 
         rows = [(p.url, p.warc_ts, p.html, None, p.lang) for p in
                 gen_pages(60, seed=42, compute_text=False, richness=5,
                           vocab_size=150_000)]
-        inc = str(tmp_path / "budget")
         init_state(spark, spark.createDataFrame(rows[:40], PAGES), inc)
         sc = spark.sparkContext
 
@@ -837,17 +839,45 @@ class TestJobBudget:
             return stats, len(sc.statusTracker().getJobIdsForGroup(group))
 
         batch = spark.createDataFrame(rows[40:], PAGES)
-        stats, jobs = jobs_of(
-            "incremental-update-budget",
-            lambda: incremental_update(spark, batch, inc, batch_id="b1"))
+        gone = [r[0] for r in rows[0:60:5]]
+        return {
+            "update": jobs_of(
+                f"incremental-update-budget-{inc}",
+                lambda: incremental_update(spark, batch, inc, batch_id="b1")),
+            "delete": jobs_of(
+                f"incremental-delete-budget-{inc}",
+                lambda: incremental_delete(spark, gone, inc, delete_id="d1")),
+        }
+
+    @pytest.fixture(scope="class")
+    def first_round(self, spark, tmp_path_factory):
+        return self._round(spark, str(tmp_path_factory.mktemp("budget")))
+
+    def test_update_job_count_within_budget(self, first_round):
+        stats, jobs = first_round["update"]
         assert stats["changed_norms"] > 0  # the update relabeled norms
         assert jobs <= self.MAX_JOBS, jobs
-        gone = [r[0] for r in rows[0:60:5]]
-        stats, jobs = jobs_of(
-            "incremental-delete-budget",
-            lambda: incremental_delete(spark, gone, inc, delete_id="d1"))
+        stats, jobs = first_round["delete"]
         assert stats["edges_deleted"] > 0  # the delete dropped edge keys
         assert jobs <= self.MAX_DELETE_JOBS, jobs
+
+    #: classes a warm round may still compile: adaptive execution can
+    #: re-plan a stage differently when its inputs finish in another
+    #: order, and that plan's classes are new (the full tier-1 suite saw 1)
+    MAX_WARM_COMPILES = 5
+
+    def test_warm_round_compiles_nothing(self, spark, first_round,
+                                         tmp_path):
+        """The same round again, on a fresh state dir, finds the generated
+        classes of init, update and delete in Spark's codegen cache
+        (``get_spark`` sizes it to the KG engine's working set). At Spark's
+        default of 100 entries the LRU evicts each class before its next
+        use, and this round compiles hundreds of them."""
+        codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        compiled = codegen.METRIC_COMPILATION_TIME().getCount()
+        self._round(spark, str(tmp_path / "warm"))
+        recompiled = codegen.METRIC_COMPILATION_TIME().getCount() - compiled
+        assert recompiled <= self.MAX_WARM_COMPILES, recompiled
 
 
 class TestStateEqualsBuild:
