@@ -120,7 +120,19 @@ from ..sources.io import (delete_by_key, recover_table, replace_table,
 from .kg import apply_canonical_map, distinct_edges, norm_triples
 from .metrics import StageClock
 
-_RAW_COLS = ["url", "pred", "confidence", "subj_norm", "obj_norm"]
+# the state tables' columns and types as written; a batch store adds its
+# ``batch`` partition column. Read with this schema, a scan skips the
+# Spark job that infers one from a parquet footer, and ``batch`` is a
+# string whatever its ids look like. crawl_ts is read by inference: its
+# warc_ts keeps the type of the pages it came from
+_SCHEMAS = {
+    "raw": {"url": "string", "pred": "string", "confidence": "double",
+            "subj_norm": "string", "obj_norm": "string"},
+    "buckets": {"squash": "string", "band": "int", "bh": "bigint"},
+    "pairs": {"a": "string", "b": "string", "band": "int", "bh": "bigint"},
+    "cmap": {"norm": "string", "canonical_id": "string"},
+}
+_RAW_COLS = list(_SCHEMAS["raw"])
 
 # edge-key sets broadcast only up to this many MEASURED candidate rows:
 # 500k rows of a sha256 key or a (subj, pred, obj) triple stay within
@@ -128,7 +140,7 @@ _RAW_COLS = ["url", "pred", "confidence", "subj_norm", "obj_norm"]
 # large key set (SURVEY §7.4.3, VERDICT r3 #1) falls back to shuffle joins
 _BROADCAST_KEYS_MAX = 500_000
 
-_STORE_COLS = {"raw": _RAW_COLS, "buckets": ["squash", "band", "bh"],
+_STORE_COLS = {"raw": _RAW_COLS, "buckets": list(_SCHEMAS["buckets"]),
                "crawl_ts": ["url", "warc_ts"]}
 # batch-dir stores that append/compact/heal together. crawl_ts is a tiny
 # (url, warc_ts) sidecar — one row per url per ingesting batch — consulted
@@ -137,16 +149,6 @@ _STORE_COLS = {"raw": _RAW_COLS, "buckets": ["squash", "band", "bh"],
 # Legacy states without the dir just skip the guard.
 _BATCH_STORES = ("raw", "buckets", "crawl_ts")
 
-# the state tables as written. Read with their schema, a scan skips the
-# Spark job that infers one from a parquet footer, and a store's batch
-# partition column is a string whatever its ids look like
-_SCHEMAS = {
-    "raw": "url string, pred string, confidence double, subj_norm string, "
-           "obj_norm string, batch string",
-    "buckets": "squash string, band int, bh bigint, batch string",
-    "pairs": "a string, b string, band int, bh bigint",
-    "cmap": "norm string, canonical_id string",
-}
 # tables of an older layout, which the incremental == full-rebuild
 # invariant cannot hold over: (data files, the column they lack, why)
 _LEGACY = {
@@ -365,8 +367,12 @@ def _compact_state_locked(spark: SparkSession, state_dir: str,
         elig = sorted(dirs & (set(meta["completed"]) | extra))
         if len(elig) < min_batches:
             continue
-        combined = spark.read.parquet(str(root)) \
-            .filter(F.col("batch").cast("string").isin(elig)) \
+        if store in _SCHEMAS:
+            combined = _read_table(spark, state_dir, store)
+        else:  # crawl_ts: an all-numeric id set infers an int batch
+            combined = spark.read.parquet(str(root)) \
+                .withColumn("batch", F.col("batch").cast("string"))
+        combined = combined.filter(F.col("batch").isin(elig)) \
             .select(*_STORE_COLS[store])
         if store == "crawl_ts":
             # a url re-crawled across absorbed batches keeps only its
@@ -396,8 +402,10 @@ def _read_table(spark: SparkSession, state_dir: str,
             raise ValueError(
                 f"{state_dir}/{table} {why}; rebuild the state with "
                 f"init_state over the full corpus once.")
-    return spark.read.schema(_SCHEMAS[table]) \
-        .parquet(f"{state_dir}/{table}")
+    cols = _SCHEMAS[table] | (
+        {"batch": "string"} if table in _BATCH_STORES else {})
+    ddl = ", ".join(f"{c} {t}" for c, t in cols.items())
+    return spark.read.schema(ddl).parquet(f"{state_dir}/{table}")
 
 
 def _read_raw(spark: SparkSession, state_dir: str,

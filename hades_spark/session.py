@@ -19,12 +19,18 @@ before its next use. Every update then recompiled about 315 classes (a
 delete 283, an init 111-124) and ran them as fresh bytecode that the JIT
 had not compiled yet. ``CODEGEN_CACHE_ENTRIES`` sizes the cache to every
 KG operation's classes together, with margin, so a warm operation
-compiles nothing. Tasks read it from the SQL conf that Spark propagates
-as task local properties, where an executor's first compile finds it
-(checked in local mode only, where driver and executors share one JVM
-and one cache). A session built outside ``get_spark`` keeps Spark's 100,
-and so does a JVM whose first class compiled before a ``get_spark``
-session set the conf.
+compiles nothing once adaptive execution has run its plan in the stage
+orders it takes: AQE numbers a query's codegen stages in the order it
+creates their query stages, which follows the order earlier stages
+finish in, and the number is part of the class name, so a new order
+compiles those stages once more. Tasks read the size from the SQL conf
+that Spark propagates as task local properties, where an executor's
+first compile finds it (checked in local mode only, where driver and
+executors share one JVM and one cache). A session built outside
+``get_spark`` keeps Spark's 100 (``scripts/submit_kg.py``, whose one
+``materialize_kg`` runs each stage once, has nothing to reuse), and so
+does a JVM whose first class compiled before a ``get_spark`` session set
+the conf.
 """
 
 from __future__ import annotations
@@ -37,11 +43,11 @@ from pyspark.sql import SparkSession
 #: ``spark.sql.codegen.cache.maxEntries``. One round of init (400 Zipf
 #: pages), two 100-page updates, a delete, a reingest, a distributed build
 #: and ``materialize_kg`` generates 619 distinct classes in one
-#: ``local[4]`` session. A second round on fresh state dirs compiles 6 at
-#: this cap: adaptive plans that the first round's data never chose. The
-#: cap is about 3x the measured set, so larger batches' plan variants and
-#: the other operators sharing a JVM still fit; JVM metaspace stayed near
-#: 180 MB with the cap at 100 or here.
+#: ``local[4]`` session. At this cap a second round on fresh state dirs
+#: compiles 0 to 8 and a third 0 to 4 (stage orders an earlier round did
+#: not take, see above). The cap is about 3x the measured set, so
+#: larger batches' plan variants and the other operators sharing a JVM
+#: still fit; JVM metaspace stayed near 180 MB with the cap at 100 or here.
 CODEGEN_CACHE_ENTRIES = 2000
 
 #: app ids whose python-worker pool has been (or is being) pre-warmed

@@ -50,18 +50,13 @@ def main() -> int:
     if args.input_format == "warc" and not args.input:
         ap.error("--input-format warc requires --input (a WARC dir/glob)")
 
-    # spark-submit provides master/deploy config; plain builder here, with
-    # get_spark's codegen cache size (a static conf: a later set is ignored)
+    # spark-submit provides master/deploy config; plain builder here
     from pyspark.sql import SparkSession
-
-    from hades_spark.session import CODEGEN_CACHE_ENTRIES
 
     spark = (SparkSession.builder.appName("hades_kg_submit")
              .config("spark.sql.adaptive.enabled", "true")
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
              .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.sql.codegen.cache.maxEntries",
-                     str(CODEGEN_CACHE_ENTRIES))
              .getOrCreate())
 
     from hades_spark.pipeline.persist import materialize_kg

@@ -861,23 +861,33 @@ class TestJobBudget:
         assert stats["edges_deleted"] > 0  # the delete dropped edge keys
         assert jobs <= self.MAX_DELETE_JOBS, jobs
 
-    #: classes a warm round may still compile: adaptive execution can
-    #: re-plan a stage differently when its inputs finish in another
-    #: order, and that plan's classes are new (the full tier-1 suite saw 1)
-    MAX_WARM_COMPILES = 5
+    #: warm rounds the guard runs, at most, until one compiles nothing
+    WARM_ROUNDS = 3
 
     def test_warm_round_compiles_nothing(self, spark, first_round,
                                          tmp_path):
-        """The same round again, on a fresh state dir, finds the generated
-        classes of init, update and delete in Spark's codegen cache
-        (``get_spark`` sizes it to the KG engine's working set). At Spark's
-        default of 100 entries the LRU evicts each class before its next
-        use, and this round compiles hundreds of them."""
-        codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
-        compiled = codegen.METRIC_COMPILATION_TIME().getCount()
-        self._round(spark, str(tmp_path / "warm"))
-        recompiled = codegen.METRIC_COMPILATION_TIME().getCount() - compiled
-        assert recompiled <= self.MAX_WARM_COMPILES, recompiled
+        """The same round, run again on fresh state dirs, finds the
+        generated classes of init, update and delete in Spark's codegen
+        cache (``get_spark`` sizes it to the KG engine's working set), so
+        a warm round compiles none. A warm round can still compile a few
+        (0 to 8 seen) when adaptive execution takes a stage order it has
+        not taken before: it numbers a query's codegen stages in the order
+        their query stages are created, which follows the order earlier
+        stages finish in, and the number is part of the generated class
+        name. Those variants are cached too, so the rounds repeat until
+        one compiles none. At Spark's default of 100 entries the LRU
+        evicts each class before its next use, and every round compiles
+        hundreds of them."""
+        count = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+            .METRIC_COMPILATION_TIME().getCount
+        compiled = []
+        for i in range(self.WARM_ROUNDS):
+            before = count()
+            self._round(spark, str(tmp_path / f"warm{i}"))
+            compiled.append(count() - before)
+            if compiled[-1] == 0:
+                break
+        assert compiled[-1] == 0, compiled
 
 
 class TestStateEqualsBuild:
