@@ -1,6 +1,6 @@
 """Canonical key normalization — the reference's identity layer as pure
-string rules, provided both as plain Python (for UDF internals / tests) and
-as Spark Column expressions (JVM-side, codegen-friendly — the hot path).
+string rules, expressed as Spark Column expressions (JVM-side,
+codegen-friendly — the hot path), plus the arXiv id date parser.
 
 Semantics per ``/root/reference/core/database/keys.py:15-87`` and
 ``core/analyzers/python_edge_resolver.py:28-47``; edge content-hash keys per
@@ -10,50 +10,10 @@ Semantics per ``/root/reference/core/database/keys.py:15-87`` and
 
 from __future__ import annotations
 
-import hashlib
 import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-_VERSION_SUFFIX = re.compile(r"v\d+$")
-
-
-# --- pure python ------------------------------------------------------------
-
-def normalize_document_key(raw_id: str) -> str:
-    """Strip a trailing ``v<digits>`` version suffix; '.'/'/' -> '_'."""
-    return _VERSION_SUFFIX.sub("", raw_id).replace(".", "_").replace("/", "_")
-
-
-def chunk_key(document_key: str, chunk_index: int) -> str:
-    return f"{document_key}_chunk_{chunk_index}"
-
-
-def embedding_key(chunk_key_value: str) -> str:
-    return f"{chunk_key_value}_emb"
-
-
-def file_key(rel_path: str) -> str:
-    return rel_path.replace("/", "_").replace(".", "_")
-
-
-def strip_version(raw_id: str) -> str:
-    return _VERSION_SUFFIX.sub("", raw_id)
-
-
-def symbol_key(file_rel_path: str, qualified_name: str) -> str:
-    """File-scoped symbol key: sanitize name, collapse 3+ underscores to 2."""
-    safe = qualified_name.replace(".", "_")
-    safe = re.sub(r"[^a-zA-Z0-9_]", "_", safe)
-    safe = re.sub(r"_{3,}", "__", safe).strip("_")
-    return f"{file_key(file_rel_path)}__{safe}"
-
-
-def edge_content_key(src: str, dst: str, rel: str) -> str:
-    """sha256 content-hash edge key (stable, idempotent upserts)."""
-    return hashlib.sha256(f"{src}|{dst}|{rel}".encode()).hexdigest()
-
 
 _ARXIV_YYMM = re.compile(r"^(\d{2})(\d{2})\.")
 
@@ -72,16 +32,8 @@ def arxiv_year_month(arxiv_id: str) -> tuple[int, int] | None:
 
 # --- Spark column expressions (JVM-side; stay in whole-stage codegen) -------
 
-def normalize_document_key_col(c: Column) -> Column:
-    return F.translate(F.regexp_replace(c, r"v\d+$", ""), "./", "__")
-
-
 def chunk_key_col(doc_key: Column, chunk_index: Column) -> Column:
     return F.concat_ws("_chunk_", doc_key, chunk_index.cast("string"))
-
-
-def embedding_key_col(chunk_key_c: Column) -> Column:
-    return F.concat(chunk_key_c, F.lit("_emb"))
 
 
 def file_key_col(c: Column) -> Column:

@@ -15,10 +15,10 @@ web scale (the same real-world entity surfacing under many keys: 'HADES' /
 Steps 2-5 are the alias decision, and this module owns it: ``ALIAS_LSH``
 plus the four functions ``norm_vocab`` -> ``alias_buckets`` ->
 (``lsh.cap_and_self_join``) -> ``verified_alias_pairs`` ->
-``alias_labels``. The build's distributed path and the incremental KG
-state (``pipeline/incremental_kg.py``: init, update, delete) call the
-same functions, which is what keeps a maintained state equal to a
-rebuild. Every step is a DataFrame op; the CC loop is the only iteration.
+``alias_labels``. The build's distributed path, the incremental KG
+state (``pipeline/incremental_kg.py``: init, update, delete) and the
+staged oracle pipeline (``kg.run_kg_pipeline_staged``) call the same
+functions, which is what keeps a maintained state equal to a rebuild. Every step is a DataFrame op; the CC loop is the only iteration.
 """
 
 from __future__ import annotations
@@ -146,7 +146,7 @@ def canonical_norm_map(
     alias component; norms with no alias partner canonicalize to
     themselves.
 
-    Adaptive execution (same policy as connected_components): when the
+    Adaptive execution (the policy of ``alternating_components``): when the
     distinct vocabulary fits under ``local_threshold`` the alias graph is
     computed driver-side (exact shingle inverted index + verified
     containment + union-find — a candidate SUPERSET of the banded-LSH

@@ -1,102 +1,20 @@
 """Connected components over a pair/edge DataFrame — iterative joins.
 
-GraphFrames-style min-label propagation expressed with plain DataFrame ops
-(the traversal-join pattern the reference runs through AQL,
-``database.py:2646-2660``): each node starts labelled with itself, and every
-round adopts the minimum label among itself and its neighbors, until no
-label changes. Rounds are O(graph diameter) — for near-dup / alias graphs
-the diameter is tiny; ``max_iter`` caps runaway chains (SURVEY §7.4.3).
+The alternating large-star/small-star algorithm expressed with plain
+DataFrame ops (the traversal-join pattern the reference runs through AQL,
+``database.py:2646-2660``): component = min node id reachable, in
+O(log^2 n) rounds whatever the graph's diameter, so long boilerplate-anchor
+chains (SURVEY §7.4.3) stay cheap. Pair sets small enough to collect run a
+driver-side union-find with the same result.
 
-Scale notes: each round is one shuffle on ``node``; frontiers are cached
-and localCheckpoint()ed every few rounds to truncate lineage so the plan
-doesn't grow exponentially across iterations.
+Scale notes: each round is two shuffles; the edge set is
+localCheckpoint()ed every round to truncate lineage so the plan doesn't
+grow across iterations.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "a",
-    b_col: str = "b",
-    max_iter: int = 15,
-    local_threshold: int = 1_000_000,
-) -> DataFrame:
-    """(a, b) undirected pairs -> (node, component) with component = min
-    node id reachable (ids compared with natural ordering of the column
-    type).
-
-    Adaptive execution: the verified alias/near-dup pair set is typically
-    orders of magnitude smaller than the corpus, so when it fits under
-    ``local_threshold`` pairs we collect once and run driver-side
-    union-find (identical result, zero iteration overhead); above the
-    threshold the distributed min-label loop runs. Pass
-    ``local_threshold=0`` to force the distributed path (tests do)."""
-    if local_threshold > 0:
-        # count-then-collect (a global limit over shuffled input hits
-        # CollectLimit's incremental-scan overhead, growing with partitions)
-        slim = pairs.select(F.col(a_col), F.col(b_col)).cache()
-        if slim.count() <= local_threshold:
-            a_type = pairs.schema[a_col].dataType.simpleString()
-            out = _local_components(pairs.sparkSession, slim.collect(), a_type)
-            slim.unpersist()
-            return out
-        slim.unpersist()
-
-    edges = (
-        pairs.select(F.col(a_col).alias("s"), F.col(b_col).alias("d"))
-        .union(pairs.select(F.col(b_col).alias("s"), F.col(a_col).alias("d")))
-        .dropDuplicates(["s", "d"])
-        .cache()
-    )
-
-    labels = (
-        edges.select(F.col("s").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-        .cache()
-    )
-
-    converged = False
-    for it in range(max_iter):
-        # neighbor-min labels via one join + one aggregate
-        neighbor_min = (
-            edges.join(labels, edges.d == labels.node)
-            .groupBy("s").agg(F.min("component").alias("n_min"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.s, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("n_min"), F.col("component")),
-                ).alias("component"),
-                (F.col("n_min") < F.col("component")).alias("changed"),
-            )
-        )
-        # eager localCheckpoint truncates lineage AND fully materializes, so
-        # unpersisting the previous round can't trigger recompute cascades
-        new_labels = new_labels.localCheckpoint(eager=True)
-        n_changed = new_labels.filter(F.col("changed")).limit(1).count()
-        labels.unpersist()
-        labels = new_labels.drop("changed")
-        if n_changed == 0:
-            converged = True
-            break
-
-    edges.unpersist()
-    if not converged:
-        # returning silently-unconverged labels would corrupt downstream
-        # canonical_norm_map / near-dup cluster assignments on long chains
-        raise RuntimeError(
-            f"connected_components: min-label propagation did not converge "
-            f"in max_iter={max_iter} rounds (graph diameter exceeds the "
-            f"cap); raise max_iter or use alternating_components()."
-        )
-    return labels
 
 
 def alternating_components(
@@ -109,20 +27,23 @@ def alternating_components(
     """(a, b) undirected pairs -> (node, component) via the alternating
     large-star/small-star algorithm (Kiveris et al., "Connected Components
     in MapReduce and Beyond", SoCC'14 — public algorithm), converging in
-    O(log^2 n) ROUNDS instead of min-label's O(diameter). Use this for
-    graphs that may contain long chains (boilerplate-anchor chains at web
-    scale); result is identical to ``connected_components``: component =
-    min reachable node id.
+    O(log^2 n) ROUNDS instead of min-label propagation's O(diameter):
+    component = min reachable node id (ids compared with the natural
+    ordering of the column type).
 
     Each round is two shuffles (a groupBy per star step); the edge set is
     localCheckpoint()ed per round to truncate lineage. Convergence is
     detected by an (edge-count, hash-sum) fingerprint — one cheap aggregate.
 
-    Same adaptive policy as ``connected_components``: pair sets under
-    ``local_threshold`` run driver-side union-find (identical result);
-    pass 0 to force the distributed loop (tests do).
+    Adaptive execution: the verified alias/near-dup pair set is
+    typically orders of magnitude smaller than the corpus, so when it
+    fits under ``local_threshold`` pairs it is collected once and
+    driver-side union-find runs (identical result, no iteration
+    overhead); pass 0 to force the distributed loop (tests do).
     """
     if local_threshold > 0:
+        # count-then-collect (a global limit over shuffled input hits
+        # CollectLimit's incremental-scan overhead, growing with partitions)
         slim = pairs.select(F.col(a_col), F.col(b_col)).cache()
         if slim.count() <= local_threshold:
             a_type = pairs.schema[a_col].dataType.simpleString()

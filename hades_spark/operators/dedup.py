@@ -124,10 +124,10 @@ def resolve_survivors(
     """
     from pyspark.sql import Column
 
-    from .components import connected_components
+    from .components import alternating_components
 
-    comp = connected_components(pairs, a_col, b_col,
-                                local_threshold=local_threshold)
+    comp = alternating_components(pairs, a_col, b_col,
+                                  local_threshold=local_threshold)
     labelled = (
         df.join(F.broadcast(comp.withColumnRenamed("node", id_col)),
                 id_col, "left")

@@ -396,18 +396,6 @@ def pages_df_distributed(spark: SparkSession, n_pages: int, seed: int = 42,
         gen_batch, schema=PAGES)
 
 
-def expected_triples(n_pages: int, seed: int = 42,
-                     vocab_size: int = 0) -> set[tuple[str, str, str]]:
-    """Ground-truth triple set (canonical display names) across the corpus.
-    Truth is drawn before any richness-dependent rng use, so it is
-    independent of richness; text computation is skipped."""
-    out: set[tuple[str, str, str]] = set()
-    for p in gen_pages(n_pages, seed, compute_text=False,
-                       vocab_size=vocab_size):
-        out.update(p.truth)
-    return out
-
-
 def expected_canonical_triples(
     n_pages: int, seed: int = 42, vocab_size: int = 0,
 ) -> set[tuple[str, str, str]]:

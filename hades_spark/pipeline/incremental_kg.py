@@ -438,15 +438,8 @@ def _append_batch_dir(df: DataFrame, state_dir: str, sub: str,
     return True
 
 
-def _append_raw_batch(spark: SparkSession, new_raw: DataFrame,
-                      state_dir: str, batch_id: str,
-                      absorbed: set | None = None) -> bool:
-    return _append_batch_dir(new_raw.select(*_RAW_COLS), state_dir,
-                             "raw", batch_id, absorbed=absorbed)
-
-
-def _append_crawl_ts(spark: SparkSession, pages: DataFrame,
-                     state_dir: str, batch_id: str, meta: dict) -> None:
+def _append_crawl_ts(pages: DataFrame, state_dir: str, batch_id: str,
+                     meta: dict) -> None:
     """Record the batch's per-url crawl timestamp in the ``crawl_ts``
     sidecar (one tiny row per url; max over in-batch duplicates). Fed by
     init/update/reingest; consulted only by ``incremental_reingest``'s
@@ -654,10 +647,10 @@ def _init_state_locked(spark: SparkSession, pages: DataFrame,
     for tmp in Path(state_dir, "raw").glob(".batch-*.tmp-*"):
         shutil.rmtree(tmp, ignore_errors=True)
     clock = StageClock()
-    appended = _append_raw_batch(spark, norm_triples(raw_triples(pages)),
-                                 state_dir, batch_id,
+    appended = _append_batch_dir(norm_triples(raw_triples(pages)),
+                                 state_dir, "raw", batch_id,
                                  absorbed=_absorbed_ids(meta, "raw"))
-    _append_crawl_ts(spark, pages, state_dir, batch_id, meta)
+    _append_crawl_ts(pages, state_dir, batch_id, meta)
     clock.mark("extract")
     batch_dir = Path(state_dir) / "raw" / f"batch={batch_id}"
     if not appended and batch_dir.exists():
@@ -933,10 +926,10 @@ def _incremental_update_locked(spark: SparkSession, new_pages: DataFrame,
     # persist the grown state (atomic batch append under the SAME id the
     # bucket append used; atomic swaps for pairs/cmap)
     if not already_appended:
-        _append_raw_batch(spark, new_raw, state_dir, cur_batch)
+        _append_batch_dir(new_raw, state_dir, "raw", cur_batch)
     # outside the guard: a crash between the raw append and this line
     # resumes with already_appended=True and must still record the ts
-    _append_crawl_ts(spark, new_pages, state_dir, cur_batch, st.meta)
+    _append_crawl_ts(new_pages, state_dir, cur_batch, st.meta)
     # ATOMIC swaps (write-tmp + rename), never a bare overwrite: a crash
     # mid-write must leave the OLD pairs/cmap readable — losing old-old
     # pairs would split components forever (touching-pair generation
@@ -1285,7 +1278,7 @@ def incremental_reingest(spark: SparkSession, pages: DataFrame,
             # safety: an own-batch ts in the store compares EQUAL, and the
             # stale filter is strictly-less-than, so a crash-and-rerun
             # still reaches the fingerprint guard and converges.
-            _append_crawl_ts(spark, pages, state_dir, batch_id, st.meta)
+            _append_crawl_ts(pages, state_dir, batch_id, st.meta)
         # the insert url set MATERIALIZES BEFORE the purge: the purge
         # swaps raw partition files, and a lazy plan over the pre-purge
         # read would fail FILE_NOT_EXIST when evaluated afterwards. Both

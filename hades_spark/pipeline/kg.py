@@ -19,6 +19,11 @@ Scale shape: the only shuffles are (1) the distinct-norm aggregation
 those distinct norms, (3) the broadcast-join of the canonical map back
 onto triples (map-side, no shuffle of the big side), and (4) the final
 per-pred dedup. Everything page-sized stays narrow.
+
+``run_kg_pipeline_staged`` runs the distributed chain with its inputs
+staged to parquet: raw, the alias buckets and the (a, b, band, bh)
+verified squash pairs, the incremental state's layout. So one DuckDB
+twin, ``kg_edges_oracle_sql``, recomputes the tail of both.
 """
 
 from __future__ import annotations
@@ -26,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.keys import edge_content_key_col
-from ..operators.canonicalize import normalize_surface_col
+from ..operators.canonicalize import ALIAS_LSH, normalize_surface_col
 from .corpus import pages_df
 
 
@@ -43,15 +48,15 @@ def norm_triples(raw: DataFrame) -> DataFrame:
     )
 
 
-def apply_canonical_map(raw: DataFrame, cmap: DataFrame,
-                        broadcast_map: bool = True) -> DataFrame:
+def apply_canonical_map(raw: DataFrame, cmap: DataFrame) -> DataFrame:
     """Raw normalized triples x (norm -> canonical_id) map -> canonical
     (subj, pred, obj) triples with content edge keys. THE single copy of
     the mapping block — shared by ``canonical_triples``, the staged
     oracle pipeline, incremental maintenance and the deploy path
     (``persist.materialize_kg``), so a semantics change lands everywhere
-    at once."""
-    c = F.broadcast(cmap) if broadcast_map else cmap
+    at once. The map is broadcast: it holds one row per distinct norm,
+    far fewer than the triples it is joined onto."""
+    c = F.broadcast(cmap)
     subj_map = c.select(F.col("norm").alias("subj_norm"),
                         F.col("canonical_id").alias("subj_id"))
     obj_map = c.select(F.col("norm").alias("obj_norm"),
@@ -77,7 +82,6 @@ def apply_canonical_map(raw: DataFrame, cmap: DataFrame,
 def canonical_triples(
     pages: DataFrame,
     threshold: float = 0.8,
-    broadcast_map: bool = True,
     caches: list | None = None,
     local_threshold: int = 20_000,
 ) -> DataFrame:
@@ -106,7 +110,7 @@ def canonical_triples(
                               local_threshold=local_threshold).cache()
     if caches is not None:
         caches.append(cmap)
-    return apply_canonical_map(raw, cmap, broadcast_map=broadcast_map)
+    return apply_canonical_map(raw, cmap)
 
 
 def distinct_edges(triples: DataFrame) -> DataFrame:
@@ -134,47 +138,42 @@ def run_kg_pipeline(spark, n_pages: int = 200, seed: int = 42,
 def run_kg_pipeline_staged(spark, n_pages: int = 150, seed: int = 42,
                            stage_dir: str | None = None,
                            threshold: float = 0.8) -> DataFrame:
-    """run_kg_pipeline, but staging the two post-UDF intermediates to
-    parquet so the driver's DuckDB oracle can recompute the ENTIRE
-    distributed tail (connected components via recursive CTE, canonical
-    join, edge aggregation + sha256 keys) from identical inputs:
+    """run_kg_pipeline's distributed chain, staging its inputs to parquet
+    so its DuckDB twin (``kg_edges_oracle_sql``) can recompute
+    the ENTIRE tail after the extraction UDF from identical inputs. The
+    stage dir has the incremental KG state's layout:
 
-      <stage_dir>/raw/    (url, pred, confidence, subj_norm, obj_norm)
-      <stage_dir>/pairs/  (a, b) verified alias pairs
+      <stage_dir>/raw/      (url, pred, confidence, subj_norm, obj_norm)
+      <stage_dir>/buckets/  (squash, band, bh) alias LSH bucket rows
+      <stage_dir>/pairs/    (a, b, band, bh) verified squash pairs
 
-    The Python-regex extraction itself stays covered by the fuzz/corpus
-    equivalence tests (it cannot be expressed in SQL); everything AFTER the
-    UDF boundary is hash-verified. The Spark side reads the staged files
-    back, so oracle and query aggregate byte-identical inputs.
+    The alias decision is ``canonical_norm_map``'s distributed branch:
+    ``norm_vocab`` -> ``alias_buckets`` -> ``cap_and_self_join`` ->
+    ``verified_alias_pairs`` -> ``alias_labels``. The Python-regex
+    extraction itself stays covered by the fuzz/corpus equivalence tests
+    (it cannot be expressed in SQL). The Spark side reads each staged
+    table back, so oracle and query consume byte-identical inputs.
     """
     from ..functions.triples import raw_triples
-    from ..operators.canonicalize import (ALIAS_LSH, MAX_ALIAS_SQUASH_LEN,
-                                          norm_vocab)
-    from ..operators.components import alternating_components
-    from ..operators.lsh import char_shingles, verified_pairs
+    from ..operators.canonicalize import (alias_buckets, alias_labels,
+                                          norm_vocab, verified_alias_pairs)
+    from ..operators.lsh import cap_and_self_join
 
     if stage_dir is None:
         stage_dir = default_kg_stage_dir()
+
+    def staged(df: DataFrame, table: str) -> DataFrame:
+        df.write.mode("overwrite").parquet(f"{stage_dir}/{table}")
+        return spark.read.parquet(f"{stage_dir}/{table}")
+
     pages = pages_df(spark, n_pages, seed=seed, with_text=False)
-    raw = norm_triples(raw_triples(pages))
-    raw.write.mode("overwrite").parquet(f"{stage_dir}/raw")
-    raw = spark.read.parquet(f"{stage_dir}/raw")
-
-    # norm-level pairs (the oracle's reference shape), under the alias
-    # decision's LSH config
+    raw = staged(norm_triples(raw_triples(pages)), "raw")
     vocab = norm_vocab(raw)
-    pairs = verified_pairs(
-        vocab.filter(F.length("squash") <= MAX_ALIAS_SQUASH_LEN),
-        "norm", char_shingles(F.col("squash"), 3),
-        threshold=threshold, metric="containment", **ALIAS_LSH,
-    ).select("a", "b")
-    pairs.write.mode("overwrite").parquet(f"{stage_dir}/pairs")
-    pairs = spark.read.parquet(f"{stage_dir}/pairs")
-
-    comp = alternating_components(pairs, "a", "b")
-    cmap = comp.select(F.col("node").alias("norm"),
-                       F.col("component").alias("canonical_id"))
-    return distinct_edges(apply_canonical_map(raw, cmap))
+    buckets = staged(alias_buckets(vocab), "buckets")
+    cand = cap_and_self_join(buckets.withColumnRenamed("squash", "_id"),
+                             ALIAS_LSH["max_bucket_size"], keep_bucket=True)
+    pairs = staged(verified_alias_pairs(cand, threshold), "pairs")
+    return distinct_edges(apply_canonical_map(raw, alias_labels(vocab, pairs)))
 
 
 def default_kg_stage_dir() -> str:
@@ -184,33 +183,33 @@ def default_kg_stage_dir() -> str:
     return f"{root}/hades_kg_oracle_stage"
 
 
-def kg_edges_oracle_sql(stage_dir: str | None = None,
-                        bucket_cap: int | None = None) -> str:
-    """DuckDB twin of run_kg_pipeline_staged's distributed tail: recursive-
-    CTE transitive closure -> min-label components over the staged verified
-    pairs, canonical join onto the staged raw triples, sha256 edge keys and
-    the distinct-edge aggregation.
+def kg_edges_oracle_sql(stage_dir: str | None = None) -> str:
+    """DuckDB twin of the squash-level edge tail, over a stage dir of
+    ``run_kg_pipeline_staged`` or an incremental KG state dir (the same
+    ``raw``/``buckets``/``pairs`` tables; a state partitions raw and
+    buckets into ``batch=<id>`` dirs, hence the ``**`` globs).
 
-    ``bucket_cap`` switches to the incremental-KG state shape, which is
-    SQUASH-level (see incremental_kg.py): pairs are provenance rows
-    (a, b, band, bh) of squashes, filtered by LIVENESS — a pair counts
-    only while >= 1 of its generating buckets still holds <= cap distinct
-    squashes in the state's bucket store — then components run over
-    squashes, every norm joins its squash's component (squash-identical
-    norms merge with no pair at all), and the canonical id is the
-    smallest NORM of the component. This re-derives both the rebuild's
-    cap semantics and its label semantics independently, so the i2 hash
-    check verifies the liveness + relabel machinery too."""
+    Pairs are provenance rows (a, b, band, bh) of squashes, filtered by
+    LIVENESS: a pair counts only while >= 1 of its generating buckets
+    still holds <= ``ALIAS_LSH["max_bucket_size"]`` (read at call time)
+    distinct squashes in the bucket store. A recursive-CTE transitive
+    closure then labels squash components with their min squash, every
+    norm joins its squash's component (squash-identical norms merge with
+    no pair at all), and the canonical id is the smallest NORM of the
+    component; canonical join onto raw, sha256 edge keys, distinct-edge
+    aggregation. This re-derives the cap and label semantics
+    independently, so the hash checks verify the liveness + relabel
+    machinery too."""
     if stage_dir is None:
         stage_dir = default_kg_stage_dir()
-    if bucket_cap is not None:
-        return f"""
+    bucket_cap = ALIAS_LSH["max_bucket_size"]
+    return f"""
 WITH RECURSIVE pairs AS (
   SELECT DISTINCT p.a, p.b
   FROM read_parquet('{stage_dir}/pairs/*.parquet') p
   JOIN (
     SELECT band, bh
-    FROM read_parquet('{stage_dir}/buckets/*/*.parquet')
+    FROM read_parquet('{stage_dir}/buckets/**/*.parquet')
     GROUP BY band, bh HAVING count(*) <= {bucket_cap}
   ) lv USING (band, bh)
 ),
@@ -258,44 +257,6 @@ triples AS (
   FROM raw r
   LEFT JOIN cmap cs ON cs.norm = r.subj_norm
   LEFT JOIN cmap co ON co.norm = r.obj_norm
-)
-SELECT subj, pred, obj,
-       sha256(subj || '|' || obj || '|' || pred) AS edge_key,
-       max(confidence) AS confidence,
-       min(url) AS url,
-       CAST(count(*) AS BIGINT) AS support
-FROM triples
-GROUP BY 1, 2, 3, 4
-"""
-    return f"""
-WITH RECURSIVE pairs AS (
-  SELECT a, b FROM read_parquet('{stage_dir}/pairs/*.parquet')
-),
-edges AS (
-  SELECT a AS s, b AS d FROM pairs
-  UNION
-  SELECT b AS s, a AS d FROM pairs
-),
-walk AS (
-  SELECT s AS node, d AS reach FROM edges
-  UNION
-  SELECT w.node, e.d FROM walk w JOIN edges e ON e.s = w.reach
-),
-comp AS (
-  SELECT node, least(node, min(reach)) AS component FROM walk GROUP BY node
-),
-raw AS (
-  SELECT url, pred, confidence, subj_norm, obj_norm
-  FROM read_parquet('{stage_dir}/raw/**/*.parquet')
-),
-triples AS (
-  SELECT coalesce(cs.component, r.subj_norm) AS subj,
-         r.pred,
-         coalesce(co.component, r.obj_norm) AS obj,
-         r.url, r.confidence
-  FROM raw r
-  LEFT JOIN comp cs ON cs.node = r.subj_norm
-  LEFT JOIN comp co ON co.node = r.obj_norm
 )
 SELECT subj, pred, obj,
        sha256(subj || '|' || obj || '|' || pred) AS edge_key,

@@ -847,23 +847,21 @@ def kg_mentions_q(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.count("*").cast("bigint").alias("cnt")).orderBy("kind")
 
 
-from .operators.canonicalize import ALIAS_LSH  # noqa: E402
 from .pipeline.kg import kg_edges_oracle_sql as _kg_oracle  # noqa: E402
 
 # frozen at import so the Spark writer and the oracle reader always agree,
 # even if HADES_ORACLE_STAGE_ROOT changes later in the process
 _KG_STAGE = f"{STAGE_ROOT}/hades_kg_oracle_stage"
-# the incremental states' oracles re-derive bucket liveness at this cap
-_BUCKET_CAP = ALIAS_LSH["max_bucket_size"]
 
 
 @register("kg_canonical_edges", _kg_oracle(_KG_STAGE))
 def kg_edges_q(spark: SparkSession, sf: str) -> DataFrame:
     # staged variant: writes the post-UDF intermediates (raw normalized
-    # triples, verified alias pairs) to parquet so the DuckDB oracle can
-    # recompute the whole distributed tail — recursive-CTE connected
-    # components, canonical join, sha256 edge keys, distinct-edge agg —
-    # from byte-identical inputs. Flagship KG correctness is hash-checked.
+    # triples, alias buckets, verified squash pairs) to parquet so the
+    # DuckDB oracle can recompute the whole distributed tail — bucket
+    # liveness, recursive-CTE connected components, min-norm relabel,
+    # canonical join, sha256 edge keys, distinct-edge agg — from
+    # byte-identical inputs. Flagship KG correctness is hash-checked.
     from .pipeline.kg import run_kg_pipeline_staged
 
     return run_kg_pipeline_staged(spark, n_pages=150, seed=42,
@@ -873,7 +871,7 @@ def kg_edges_q(spark: SparkSession, sf: str) -> DataFrame:
 _I2_STATE = f"{STAGE_ROOT}/hades_i2_kg_state"
 
 
-@register("i2_incremental_kg", _kg_oracle(_I2_STATE, bucket_cap=_BUCKET_CAP))
+@register("i2_incremental_kg", _kg_oracle(_I2_STATE))
 def i2_incremental(spark: SparkSession, sf: str) -> DataFrame:
     # Incremental KG maintenance (stage-2): build state from the first 120
     # corpus pages, fold pages 120..170 in via incremental_update (bucket-
@@ -2268,8 +2266,7 @@ def q5(spark: SparkSession, sf: str) -> DataFrame:
 _S8_STATE = f"{STAGE_ROOT}/hades_s8_kg_delete_state"
 
 
-@register("s8_incremental_delete",
-          _kg_oracle(_S8_STATE, bucket_cap=_BUCKET_CAP))
+@register("s8_incremental_delete", _kg_oracle(_S8_STATE))
 def s8_incremental_delete_q(spark: SparkSession, sf: str) -> DataFrame:
     # Per-doc purge from the standing KG state (S8, stateful edition):
     # build state from 170 corpus pages, fold an update in, then DELETE
@@ -2303,8 +2300,7 @@ def s8_incremental_delete_q(spark: SparkSession, sf: str) -> DataFrame:
 _S9_STATE = f"{STAGE_ROOT}/hades_s9_kg_reingest_state"
 
 
-@register("s9_incremental_reingest",
-          _kg_oracle(_S9_STATE, bucket_cap=_BUCKET_CAP))
+@register("s9_incremental_reingest", _kg_oracle(_S9_STATE))
 def s9_incremental_reingest_q(spark: SparkSession, sf: str) -> DataFrame:
     # Stale-edge cleanup on re-crawl (S9, stateful edition — the
     # reference's delete-on-reingest contract): build state from 170

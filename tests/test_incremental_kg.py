@@ -136,13 +136,13 @@ class TestExactlyOnceResume:
         cmap/edges caught up: re-running the update with the same
         batch_id must converge to the full-rebuild result, counting the
         batch exactly once."""
-        from hades_spark.pipeline.incremental_kg import _append_raw_batch
+        from hades_spark.pipeline.incremental_kg import _append_batch_dir
 
         inc = str(tmp_path / "crash")
         full = str(tmp_path / "crashfull")
         init_state(spark, _pages(spark, BATCH1), inc)
         # the crash: batch appended to the raw store, nothing else updated
-        _append_raw_batch(spark, _norm_raw(_pages(spark, BATCH2)), inc, "b2")
+        _append_batch_dir(_norm_raw(_pages(spark, BATCH2)), inc, "raw", "b2")
         incremental_update(spark, _pages(spark, BATCH2), inc,
                            batch_id="b2")
         init_state(spark, _pages(spark, BATCH1 + BATCH2), full)
@@ -177,11 +177,11 @@ class TestAdviceR4:
         batch (incomplete state), then an id-less update with DIFFERENT
         pages arrives — its pages must be counted, not silently no-op'd
         under a colliding fixed 'init' id."""
-        from hades_spark.pipeline.incremental_kg import _append_raw_batch
+        from hades_spark.pipeline.incremental_kg import _append_batch_dir
 
         inc = str(tmp_path / "initcrash")
         # a crashed init: default-id batch committed, nothing else
-        _append_raw_batch(spark, _norm_raw(_pages(spark, BATCH1)), inc,
+        _append_batch_dir(_norm_raw(_pages(spark, BATCH1)), inc, "raw",
                           "init")
         stats = incremental_update(spark, _pages(spark, BATCH2), inc)
         assert stats["initialized"]
@@ -193,7 +193,7 @@ class TestAdviceR4:
         """ADVICE r3: all-numeric caller ids make Hive infer the batch
         partition column as int; the resume/store filters must compare as
         string, not NULL-out and drop every stored row."""
-        from hades_spark.pipeline.incremental_kg import _append_raw_batch
+        from hades_spark.pipeline.incremental_kg import _append_batch_dir
 
         inc = str(tmp_path / "numeric")
         full = str(tmp_path / "numfull")
@@ -201,7 +201,7 @@ class TestAdviceR4:
         # crash-resume shape: batch 200 appended (int-inferrable id set
         # {100, 200}) but NOT completed — the resume path must exclude it
         # from old_raw via a STRING comparison
-        _append_raw_batch(spark, _norm_raw(_pages(spark, BATCH2)), inc,
+        _append_batch_dir(_norm_raw(_pages(spark, BATCH2)), inc, "raw",
                           "200")
         incremental_update(spark, _pages(spark, BATCH2), inc,
                            batch_id="200")

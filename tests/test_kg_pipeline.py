@@ -1,5 +1,6 @@
 """End-to-end KG pipeline tests: extraction, canonicalization, P/R."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from hades_spark.functions.triples import extract_triples
@@ -141,18 +142,6 @@ class TestAdaptiveExecution:
     """The local (driver-side) fast paths must agree with the distributed
     paths exactly."""
 
-    def test_cc_local_vs_distributed(self, spark):
-        pairs = spark.createDataFrame(
-            [("a", "b"), ("b", "c"), ("x", "y"), ("p", "q"), ("q", "a")],
-            "a string, b string")
-        from hades_spark.operators.components import connected_components
-
-        local = {(r["node"], r["component"])
-                 for r in connected_components(pairs).collect()}
-        dist = {(r["node"], r["component"])
-                for r in connected_components(pairs, local_threshold=0).collect()}
-        assert local == dist
-
     @staticmethod
     def _canonical_by_surface(spark, surfaces, **kw):
         """canonical_norm_map over the normalize_surface'd inputs, read
@@ -208,6 +197,64 @@ class TestAdaptiveExecution:
         assert by[blob] == by[blob_joined]
         # distinct giants stay apart
         assert by[blob + " tail"] != by[blob]
+
+
+class TestKgOracleSql:
+    """``kg_edges_oracle_sql`` in DuckDB re-derives the edges Spark wrote,
+    over both layouts it reads: a staged build and an incremental state."""
+
+    @staticmethod
+    def _page(i, sentence):
+        import datetime as dt
+
+        html = f"<html><body><p>{sentence}</p></body></html>".encode()
+        return (f"https://t.example/{i}.html",
+                dt.datetime(2025, 1, 1, tzinfo=dt.timezone.utc), html, None,
+                "en")
+
+    @pytest.mark.parametrize("layout", ["staged", "state"])
+    def test_oracle_sql_matches_spark_edges(self, spark, tmp_path, layout):
+        import duckdb
+
+        from hades_spark.pipeline.kg import (kg_edges_oracle_sql,
+                                             run_kg_pipeline_staged)
+        from tools.check_oracle import value_hash
+
+        cols = ["subj", "pred", "obj", "edge_key", "confidence", "url",
+                "support"]
+        d = str(tmp_path / layout)
+        if layout == "staged":
+            edges = run_kg_pipeline_staged(spark, n_pages=60, seed=42,
+                                           stage_dir=d).select(*cols)
+            build = distinct_edges(canonical_triples(
+                pages_df(spark, 60, seed=42, with_text=False),
+                local_threshold=0)).select(*cols)
+            assert {tuple(r) for r in edges.collect()} == \
+                {tuple(r) for r in build.collect()}
+        else:
+            from hades_spark.pipeline.incremental_kg import (
+                incremental_update, init_state)
+            from hades_spark.schemas import PAGES
+
+            # 'alpha beta' and 'alphabeta' are squash-identical; the
+            # update's AlphaBetaGamma pairs with both sides
+            b1 = [(0, "Alpha Beta uses Zeta."), (1, "BetaGamma stores Qux."),
+                  (2, "AlphaBeta links BetaGamma.")]
+            b2 = [(10, "AlphaBetaGamma embeds Zeta."),
+                  (11, "alphabeta uses Zeta.")]
+            init_state(spark, spark.createDataFrame(
+                [self._page(i, s) for i, s in b1], PAGES), d)
+            incremental_update(spark, spark.createDataFrame(
+                [self._page(i, s) for i, s in b2], PAGES), d)
+            edges = spark.read.parquet(f"{d}/edges").select(*cols)
+            subjs = {r["subj"] for r in edges.collect()}
+            assert "alpha beta" in subjs and "alphabeta" not in subjs
+        rows = [tuple(r) for r in edges.collect()]
+        res = duckdb.connect().execute(kg_edges_oracle_sql(d))
+        duck_cols = [c[0] for c in res.description]
+        duck_rows = res.fetchall()
+        assert len(duck_rows) == len(rows) > 0
+        assert value_hash(duck_cols, duck_rows) == value_hash(cols, rows)
 
 
 class TestRealisticPages:
